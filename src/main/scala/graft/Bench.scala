@@ -1,7 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-import graft.core.GraftSession
+import graft.Measure.{f3, jsonString => js}
 
 /** Benchmark main. Emits ONE JSON line:
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}
@@ -9,8 +8,9 @@ import graft.core.GraftSession
   * Method:
   *  - same GraftSession.tuned configuration correctness runs under;
   *  - one warm-up pass (JVM/codegen/parquet-footer caches) before timing;
-  *  - action = write.format("noop") so every projected column is actually
-  *    materialized (count() lets Catalyst prune the work away);
+  *  - action = the noop sink (Measure.materialize) so every projected
+  *    column is actually computed (count() lets Catalyst prune the work
+  *    away);
   *  - per-query time = MEDIAN of 3 timed runs — robust against the
   *    one-off stalls a shared box injects in either direction, unlike
   *    min (flatters sustained contention) or mean (one outlier owns it);
@@ -25,14 +25,14 @@ import graft.core.GraftSession
   *    regressions;
   *  - a failing query is reported in "errors" with elapsed -1, never
   *    silently folded into the total;
-  *  - PER-QUERY contention evidence: each timed window diffs
-  *    /proc/stat whole-box busy jiffies against /proc/self CPU — the
+  *  - PER-QUERY contention evidence: each timed window (Measure.timed)
+  *    diffs whole-box busy jiffies against this process's own CPU — the
   *    foreign-cores figure for queries where it exceeded 0.5 lands in
   *    "ext_cpu_cores", and queries whose 3 walls spread >2x land in
   *    "unstable", so one noisy median names itself instead of reading
   *    as a plan regression (the run-level sentinel brackets the run
   *    and cannot attribute a mid-run blip to a query). The same window
-  *    also diffs /proc/stat's steal column into "steal_cores": the
+  *    also diffs the box's steal jiffies into "steal_cores": the
   *    share of the foreign figure the HYPERVISOR withheld (burst steal
   *    from co-tenant guests inflates the latency-sensitive st/g
   *    families 1.5-2x while the three 1-second sentinel windows can
@@ -89,87 +89,36 @@ object Bench {
     // SPARK_GRAFT_BENCH_SERIES=session — cross-round comparisons only
     // ever read a sidecar of their own series (see prevQueries)
     val benchSeries = sys.env.getOrElse("SPARK_GRAFT_BENCH_SERIES", "driver")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftSession.tuned(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-bench"),
-      shufflePartitions = cpus
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (spark, cpus) = Measure.driverSession("graft-bench")
 
-    def runOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-                dir: String = sfDir): Unit =
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
+    def runOnce(name: String, dir: String = sfDir): Unit =
+      Measure.materialize(SparkEntry.queries(name)(spark, dir))
 
     val names = SparkEntry.queries.keys.toSeq.sorted
     // Warm-up: one untimed pass over every query (also JIT-warms the
     // sentinel loop before its first timed use).
     spinSentinel()
     names.foreach { n =>
-      try runOnce(SparkEntry.queries(n)) catch { case _: Throwable => () }
+      try runOnce(n) catch { case _: Throwable => () }
     }
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // Whole-box vs own-process CPU jiffies, so each query's timed
-    // window carries its own contention evidence: foreign busy CPU
-    // during the window = (Δ box busy) − (Δ self). The round-8 g5
-    // artifact — one query's median 3× its min inside a
-    // "contended":false run — is exactly what a run-level sentinel
-    // bracket cannot see and this per-query delta can.
-    def procJiffies(): (Long, Long, Long) = try {
-      val statLine = {
-        val s = scala.io.Source.fromFile("/proc/stat")
-        try s.getLines().next() finally s.close()
-      }
-      val f = statLine.split("\\s+").drop(1).take(8).map(_.toLong)
-      val box = f.sum - f(3) - f(4) // minus idle, iowait: busy jiffies
-      val selfStat = scala.io.Source.fromFile("/proc/self/stat")
-      // fields 14-17 (1-based utime, stime, cutime, cstime) follow the
-      // parenthesised comm field; split after the last ')' to survive
-      // spaces in comm. cutime/cstime (reaped children) matter: mj3's
-      // pipe stage spawns awk processes whose CPU is genuinely OURS but
-      // lives outside utime/stime — without them the window reads its
-      // own children as a foreign core and mj3 burned its 3 contention
-      // retries every run on self-caused "contention".
-      val self = try {
-        val s = selfStat.getLines().next()
-        val rest = s.substring(s.lastIndexOf(')') + 2).split(" ")
-        rest(11).toLong + rest(12).toLong + rest(13).toLong + rest(14).toLong
-      } finally selfStat.close()
-      (box, self, f(7))
-    } catch { case _: Throwable => (0L, 0L, 0L) }
-
-    /** (wall sec, foreign busy CPU cores averaged over the window,
-      * hypervisor-steal cores averaged over the window). Steal is a
-      * SUBSET of foreign: /proc/stat's steal column counts jiffies the
-      * host withheld from this guest entirely. Splitting it out is what
-      * distinguishes "a co-tenant process on this box is busy" (fix: find
-      * and stop it) from "the hypervisor's other guests took the cores"
-      * (nothing on this box can fix it; the round-11 session measured
-      * burst steal of 2-5 cores inflating exactly the latency-sensitive
-      * st/g families while three 1-second sentinel windows all read
-      * idle).
-      */
-    def timeOnce(name: String): (Double, Double, Double) = {
+    // Each query's timed window carries its own contention evidence
+    // (Measure.timed): the round-8 g5 artifact — one query's median 3×
+    // its min inside a "contended":false run — is exactly what a
+    // run-level sentinel bracket cannot see and this per-query delta
+    // can. A failed run records its error and yields wall -1.
+    val failed = Measure.Window(-1.0, 0.0, 0.0)
+    def timeOnce(name: String): Measure.Window = {
       // Operators that persist() intermediates (d3, s3) register them in
       // the CacheManager, which matches by logical plan — a later run of
       // the same query would silently read the previous run's cache.
       // Clear so every timed run pays its own materialization and only
       // WITHIN-run reuse (the actual plan property) is measured.
       spark.catalog.clearCache()
-      val (box0, self0, steal0) = procJiffies()
-      val t0 = System.nanoTime()
-      try {
-        runOnce(SparkEntry.queries(name))
-        val wall = (System.nanoTime() - t0) / 1e9
-        val (box1, self1, steal1) = procJiffies()
-        // USER_HZ = 100 on linux; foreign cores = foreign cpu-sec / wall
-        val foreign = ((box1 - box0) - (self1 - self0)) / 100.0
-        val steal = (steal1 - steal0) / 100.0
-        (wall,
-          if (wall > 0) math.max(foreign, 0.0) / wall else 0.0,
-          if (wall > 0) math.max(steal, 0.0) / wall else 0.0)
-      } catch { case e: Throwable =>
+      try Measure.timed(runOnce(name))
+      catch { case e: Throwable =>
         errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-        (-1.0, 0.0, 0.0)
+        failed
       }
     }
     def median3(a: Double, b: Double, c: Double): Double =
@@ -180,14 +129,14 @@ object Bench {
     val pass1 = names.map(n => n -> timeOnce(n)).toMap
     sentinels += spinSentinel()
     val pass2 = names.map(n =>
-      n -> (if (pass1(n)._1 >= 0) timeOnce(n) else (-1.0, 0.0, 0.0))).toMap
+      n -> (if (pass1(n).wall >= 0) timeOnce(n) else failed)).toMap
     val pass3 = names.map(n =>
-      n -> (if (pass2(n)._1 >= 0) timeOnce(n) else (-1.0, 0.0, 0.0))).toMap
+      n -> (if (pass2(n).wall >= 0) timeOnce(n) else failed)).toMap
     sentinels += spinSentinel()
     val samples = scala.collection.mutable.LinkedHashMap(
       names.map(n => n ->
         scala.collection.mutable.ArrayBuffer(pass1(n), pass2(n), pass3(n))): _*)
-    def allOk(n: String) = samples(n).forall(_._1 >= 0)
+    def allOk(n: String) = samples(n).forall(_.wall >= 0)
     // CONTENTION RETRY: a query whose EVERY timed window saw >= 1
     // foreign busy core has no clean measurement — its median is the
     // box's weather, not the plan (round-10 driver record: st family
@@ -207,8 +156,8 @@ object Bench {
     val RetryForeignCores = 1.0
     val RetryStealCores = 0.5
     def needsRetry(n: String): Boolean =
-      samples(n).map(_._2).min >= RetryForeignCores ||
-        samples(n).map(_._3).min >= RetryStealCores
+      samples(n).map(_.foreignCores).min >= RetryForeignCores ||
+        samples(n).map(_.stealCores).min >= RetryStealCores
     val retried = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     var retryBudget = 45
     names.foreach { n =>
@@ -219,7 +168,7 @@ object Bench {
         val extra = timeOnce(n)
         tries += 1; retryBudget -= 1
         retried(n) = tries
-        if (extra._1 >= 0) samples(n) += extra
+        if (extra.wall >= 0) samples(n) += extra
         else {
           // a FAILED retry must not poison a query that already has 3
           // valid timed windows: retries fire exactly when the box is
@@ -247,7 +196,7 @@ object Bench {
       // failure's (the timed passes' message is the one that matters)
       if (errors.contains(n)) n -> -1.0
       else {
-        val w = timeOnce(n)._1
+        val w = timeOnce(n).wall
         if (w < 0) errors.remove(n)
         n -> w
       }
@@ -256,8 +205,8 @@ object Bench {
     // carry the reported stats; extra contended windows influence
     // nothing once a cleaner one exists
     def chosen(n: String) =
-      samples(n).sortBy(s => (s._2, s._1)).take(3)
-    def walls(n: String) = chosen(n).map(_._1)
+      samples(n).sortBy(s => (s.foreignCores, s.wall)).take(3)
+    def walls(n: String) = chosen(n).map(_.wall)
     val results = names.map { n =>
       n -> (if (allOk(n)) walls(n).sorted.apply(1) else -1.0)
     }
@@ -268,19 +217,19 @@ object Bench {
     // relative to rounds with fixed 3 passes, breaking the
     // apples-to-apples cross-round series this field exists for
     val mins = names.map { n =>
-      n -> (if (allOk(n)) chosen(n).map(_._1).min else -1.0)
+      n -> (if (allOk(n)) walls(n).min else -1.0)
     }
     // Per-query self-identification: max foreign busy cores observed
     // over the reported windows (ext_cpu), and queries whose wall
     // spread exceeds 2x (unstable) — a noisy median names itself
     // instead of reading as a plan regression.
     val extCpu = names.map { n =>
-      n -> chosen(n).map(_._2).max
+      n -> chosen(n).map(_.foreignCores).max
     }
     // hypervisor steal over the same reported windows: the share of
     // ext_cpu nothing on this box caused (see timeOnce)
     val stealCpu = names.map { n =>
-      n -> chosen(n).map(_._3).max
+      n -> chosen(n).map(_.stealCores).max
     }
     val unstable = names.filter(n =>
       allOk(n) && walls(n).min > 0 && walls(n).max > 2 * walls(n).min)
@@ -309,34 +258,19 @@ object Bench {
     val sf1Walls: Seq[(String, (Double, Double))] =
       if (!new java.io.File(s"$sf1Dir/lineitem.parquet").exists()) Seq.empty
       else names
-        .filter(n => samples(n).forall(_._1 >= 0))
+        .filter(allOk)
         .sortBy(n => -walls(n).sorted.apply(1))
         .take(10)
         .map { n =>
+          // untimed JVM-state hygiene before each pass (Measure.settle):
+          // the catalog grind's leftover checkpoint blocks inflated
+          // r15's smoke up to 10x
           def once(): Double = {
-            spark.catalog.clearCache()
-            val t0 = System.nanoTime()
-            try {
-              runOnce(SparkEntry.queries(n), sf1Dir)
-              (System.nanoTime() - t0) / 1e9
-            } catch { case _: Throwable => -1.0 }
+            Measure.settle(spark)
+            try Measure.timed(runOnce(n, sf1Dir)).wall
+            catch { case _: Throwable => -1.0 }
           }
-          // JVM-state hygiene (round-15 lesson): the catalog grind
-          // leaves hundreds of localCheckpoint'ed round RDDs whose
-          // blocks the ContextCleaner only retires after a GC — left
-          // in place they drove g4's sf1 serve pass to 66 s in a JVM
-          // where a fresh run takes 7 s (VERDICT r15). clearCache
-          // drops the cache manager's entries; the explicit GC (plus a
-          // short drain window for the cleaner's async queue) releases
-          // the checkpoint blocks. Untimed — runs before t0.
-          def hygiene(): Unit = {
-            spark.catalog.clearCache()
-            System.gc()
-            Thread.sleep(250)
-          }
-          hygiene()
           val build = once()
-          hygiene()
           val serve = if (build >= 0) once() else -1.0
           n -> (build, serve)
         }
@@ -370,17 +304,16 @@ object Bench {
         }
         def once(): Double = {
           spark.catalog.clearCache()
-          val t0 = System.nanoTime()
-          val ballots = spark.read.textFile(bdir)
-          val p1 = graft.mapreduce.MapleJuiceJob.run(ballots,
-            graft.mapreduce.Workloads.CondorcetMaple1,
-            graft.mapreduce.Workloads.CondorcetJuice1, cpus)
-          import spark.implicits._
-          graft.mapreduce.MapleJuiceJob.run(p1.map(_._1),
-            graft.mapreduce.Workloads.CondorcetMaple2,
-            new graft.mapreduce.Workloads.CondorcetJuice2Compat(10), 1)
-            .write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
+          Measure.timed {
+            val ballots = spark.read.textFile(bdir)
+            val p1 = graft.mapreduce.MapleJuiceJob.run(ballots,
+              graft.mapreduce.Workloads.CondorcetMaple1,
+              graft.mapreduce.Workloads.CondorcetJuice1, cpus)
+            import spark.implicits._
+            Measure.materialize(graft.mapreduce.MapleJuiceJob.run(p1.map(_._1),
+              graft.mapreduce.Workloads.CondorcetMaple2,
+              new graft.mapreduce.Workloads.CondorcetJuice2Compat(10), 1))
+          }.wall
         }
         once() // warm-up: cold text footers + flatMap JIT, untimed
         val w = Seq(once(), once(), once()).sorted
@@ -389,19 +322,9 @@ object Bench {
         System.err.println(s"[bench] p3_136mb skipped: ${e.getMessage}")
         None
       }
-    def js(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
-    // 3-decimal times keep the full 138-query line inside the
-    // driver's bounded stdout-tail capture (full doubles overflowed
+    // 3-decimal times (Measure.f3) keep the full 138-query line inside
+    // the driver's bounded stdout-tail capture (full doubles overflowed
     // it two rounds running and left BENCH_r*.json unparseable).
-    // Locale.ROOT: the f"" interpolator honors the JVM default locale,
-    // and a comma-decimal locale (de_DE, fr_FR, ...) would render
-    // 0,123 — corrupting every numeric field of otherwise-valid JSON.
-    def f3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val qs = results.map { case (k, v) => s"${js(k)}:${f3(v)}" }.mkString("{", ",", "}")
     val qsMin = mins.map { case (k, v) => s"${js(k)}:${f3(v)}" }.mkString("{", ",", "}")
     val extJson = extCpu.collect { case (k, v) if v >= 0.5 => s"${js(k)}:${f3(v)}" }
@@ -438,7 +361,7 @@ object Bench {
     // next round's differ) can gate on this field without
     // cross-referencing sentinel prose.
     val stealRows = names.filter(n =>
-      allOk(n) && chosen(n).map(_._3).min >= 0.5)
+      allOk(n) && chosen(n).map(_.stealCores).min >= 0.5)
     val weatherVerdict =
       if (contended || stealRows.size > names.size / 20) "weather_rejected"
       else "clean"

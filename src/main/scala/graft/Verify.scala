@@ -2,13 +2,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
-import graft.core.GraftSession
+import graft.Measure.jsonString
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
-  * Runs under GraftSession.tuned so the verified configuration (AQE, UTC,
-  * ansi=false, nanosAsLong) is the same one Bench and the test suites use.
+  * Runs under GraftSession.tuned (Measure.driverSession) so the verified
+  * configuration (AQE, UTC, ansi=false, nanosAsLong) is the same one
+  * Bench and the test suites use.
   */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -22,17 +23,11 @@ object Verify {
       val unknown = f -- SparkEntry.queries.keySet
       require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftSession.tuned(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-verify"),
-      shufflePartitions = cpus
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (spark, _) = Measure.driverSession("graft-verify")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
+    SparkEntry.queries.keys.foreach { name =>
       if (only.forall(_.contains(name))) {
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
+        try dump(spark, sfDir, outDir, name)
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
@@ -41,21 +36,25 @@ object Verify {
         spark.catalog.clearCache()
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeOracleSql(outDir, _ => true)
     spark.stop()
+  }
+
+  /** One query's result as a single parquet file under `outDir/name`. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+           name: String): Unit =
+    SparkEntry.queries(name)(spark, sfDir).coalesce(1).write
+      .mode("overwrite").parquet(s"$outDir/$name")
+
+  /** `outDir/oracle_sql.json`: the oracle SQL of every kept query. The
+    * escaping covers every control character — one bad character would
+    * make the driver's json.load fail and silently zero the round's
+    * correctness.
+    */
+  def writeOracleSql(outDir: String, keep: String => Boolean): Unit = {
+    val json = SparkEntry.oracleSql.collect {
+      case (k, v) if keep(k) => s"${jsonString(k)}: ${jsonString(v)}"
+    }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
   }
 }

@@ -215,17 +215,6 @@ object Bpe {
     merges.result()
   }
 
-  /** [[learnMergeBatchList]] as a DataFrame (iter, pair, freq, round). */
-  def learnMergesBatched(docs: DataFrame, textCol: String, nMerges: Int,
-                         batchSize: Int = 32): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    learnMergeBatchList(docs, textCol, nMerges, batchSize)
-      .toDF("iter", "pair", "freq", "round")
-      .select(col("iter").cast("long").as("iter"), col("pair"),
-        col("freq"), col("round").cast("long").as("round"))
-  }
-
   /** Tokenize documents under a learned merge list: per document, the
     * word count and the BPE token count after applying `merges` in
     * order (the train→apply other half of [[learnMerges]] — together

@@ -104,7 +104,7 @@ object Fuzzy {
     * strings is ten times that, and on a real cluster the right bound
     * is a function of per-executor shuffle scratch, not a constant.
     * 6 GiB reproduces the calibrated behavior on this box: at the
-    * D12WaveProbe population (~40-char strings → ~120 B/candidate) it
+    * SCALING_r11 d12 wave population (~40-char strings → ~120 B/candidate) it
     * derives a ~5.4e7 ceiling, the regime where 4 waves bounded
     * per-wave scratch at 0.096× the 952 MB whole-join footprint.
     */
@@ -139,7 +139,7 @@ object Fuzzy {
     * prefix windows are paid once, and a wave's own cost is exactly
     * the candidate join + verify it exists to bound. Every candidate
     * pair shares its block, so waves partition the
-    * candidate space exactly (D12WaveProbe: pair counts conserved,
+    * candidate space exactly (SCALING_r11.json: pair counts conserved,
     * max per-wave scratch ~1/waves of the whole footprint). Each wave
     * eagerly materializes via localCheckpoint, so scratch from wave g
     * is released before wave g+1 shuffles; the returned frame is the

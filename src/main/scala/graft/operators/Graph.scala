@@ -91,7 +91,7 @@ object Graph {
       // the O(edges) relation every round (its src partitioning is
       // checkpoint-preserved, so the exchange is already free — the
       // per-round sort was the remaining edge-sized cost; measured on
-      // the g6 twin of this loop, G6Probe at 30x: 52s -> 15.6s)
+      // the g6 twin of this loop at 30x: 52s -> 15.6s, SCALING_r10.json)
       val contribs = edgesDeg
         .join(ranks.withColumnRenamed("id", "src").hint("shuffle_hash"),
           "src")
@@ -474,7 +474,7 @@ object Graph {
     * compose-from-public-parts auto (wedgeVolume(edges) then
     * triangleCounts(edges)) re-derived the caller's whole edge
     * pipeline and re-ran the orientation joins, measured +35% on g2's
-    * bench wall (G2AutoProbe, round 16).
+    * bench wall (round 16, BENCH_NOTES_r16.md / OPTIMIZATION_r16.md).
     */
   private def triangleCountsOver(undPlan: DataFrame,
                                  fixedWaves: Option[Int]): DataFrame = {
@@ -802,7 +802,7 @@ object Graph {
       // re-SORTS the O(edges) adjacency relation every round (adj's
       // checkpoint preserves its dst hash-partitioning, so the exchange
       // is already free — the per-round sort was the remaining
-      // edge-relation-sized cost; G6Probe measured it at 30x). Hashing
+      // edge-relation-sized cost; measured at 30x, SCALING_r10.json). Hashing
       // the per-partition label slice is O(nodes/partitions) and the
       // edge side streams unsorted. Broadcast would be wrong here: the
       // label relation grows with the graph and re-collects per round.

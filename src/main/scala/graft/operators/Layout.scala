@@ -43,7 +43,7 @@ object Layout {
     * the exact equi-depth rank bucket ([[rankBucket16Pair]], via
     * [[zorderAssignRanked]]), which tracks value order on ANY domain;
     * `pmod(col, 65536)` survives as the differential twin and only
-    * fills the curve when the key domain is dense (LayoutSkewProbe:
+    * fills the curve when the key domain is dense (SCALING_r12.json:
     * 99.66% average envelopes on a sparse domain — pruning dead).
     */
   def mortonZ(a: Column, b: Column): Column =
@@ -58,8 +58,8 @@ object Layout {
     * harmless exception — interchangeable rows get interchangeable
     * slots). The rank is the exclusive prefix COUNT over the COMPOSITE
     * (z, uid) order ([[SequencePack.prefixSumBy]] — no `z << k | uid`
-    * long packing, so any uid domain works; the round-11 LayoutScale
-    * probe measured exactly the silent curve-bending a packed key
+    * long packing, so any uid domain works; the round-11 layout scale
+    * study (SCALING_r11.json) measured the silent curve-bending a packed key
     * suffers when uid outgrows its bit budget). The single-partition
     * `row_number()` window this replaces is what cannot write a
     * 100 TB layout.

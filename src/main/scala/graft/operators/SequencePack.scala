@@ -83,7 +83,7 @@ object SequencePack {
     * a non-unique value with a unique tie-break column (the rank
     * machinery behind [[Layout]]'s quantile coordinates) without
     * packing both into one long (packing overflows once value·2^30
-    * exceeds the long domain — the round-11 LayoutScale lesson).
+    * exceeds the long domain — the round-11 lesson, SCALING_r11.json).
     */
   def prefixSumBy(df: DataFrame, orderCols: Seq[String], weightCol: String,
                   numParts: Int = 0,

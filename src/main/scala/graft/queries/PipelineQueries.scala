@@ -553,8 +553,8 @@ object PipelineQueries extends QueryModule {
     * because it is the variant that survives REAL keys: pmod
     * coordinates only fill the curve when the domain is dense, and on
     * a sparse domain their envelopes stop pruning entirely
-    * (LayoutSkewProbe: 99.66% average envelope vs 16.3% ranked —
-    * SCALING_r12). Everything stays exact integer arithmetic, so
+    * (99.66% average envelope vs 16.3% ranked — the skewed-key rows of
+    * SCALING_r12.json). Everything stays exact integer arithmetic, so
     * DuckDB replays coordinates (`(row_number()-1)*65536 // n`),
     * curve, ranks and envelopes bit-for-bit.
     */
@@ -633,7 +633,7 @@ object PipelineQueries extends QueryModule {
     * is cheaper (no rank passes) and bit-exactly replayable, but only
     * fills the curve when the key domain is dense; on a sparse domain
     * its envelopes cover 99.66% of the value range (pruning dead,
-    * LayoutSkewProbe) while x14's ranked coordinates keep pruning.
+    * SCALING_r12.json) while x14's ranked coordinates keep pruning.
     * NOT the layout a production table should copy — x14 is.
     */
   private val zorderPmod = CatalogQuery(

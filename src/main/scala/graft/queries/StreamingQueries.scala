@@ -106,9 +106,10 @@ object StreamingQueries extends QueryModule {
     * replay fixture.
     */
   /** The last replay's per-batch progress JSON — dev observability for
-    * state-metrics evidence (Test-scope StreamStateProbe reads it after
-    * forcing a builder); assignment of an already-materialized array,
-    * so no query path pays anything.
+    * state-metrics evidence (state-store rows, rows/sec, batch
+    * durations), read after forcing a builder; CHANGES.md records how
+    * the st5/st12 dumps were taken. Assignment of an already-
+    * materialized array, so no query path pays anything.
     */
   @volatile private[graft] var lastReplayProgress: Seq[String] = Nil
 

@@ -2359,12 +2359,7 @@ object SqlRunner {
     // sbt's runMain splits the quoted command on spaces, so raw SQL
     // arrives as many args — everything after sfDir is the query text
     val (sfDir, query) = (args(0), args.drop(1).mkString(" "))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = graft.core.GraftSession.tuned(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-sql"),
-      shufflePartitions = cpus
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (spark, _) = graft.Measure.driverSession("graft-sql")
     // per-query registration on BOTH paths, so a corrupt table only
     // fails queries that read it — raw SQL registers the tables its
     // text references (a false positive registers an unused view; the

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import graft.Measure.{f3, jsonString => q}
+
 // quick dev check: dump an arbitrary subset of catalog queries + their
 // oracles for scripts/check_oracle.py, at an arbitrary sfDir.
 // usage: Test/runMain graft.QCheck <sfDir> <outDir> <name1,name2,...>
@@ -14,13 +16,6 @@ object QCheck {
     val spark = core.GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // Per-query walls, split BUILD vs SERVE: the dump pass lands any
     // one-time index/materialization build (IndexCache at a fresh data
     // fingerprint) plus cold footers; the second, noop-write pass is
@@ -37,7 +32,7 @@ object QCheck {
     // in walls.json's "_mode" so downstream artifacts can say which
     // measurement they carry).
     val wallsOnly = sys.env.get("GRAFT_QCHECK_MODE").contains("walls")
-    // hypervisor-steal jiffies bracketing each pass (the Bench
+    // hypervisor-steal cores of each pass (Measure.timed, the Bench
     // evidence pattern, round 16): this box takes multi-core steal
     // BURSTS (a d12c serve pass measured 19x its clean wall under one,
     // with nothing in the artifact to say so). Steal is never
@@ -46,80 +41,51 @@ object QCheck {
     // ONE bounded re-measure (the lower-steal window wins; ties to the
     // faster wall) — under persistent weather the artifact then
     // carries the evidence instead of silently shipping storm walls.
-    def stealJiffies(): Long = try {
-      val s = scala.io.Source.fromFile("/proc/stat")
-      try s.getLines().next().split("\\s+").drop(1).take(8)
-        .map(_.toLong).apply(7)
-      finally s.close()
-    } catch { case _: Throwable => 0L }
-    def stealCores(j0: Long, j1: Long, wall: Double): Double =
-      if (wall > 0) math.max(j1 - j0, 0L) / 100.0 / wall else 0.0
     val walls = scala.collection.mutable.LinkedHashMap
-      .empty[String, (Double, Double, Double, Double)]
-    for (name <- names) {
-      val s0 = stealJiffies()
-      val t0 = System.nanoTime()
-      if (wallsOnly)
-        SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-      else
-        SparkEntry.queries(name)(spark, sfDir)
-          .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-      val dump = (System.nanoTime() - t0) / 1e9
-      val dumpSteal = stealCores(s0, stealJiffies(), dump)
-      // clear the SQL cache so the serve pass pays its own
-      // materialization (operators persist() shared subtrees; the
-      // CacheManager matches by logical plan and would serve the dump
-      // pass's cache) — but the at-rest INDEX (IndexCache) survives,
-      // which is the point. The explicit GC releases the previous
-      // query's localCheckpoint blocks (iterative operators) so a
-      // long sweep's walls stay comparable to a fresh JVM's — the
-      // round-15 bench smoke measured g4 at 10x its fresh-JVM wall in
-      // a JVM polluted by the preceding catalog grind.
-      def servePass(): (Double, Double) = {
-        spark.catalog.clearCache()
-        System.gc()
-        Thread.sleep(150)
-        val j0 = stealJiffies()
-        val t1 = System.nanoTime()
-        SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        val w = (System.nanoTime() - t1) / 1e9
-        (w, stealCores(j0, stealJiffies(), w))
-      }
-      val first = servePass()
-      val (serve, serveSteal) =
-        if (first._2 < 0.5) first
-        else {
-          val retry = servePass()
-          if (retry._2 < first._2 ||
-              (retry._2 == first._2 && retry._1 < first._1)) retry
-          else first
-        }
-      walls(name) = (dump, serve, dumpSteal, serveSteal)
-      println(f"[qcheck] $name%-28s dumped in $dump%.2f s, served in " +
-        f"$serve%.2f s" + (if (serveSteal >= 0.5 || dumpSteal >= 0.5)
-          f" [steal d=$dumpSteal%.1f s=$serveSteal%.1f]" else ""))
-      writeWalls()
-      spark.catalog.clearCache()
-      System.gc()
-    }
-    def f3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+      .empty[String, (Measure.Window, Measure.Window)]
     // rewritten after EVERY query: a multi-hour sweep killed mid-run
     // (disk, OOM, operator timeout) keeps the walls it already paid for
     def writeWalls(): Unit =
       Files.writeString(Paths.get(s"$outDir/walls.json"),
         (Seq(s"${q("_mode")}: ${q(if (wallsOnly) "noop_build" else "dump_build")}") ++
-          walls.map { case (n, (d, s, ds, ss)) =>
-            s"${q(n)}: {${q("dump_sec")}: ${f3(d)}, ${q("serve_sec")}: ${f3(s)}, " +
-              s"${q("dump_steal_cores")}: ${f3(ds)}, ${q("serve_steal_cores")}: ${f3(ss)}}"
+          walls.map { case (n, (d, s)) =>
+            s"${q(n)}: {${q("dump_sec")}: ${f3(d.wall)}, ${q("serve_sec")}: ${f3(s.wall)}, " +
+              s"${q("dump_steal_cores")}: ${f3(d.stealCores)}, ${q("serve_steal_cores")}: ${f3(s.stealCores)}}"
           }).mkString("{", ", ", "}"))
+    for (name <- names) {
+      val dump = Measure.timed {
+        if (wallsOnly) Measure.materialize(SparkEntry.queries(name)(spark, sfDir))
+        else Verify.dump(spark, sfDir, outDir, name)
+      }
+      // settle first so the serve pass pays its own materialization
+      // (the CacheManager would serve the dump pass's persisted
+      // subtrees) — but the at-rest INDEX (IndexCache) survives, which
+      // is the point. The GC half keeps a long sweep's walls comparable
+      // to a fresh JVM's: the round-15 bench smoke measured g4 at 10x
+      // its fresh-JVM wall in a JVM polluted by the preceding grind.
+      def servePass(): Measure.Window = {
+        Measure.settle(spark)
+        Measure.timed(Measure.materialize(SparkEntry.queries(name)(spark, sfDir)))
+      }
+      val first = servePass()
+      val serve =
+        if (first.stealCores < 0.5) first
+        else {
+          val retry = servePass()
+          if (retry.stealCores < first.stealCores ||
+              (retry.stealCores == first.stealCores && retry.wall < first.wall)) retry
+          else first
+        }
+      walls(name) = (dump, serve)
+      println(f"[qcheck] $name%-28s dumped in ${dump.wall}%.2f s, served in " +
+        f"${serve.wall}%.2f s" +
+        (if (serve.stealCores >= 0.5 || dump.stealCores >= 0.5)
+          f" [steal d=${dump.stealCores}%.1f s=${serve.stealCores}%.1f]" else ""))
+      writeWalls()
+      Measure.settle(spark)
+    }
     writeWalls()
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
-      names.filter(SparkEntry.oracleSql.contains)
-        .map(n => s"${q(n)}: ${q(SparkEntry.oracleSql(n))}")
-        .mkString("{", ", ", "}"))
+    Verify.writeOracleSql(outDir, names.toSet)
     // provenance binding: carry the dataset fingerprint the outputs
     // were computed against, so sf1_validate.py can refuse a
     // mixed-generation compare (the round-13 staleness trap)

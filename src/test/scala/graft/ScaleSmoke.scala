@@ -84,7 +84,7 @@ object ScaleSmoke {
           val t0 = System.nanoTime()
           val n = body
           val sec = (System.nanoTime() - t0) / 1e9
-          println(f"""{"scale":$mult,"op":"$name","sec":$sec%.3f,"rows":$n}""")
+          println(s"""{"scale":$mult,"op":"$name","sec":${Measure.f3(sec)},"rows":$n}""")
           spark.catalog.clearCache()
         }
       }
@@ -482,9 +482,9 @@ object ScaleSmoke {
         val sec = (System.nanoTime() - t0) / 1e9
         spark.sparkContext.removeSparkListener(listener)
         val rounds = if (ms.isEmpty) 0 else ms.map(_._4).max
-        println(f"""{"scale":$mult,"op":"t14_bpe_batched_256",""" +
-          f""""sec":$sec%.3f,"n_merges":${ms.size},"rounds":$rounds,""" +
-          f""""jobs":${jobs.get()}}""")
+        println(s"""{"scale":$mult,"op":"t14_bpe_batched_256",""" +
+          s""""sec":${Measure.f3(sec)},"n_merges":${ms.size},"rounds":$rounds,""" +
+          s""""jobs":${jobs.get()}}""")
         spark.catalog.clearCache()
       }
       opNames += "t14_bpe_batched_256"
