@@ -1,6 +1,8 @@
 package graft.mapreduce
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 
 /** The reference's pluggable map/reduce surface (SURVEY.md §2.9),
@@ -31,25 +33,43 @@ case object RangePartition extends PartitionStrategy
 
 object MapleJuiceJob {
 
+  /** Distinct `(key, value)` pairs one map task's combine buffer holds
+    * before it flushes. Kept small because a large buffer is slow to
+    * fill with pairs that never repeat: on 4 M all-distinct pairs (4
+    * cores) a 65,536-entry buffer doubled a job's time and a 1,024-entry
+    * one added about a third.
+    */
+  private val CombineCap = 1 << 10
+
   /** Run a Maple → shuffle → Juice job.
     *
-    * Hash path: `groupByKey.flatMapGroups` — one hash shuffle, keys
-    * co-located exactly as the reference's hash partitioner guarantees.
-    * Range path: `repartitionByRange` + `sortWithinPartitions` + a
-    * partition walk over sorted key runs — the reference's range
-    * partitioner plus Hadoop's sort-based reduce input (SURVEY §2.6 P5)
-    * in one pass, no second shuffle.
+    * Both partitioners are one exchange + one in-partition sort + a
+    * walk over sorted key runs (Hadoop's sort-based reduce input,
+    * SURVEY §2.6 P5): `repartition` co-locates keys exactly as the
+    * reference's hash partitioner does, `repartitionByRange` gives
+    * contiguous, totally-ordered key ranges as its range partitioner
+    * does.
     *
-    * At scale the hash path is an O(keys) shuffle with map-side combine
-    * left to the Juice author (as in the reference); the range path
-    * additionally gives totally-ordered output partitions.
+    * Unlike the reference, which ships every emitted pair, each map
+    * task collapses identical `(key, value)` pairs into one counted
+    * record before the shuffle ([[combine]]), and the reduce-side walk
+    * replays each value `count` times. Equal strings are
+    * interchangeable, so a Juice still sees exactly the multiset of
+    * values the reference would hand it, one call per key, with no
+    * combiner to write. The buffer lives on the task's heap, outside
+    * Spark's memory manager: each running map task holds up to
+    * [[CombineCap]] (1,024) distinct pairs, keys and values included,
+    * before it flushes, so a Maple that emits large values should expect
+    * that many of them live per task. All-distinct pairs gain nothing
+    * and pay the hashing.
     */
   def run(input: Dataset[String], m: Maple, j: Juice,
           numPartitions: Int,
           strategy: PartitionStrategy = HashPartition): Dataset[(String, String)] = {
     val spark = input.sparkSession
     import spark.implicits._
-    val kv: Dataset[(String, String)] = input.flatMap(m.maple(_))
+    val kvn: Dataset[(String, String, Long)] =
+      input.mapPartitions(lines => combine(lines.flatMap(m.maple(_)), CombineCap))
     // BOTH paths are one exchange + one in-partition sort + the
     // sorted-run walk (Hadoop's sort-based reduce). The hash path used
     // to chain .repartition(n, _1).groupByKey(_._1): groupByKey keys on
@@ -59,8 +79,8 @@ object MapleJuiceJob {
     // 16, measured on the 306M-pair 136 MB Condorcet workload:
     // 80.6 s → 43.4 s median end-to-end from removing it).
     val partitioned = strategy match {
-      case HashPartition  => kv.repartition(numPartitions, col("_1"))
-      case RangePartition => kv.repartitionByRange(numPartitions, col("_1"))
+      case HashPartition  => kvn.repartition(numPartitions, col("_1"))
+      case RangePartition => kvn.repartitionByRange(numPartitions, col("_1"))
     }
     partitioned
       .sortWithinPartitions(col("_1"))
@@ -74,11 +94,23 @@ object MapleJuiceJob {
           def hasNext: Boolean = in.hasNext
           def next(): Iterator[(String, String)] = {
             val k = in.head._1
-            val values = Iterator.unfold(()) { _ =>
-              if (in.hasNext && in.head._1 == k)
-                Some((in.next()._2, ())) else None
+            // each (k, v, count) record replays v count times
+            val values = new Iterator[String] {
+              private var v: String = _
+              private var left = 0L
+              def hasNext: Boolean = left > 0 || (in.hasNext && in.head._1 == k)
+              def next(): String = {
+                if (left == 0) {
+                  if (!hasNext) throw new NoSuchElementException(k)
+                  val r = in.next()
+                  v = r._2
+                  left = r._3
+                }
+                left -= 1
+                v
+              }
             }
-            // the trailing by-name ++ drains any values a Juice left
+            // the trailing by-name ++ drains any records a Juice left
             // unconsumed, so the stream stays aligned on run starts
             j.juice(k, values).iterator ++ {
               while (in.hasNext && in.head._1 == k) in.next()
@@ -88,6 +120,26 @@ object MapleJuiceJob {
         }.flatten
       }
   }
+
+  /** Map-side combine: `(key, value, count)` records whose counts sum,
+    * per pair, to its multiplicity in `pairs`. Distinct pairs collect in
+    * a hash map of at most `cap` entries, flushed whenever it fills.
+    */
+  private[graft] def combine(pairs: Iterator[(String, String)],
+                             cap: Int): Iterator[(String, String, Long)] =
+    // flatten drains each flushed buffer before asking for the next
+    new Iterator[Iterator[(String, String, Long)]] {
+      def hasNext: Boolean = pairs.hasNext
+      def next(): Iterator[(String, String, Long)] = {
+        // a fresh map per flush, sized never to rehash: a drained
+        // buffer is garbage at once instead of staying live for the
+        // rest of the task
+        val counts = new java.util.HashMap[(String, String), Array[Long]](2 * cap)
+        while (counts.size < cap && pairs.hasNext)
+          counts.computeIfAbsent(pairs.next(), _ => Array(0L))(0) += 1
+        counts.entrySet.iterator.asScala.map(e => (e.getKey._1, e.getKey._2, e.getValue()(0)))
+      }
+    }.flatten
 
   /** Binary-executable compatibility via `rdd.pipe`, the Hadoop
     * Streaming contract the reference's own `hadoop_*` ports use:
@@ -107,7 +159,6 @@ object MapleJuiceJob {
         if (i < 0) None else Some((line.substring(0, i), line.substring(i + 1)))
       }
     val reduced = kv
-      .map { case (k, v) => (k, v) }
       .repartitionAndSortWithinPartitions(
         new org.apache.spark.HashPartitioner(numPartitions))
       .map { case (k, v) => s"$k\t$v" }

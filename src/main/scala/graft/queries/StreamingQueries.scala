@@ -105,14 +105,6 @@ object StreamingQueries extends QueryModule {
     * exercising watermark advancement, which is the point of the
     * replay fixture.
     */
-  /** The last replay's per-batch progress JSON — dev observability for
-    * state-metrics evidence (state-store rows, rows/sec, batch
-    * durations), read after forcing a builder; CHANGES.md records how
-    * the st5/st12 dumps were taken. Assignment of an already-
-    * materialized array, so no query path pays anything.
-    */
-  @volatile private[graft] var lastReplayProgress: Seq[String] = Nil
-
   private def runReplay(s: SparkSession, out: org.apache.spark.sql.DataFrame,
                         prefix: String, minBatches: Int = 3,
                         replayPath: String = "") = {
@@ -134,9 +126,7 @@ object StreamingQueries extends QueryModule {
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
       try {
         q.awaitTermination()
-        val progress = q.recentProgress
-        lastReplayProgress = progress.toSeq.map(_.json)
-        val batches = progress.map(_.batchId).distinct.length
+        val batches = q.recentProgress.map(_.batchId).distinct.length
         require(batches >= minBatches,
           s"$prefix: replay must run >= $minBatches batches " +
             s"(maxFilesPerTrigger=1 over the split fixture), got $batches")

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+
 import graft.mapreduce.{MapleJuiceJob, RangePartition, Workloads}
 import graft.sources.Generators
 
@@ -12,6 +15,8 @@ import graft.sources.Generators
   */
 class CondorcetScaleSpec extends SparkSpecBase {
 
+  private object Plans extends AdaptiveSparkPlanHelper
+
   private val candidates = (0 to 9).map(_.toString)
 
   private def election(numPartitions: Int,
@@ -21,7 +26,19 @@ class CondorcetScaleSpec extends SparkSpecBase {
     val ballots = Generators.ballots(s, 100000, candidates, seed = 425)
     val p1 = MapleJuiceJob.run(ballots,
       Workloads.CondorcetMaple1, Workloads.CondorcetJuice1, numPartitions, strategy)
-    MapleJuiceJob.run(p1.map(_._1),
+    // phase 1 alone: 45 pair keys x 2 values, so each map task ships at
+    // most 90 combined records where 100k ballots emit 4.5M pairs
+    val pairs = p1.collect()
+    assert(pairs.length == 45)
+    val exchanges = Plans.collect(p1.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec => e
+    }
+    assert(exchanges.length == 1, s"$strategy x $numPartitions: ${exchanges.length} exchanges")
+    val records = exchanges.head.metrics("shuffleRecordsWritten").value
+    val mapTasks = ballots.rdd.getNumPartitions
+    assert(records > 0 && records <= 90L * mapTasks,
+      s"$strategy x $numPartitions: phase 1 shuffled $records records from $mapTasks map tasks")
+    MapleJuiceJob.run(pairs.toSeq.map(_._1).toDS(),
       Workloads.CondorcetMaple2, new Workloads.CondorcetJuice2(10), 1, strategy)
       .collect().toMap
   }

@@ -131,6 +131,78 @@ class MapleJuiceSpec extends SparkSpecBase {
       Map("0,1,2," -> " have the highest condorcet counts, no winner."))
   }
 
+  /** Multiplicity of every (key, value) pair, the invariant the
+    * map-side combine must keep.
+    */
+  private def multiplicities(pairs: Seq[(String, String)]): Map[(String, String), Long] =
+    pairs.groupMapReduce(identity)(_ => 1L)(_ + _)
+
+  private def summed(out: Seq[(String, String, Long)]): Map[(String, String), Long] =
+    out.groupMapReduce(r => (r._1, r._2))(_._3)(_ + _)
+
+  test("combine: per-pair counts sum to the input's multiplicities") {
+    val rnd = new scala.util.Random(7)
+    val pairs = Seq.fill(5000)((s"k${rnd.nextInt(6)}", s"${rnd.nextInt(3)}"))
+    for (cap <- Seq(1, 2, 8, 32, 1 << 10)) {
+      val out = MapleJuiceJob.combine(pairs.iterator, cap).toSeq
+      assert(out.forall(_._3 > 0), s"cap $cap")
+      assert(out.map(_._3).sum == pairs.size, s"cap $cap")
+      assert(summed(out) == multiplicities(pairs), s"cap $cap")
+      if (cap >= 18) assert(out.size == 18, s"cap $cap: one record per distinct pair")
+    }
+  }
+
+  test("combine: a pair split by a flush still sums to its multiplicity") {
+    // cap 2: the buffer flushes as "b" arrives, so b's run spans two flushes
+    val pairs = Seq.fill(10)(("a", "1")) ++ Seq.fill(10)(("b", "1")) ++ Seq.fill(10)(("c", "1"))
+    val out = MapleJuiceJob.combine(pairs.iterator, cap = 2).toSeq
+    assert(out.count(_._1 == "b") == 2, s"b must cross a flush: $out")
+    assert(summed(out) == multiplicities(pairs))
+  }
+
+  /** Heavy-duplicate pairs (5 keys x 2 values) interleaved with distinct
+    * values under the same keys and with distinct keys, in 3 input
+    * partitions.
+    */
+  private def mixedLines = {
+    val s = spark
+    import s.implicits._
+    s.sparkContext.parallelize((0 until 3000).map { i =>
+      s"h${i % 5}=${i % 2} h${i % 5}=${i % 2} h${i % 3}=d$i c$i=z"
+    }, 3).toDS()
+  }
+
+  private lazy val rawGroups: Map[String, Seq[String]] = {
+    val s = spark
+    import s.implicits._
+    mixedLines.flatMap(MapleJuiceSpec.PairMaple.maple(_))
+      .groupBy($"_1").agg(collect_list($"_2"))
+      .as[(String, Seq[String])].collect()
+      .map { case (k, vs) => k -> vs.sorted }.toMap
+  }
+
+  for ((strategy, n) <- Seq((HashPartition, 1), (HashPartition, 3),
+                            (RangePartition, 1), (RangePartition, 3))) {
+    test(s"combined $strategy x $n hands each Juice the raw value multiset") {
+      val got = MapleJuiceJob
+        .run(mixedLines, MapleJuiceSpec.PairMaple, MapleJuiceSpec.RecordingJuice, n, strategy)
+        .collect()
+      assert(got.map(_._1).distinct.length == got.length, "one Juice call per key")
+      assert(got.map { case (k, vs) => k -> vs.split('|').toSeq }.toMap == rawGroups)
+    }
+  }
+
+  test("a Juice that reads one value per run still emits one row per key") {
+    val want = rawGroups
+    for (strategy <- Seq(HashPartition, RangePartition)) {
+      val got = MapleJuiceJob
+        .run(mixedLines, MapleJuiceSpec.PairMaple, MapleJuiceSpec.FirstValueJuice, 3, strategy)
+        .collect()
+      assert(got.map(_._1).sorted.toSeq == want.keys.toSeq.sorted, s"$strategy")
+      got.foreach { case (k, v) => assert(want(k).contains(v), s"$strategy: $k -> $v") }
+    }
+  }
+
   test("writeTsv emits k<TAB>v lines") {
     val s = spark
     import s.implicits._
@@ -138,5 +210,28 @@ class MapleJuiceSpec extends SparkSpecBase {
     MapleJuiceJob.writeTsv(Seq(("k1", "v1"), ("k2", "v2")).toDS(), out, coalesce1 = true)
     val lines = spark.read.textFile(out).collect().sorted
     assert(lines.toSeq == Seq("k1\tv1", "k2\tv2"))
+  }
+}
+
+object MapleJuiceSpec {
+  /** `k=v` tokens to `(k, v)` pairs. */
+  object PairMaple extends Maple {
+    def maple(line: String): IterableOnce[(String, String)] =
+      line.split(" ").iterator.map { t =>
+        val i = t.indexOf('=')
+        (t.substring(0, i), t.substring(i + 1))
+      }
+  }
+
+  /** Every value the key received, sorted and `|`-joined. */
+  object RecordingJuice extends Juice {
+    def juice(key: String, values: Iterator[String]): IterableOnce[(String, String)] =
+      Iterator((key, values.toSeq.sorted.mkString("|")))
+  }
+
+  /** Reads only the first value, leaving the rest of the run unconsumed. */
+  object FirstValueJuice extends Juice {
+    def juice(key: String, values: Iterator[String]): IterableOnce[(String, String)] =
+      Iterator((key, values.next()))
   }
 }
