@@ -10,6 +10,22 @@ import org.apache.spark.sql.SparkSession
   * partitions sized to cores rather than the 200 default (on a cluster
   * this is overridden per-deploy; AQE coalesces down from whatever the
   * initial number is).
+  *
+  * Local (`file:`) file creation and checkpoint commits fork no
+  * process. Without `libhadoop`, Hadoop's stock local file system runs
+  * a `chmod` shell for every file and directory it creates, and the
+  * `FileContext` rename that Spark's default checkpoint manager uses
+  * runs a `readlink` shell per file. A streaming micro-batch writes a
+  * dozen checkpoint files, so those forks were most of its time
+  * (`gossip_stream` on a 4-core box: 374 of 464 ms per batch went to
+  * state commits). Two settings remove them:
+  *  - `spark.hadoop.fs.file.impl` = [[NioLocalFileSystem]]: the same
+  *    checksummed file system, with modes set through `java.nio`;
+  *  - `spark.sql.streaming.checkpointFileManagerClass` =
+  *    [[LocalCheckpointFileManager]]: rename-based commits over that
+  *    file system for `file:` checkpoints, Spark's default elsewhere.
+  * Both are set at session build, before anything resolves `file:`:
+  * Hadoop caches file systems by scheme, not by implementation.
   */
 object GraftSession {
 
@@ -45,6 +61,10 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // native graft expressions (token_count, ...) as SQL functions
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      // fork-free local file I/O (see the object doc)
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config(LocalCheckpointFileManager.ClassKey,
+        classOf[LocalCheckpointFileManager].getName)
 
   /** Local session for tests and ad-hoc runs. */
   def local(cores: Int = Runtime.getRuntime.availableProcessors(),

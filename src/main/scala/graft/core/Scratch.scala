@@ -6,16 +6,19 @@ import java.util.UUID
 /** Small scratch directories for streaming checkpoints and per-query
   * sinks, placed on a RAM-backed tmpfs when the box offers one.
   *
-  * Why: Structured Streaming fsyncs its offset/commit logs and state
-  * store files once per micro-batch. On a disk-backed temp dir those
-  * fsyncs contend with whatever else is washing through the page
-  * cache — the round-9 bench measured the streaming query family
-  * drifting +25 s on IDENTICAL plans, with per-query accounting
-  * attributing the drift to 5–12 foreign busy cores of checkpoint
-  * fsync/kworker activity. Checkpoint state for the replay fixtures
-  * is kilobytes; its durability story is irrelevant to a bench/test
-  * run; tmpfs makes the micro-batch commit path memory-speed and
-  * box-state-independent.
+  * Why: a micro-batch writes a dozen small checkpoint files (offset,
+  * commit and source logs, state-store deltas and their checksums).
+  * The round-9 bench measured the streaming query family drifting
+  * +25 s on IDENTICAL plans, with 5–12 foreign busy cores charged to
+  * the checkpoint path. Spark's local checkpoint writes do not fsync;
+  * the foreign cores were this JVM's own `chmod`/`readlink` child
+  * processes, one per file, which Hadoop's local file system forks
+  * without `libhadoop`. [[GraftSession]] now routes local I/O through
+  * [[NioLocalFileSystem]] and [[LocalCheckpointFileManager]], which
+  * fork no process per file. Checkpoint state for the replay fixtures
+  * is kilobytes and its durability is irrelevant to a bench/test run,
+  * so tmpfs still keeps the commit path memory-speed and independent
+  * of the box's page-cache state.
   *
   * On a real cluster the checkpoint location is a caller decision
   * (HDFS/object store for durability) — every operator takes it as a

@@ -109,13 +109,13 @@ object StreamingQueries extends QueryModule {
                         prefix: String, minBatches: Int = 3,
                         replayPath: String = "") = {
     val name = prefix + java.util.UUID.randomUUID().toString.replace("-", "")
-    // explicit RAM-backed checkpoint (see graft.core.Scratch): the
-    // offset/commit/state fsyncs per micro-batch otherwise land on the
-    // disk-backed default temp dir, where they contend with the box's
-    // page-cache state — measured as +25 s of drift across the
-    // streaming bench family on identical plans. The memory sink holds
-    // the results, so the checkpoint is deletable the moment the
-    // replay stops.
+    // explicit RAM-backed checkpoint (see graft.core.Scratch): each
+    // micro-batch writes a dozen small offset/commit/state files, and
+    // tmpfs keeps those writes independent of the box's page-cache
+    // state. Spark does not fsync them; their measured cost was
+    // Hadoop's per-file chmod/readlink forks, which GraftSession
+    // removes. The memory sink holds the results, so the checkpoint is
+    // deletable the moment the replay stops.
     val ck = graft.core.Scratch.dir(s"graft_ck_$prefix")
     val parts =
       if (replayPath.isEmpty) ReplayShufflePartitions

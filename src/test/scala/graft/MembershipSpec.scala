@@ -108,6 +108,65 @@ class MembershipSpec extends SparkSpecBase {
     } finally q.stop()
   }
 
+  test("a restart from the checkpoint after batch 2 emits exactly the " +
+    "events of an uninterrupted run") {
+    val s = spark
+    import s.implicits._
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Dataset
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    // member 2 falls silent after batch 1: failed once batch 2 moves the
+    // watermark, removed once batch 3 does. Member 3 leaves in batch 2
+    // and rejoins in batch 4. Both outcomes after the restart need the
+    // state from before it.
+    val batches = Seq(
+      Seq(hb(1, 1, 1000), hb(2, 1, 1000), hb(3, 1, 1000)),
+      Seq(hb(1, 2, 3000), hb(3, 2, 3000, health = Left)),
+      Seq(hb(1, 3, 5000)),
+      Seq(hb(1, 4, 9000), hb(3, 5, 9000)))
+    // every emitted (batch id, event), in emission order: a replayed or
+    // skipped batch after the restart shows up as a difference; and the
+    // names of the files in the state store's checkpoint
+    def run(restartBefore: Option[Int]): (Seq[(Long, MemberEvent)], Set[String]) = {
+      val input = MemoryStream[Heartbeat]
+      val events = Membership.updates(input.toDS(), failAfterMs = 1500,
+        cleanupAfterMs = 1500, watermarkDelay = "0 seconds")
+      val ck = graft.core.Scratch.dir("graft_ck_membership_")
+      val emitted = scala.collection.mutable.ArrayBuffer.empty[(Long, MemberEvent)]
+      val collect: (Dataset[MemberEvent], Long) => Unit = (batch, id) => {
+        val rows = batch.collect().sortBy(e => (e.memberId, e.atMs, e.kind))
+        emitted.synchronized { emitted ++= rows.map(id -> _) }
+      }
+      def start() = events.writeStream.foreachBatch(collect)
+        .option("checkpointLocation", ck.getAbsolutePath).start()
+      var q = start()
+      try {
+        batches.zipWithIndex.foreach { case (b, i) =>
+          if (restartBefore.contains(i)) { q.stop(); q = start() }
+          input.addData(b)
+          q.processAllAvailable()
+        }
+        q.stop()
+        val files = java.nio.file.Files.walk(new java.io.File(ck, "state").toPath)
+        val stateFiles =
+          try files.iterator().asScala.map(_.getFileName.toString).toSet
+          finally files.close()
+        (emitted.toSeq, stateFiles)
+      } finally { q.stop(); graft.core.Scratch.delete(ck) }
+    }
+    val (uninterrupted, stateFiles) = run(None)
+    // state deltas carry both Spark's checksum file and Hadoop's sidecar
+    assert(stateFiles.contains("1.delta") && stateFiles.contains("1.delta.crc") &&
+      stateFiles.contains(".1.delta.crc"), stateFiles)
+    val kinds = uninterrupted.map(_._2).groupBy(_.memberId).view
+      .mapValues(_.map(_.kind).toList).toMap
+    assert(kinds(1) == List("joined", "updated", "updated", "updated"))
+    assert(kinds(2) == List("joined", "failed", "removed"))
+    assert(kinds(3) == List("joined", "left", "updated"))
+    assert(run(restartBefore = Some(2))._1 == uninterrupted)
+  }
+
   test("ST4: the tick-driven heartbeat pipeline emits lifecycle events") {
     val s = spark
     import s.implicits._
