@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.core.Tables
+
 /** MinHash-LSH fingerprint index AT REST: the incremental-ingest twin
   * of [[Dedup.minhashLshPairs]], mirroring [[IvfIndex]]'s build-once /
   * probe-many division. A training-data pipeline does not re-fingerprint
@@ -104,7 +106,7 @@ object DedupIndex {
     * row of metadata, bounded by construction.
     */
   def meta(spark: SparkSession, path: String): (Int, Int, Int, Int) = {
-    val r = spark.read.parquet(s"$path/meta").head()
+    val r = Tables.parquet(spark, s"$path/meta").head()
     (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3))
   }
 
@@ -149,7 +151,7 @@ object DedupIndex {
                              batchBands: DataFrame, texts: DataFrame,
                              withinBatch: Boolean, threshold: Double,
                              idCol: String, textCol: String, n: Int): DataFrame = {
-    val indexBands = spark.read.parquet(s"$path/bands")
+    val indexBands = Tables.parquet(spark, s"$path/bands")
     val cross = indexBands.as("x")
       .join(batchBands.as("y"),
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
@@ -172,7 +174,7 @@ object DedupIndex {
     // ContextCleaner once the caller drops it (same contract as
     // [[Dedup.connectedComponents]]'s final snapshot).
     try Dedup.verifyExactJaccardWith(texts, idCol, textCol, cand, n,
-        threshold, hot = spark.read.parquet(s"$path/hot"))
+        threshold, hot = Tables.parquet(spark, s"$path/hot"))
       .localCheckpoint(true)
     finally cand.unpersist(blocking = false)
   }
@@ -240,14 +242,14 @@ object DedupIndex {
     */
   def probeNovelty(spark: SparkSession, path: String, batch: DataFrame,
                    idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val n = spark.read.parquet(s"$path/nmeta").head().getInt(0)
+    val n = Tables.parquet(spark, s"$path/nmeta").head().getInt(0)
     val bg = Dedup.hashedShingleSet(batch, idCol, textCol, n)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val bmin = bg.groupBy(col("h")).agg(min(col("doc")).as("bown"))
     // grams the corpus-at-rest has never seen; their first owner is
     // the batch's min id
     val novelGrams = bmin.join(
-      spark.read.parquet(s"$path/owners").select(col("h")),
+      Tables.parquet(spark, s"$path/owners").select(col("h")),
       Seq("h"), "left_anti")
     // eagerly materialize the O(batch-docs) aggregate, then free the
     // batch gram cache — the probePairsImpl discipline: this is a

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Tables
+
 /** IVF index-AT-REST: the inverted file realized as a parquet layout
   * `partitionBy("cell")` — each k-means cell becomes a partition
   * directory (the "posting list"), so a probe of `nprobe` cells prunes
@@ -48,7 +50,7 @@ object IvfIndex {
     * literals to pick cells without touching the corpus).
     */
   def centroids(spark: SparkSession, path: String): Seq[Seq[Double]] =
-    spark.read.parquet(s"$path/centroids")
+    Tables.parquet(spark, s"$path/centroids")
       .orderBy(col("cell"))
       .collect().map(_.getSeq[Double](1).toSeq).toSeq
 
@@ -70,7 +72,7 @@ object IvfIndex {
     val probes = Similarity.probeRows(queries, cents, nprobe, idCol, vecCol)
     val probedCells = probes.select(col("cell")).distinct()
       .collect().map(_.getInt(0)).sorted.toSeq
-    val corpus = spark.read.parquet(s"$path/corpus")
+    val corpus = Tables.parquet(spark, s"$path/corpus")
       .filter(col("cell").isin(probedCells: _*))
     Similarity.probeRank(corpus, probes, k)
   }

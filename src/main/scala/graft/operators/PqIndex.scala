@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Tables
+
 /** Product-quantization index AT REST — the build-once / probe-many
   * division for [[Quantize]]'s PQ, mirroring [[IvfIndex]]: `build` is
   * the one full-corpus job (train the m per-subspace codebooks on the
@@ -46,7 +48,7 @@ object PqIndex {
     * metadata (probes need them as literals for the ADC tables).
     */
   def codebooks(spark: SparkSession, path: String): Seq[Seq[Seq[Double]]] =
-    spark.read.parquet(s"$path/books")
+    Tables.parquet(spark, s"$path/books")
       .orderBy(col("sub"), col("code"))
       .collect()
       .map(r => (r.getInt(0), r.getSeq[Double](2).toSeq))
@@ -63,7 +65,7 @@ object PqIndex {
               idCol: String = "vec_id",
               vecCol: String = "embedding"): DataFrame = {
     val books = codebooks(spark, path)
-    val codes = spark.read.parquet(s"$path/codes")
+    val codes = Tables.parquet(spark, s"$path/codes")
     Quantize.adcRank(codes, raw, books, queries, books.head.size, topK,
       rerankDepth, idCol, vecCol)
   }

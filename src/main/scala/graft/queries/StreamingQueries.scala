@@ -147,7 +147,7 @@ object StreamingQueries extends QueryModule {
     */
   private def eventsStream(s: SparkSession, dir: String) = {
     val replay = graft.streaming.StreamReplay.ensureEvents(s, dir)
-    val schema = s.read.parquet(replay).schema
+    val schema = Tables.parquet(s, replay).schema
     graft.core.EventTime.normalize(
       s.readStream
         .schema(schema)
@@ -160,7 +160,7 @@ object StreamingQueries extends QueryModule {
     (s: SparkSession, dir: String) => {
       val replay = graft.streaming.StreamReplay.ensureDocs(s, dir)
       val src = s.readStream
-        .schema(s.read.parquet(replay).schema)
+        .schema(Tables.parquet(s, replay).schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(replay)
         // +1: doc_id 0 at exactly epoch 0 equals the INITIAL watermark
@@ -279,7 +279,7 @@ object StreamingQueries extends QueryModule {
         maxDf = 100)
       val replay = graft.streaming.StreamReplay.ensureDocs(s, dir)
       val src = s.readStream
-        .schema(s.read.parquet(replay).schema)
+        .schema(Tables.parquet(s, replay).schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(replay)
         // probe only the pristine id-domain: the replay's sentinel
@@ -619,7 +619,7 @@ object StreamingQueries extends QueryModule {
               s"over the split fixture), got $batches")
         } finally q.stop()
       }
-      val fin = s.read.parquet(s"$sink/data")
+      val fin = Tables.parquet(s, s"$sink/data")
       val byDay = Window.partitionBy(col("day"))
         .orderBy(col("n_events").desc, col("event_type"))
       fin.withColumn("rk", row_number().over(byDay).cast("long"))

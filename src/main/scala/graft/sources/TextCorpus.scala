@@ -5,6 +5,7 @@ import java.io.File
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Tables
 import graft.operators.IndexCache
 
 /** Materializes the documents table as a REAL multi-file text
@@ -36,7 +37,7 @@ object TextCorpus {
     IndexCache.ensure("graft-text-docs", s"$dir/documents.parquet", "r1",
       marker = "_TEXT_OK") { scratch =>
       new File(scratch).mkdirs()
-      spark.read.parquet(s"$dir/documents.parquet")
+      Tables.parquet(spark, s"$dir/documents.parquet")
         .select(col("source"), col("doc_id"), col("text"))
         .repartition(col("source"))
         .sortWithinPartitions(col("source"), col("doc_id"))

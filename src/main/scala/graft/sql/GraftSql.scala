@@ -24,9 +24,11 @@ object GraftSql {
 
   /** Table-name → lazy accessor thunks: evaluation is deferred until a
     * query actually references the table, because an accessor call
-    * touches the parquet footer (and `events` normalizes its schema) —
-    * eager evaluation would make ONE unreadable table fail every SQL
-    * query on the session, including ones that never mention it.
+    * lists the table's files, reads its parquet footers on a
+    * schema-cache miss ([[Tables.parquet]]), and `events` normalizes
+    * its schema — eager evaluation would make ONE unreadable table
+    * fail every SQL query on the session, including ones that never
+    * mention it.
     */
   private def accessors(tt: Tables): ListMap[String, () => DataFrame] =
     ListMap(

@@ -5,6 +5,7 @@ import java.io.File
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Tables
 import graft.operators.IndexCache
 
 /** Multi-batch replay fixtures for the streaming gate rows.
@@ -78,7 +79,7 @@ object StreamReplay {
   def ensureEvents(spark: SparkSession, dir: String): String =
     IndexCache.ensure("graft-replay-events", s"$dir/events.parquet", "r2",
       marker = "_REPLAY_OK") { scratch =>
-      val ev = spark.read.parquet(s"$dir/events.parquet")
+      val ev = Tables.parquet(spark, s"$dir/events.parquet")
       val tsType = ev.schema("ts").dataType
       def tsAt(epochSeconds: Long) =
         graft.core.EventTime.rawLiteral(tsType, epochSeconds)
@@ -115,7 +116,7 @@ object StreamReplay {
   def ensureDocs(spark: SparkSession, dir: String): String =
     IndexCache.ensure("graft-replay-docs", s"$dir/documents.parquet", "r2",
       marker = "_REPLAY_OK") { scratch =>
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.parquet(spark, s"$dir/documents.parquet")
       val r = docs.agg(min(col("doc_id")), max(col("doc_id"))).head()
       val (minId, maxId) = (r.getLong(0), r.getLong(1))
       val (c1, c2) = (minId + (maxId - minId) / 3, minId + 2 * (maxId - minId) / 3)

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Tables
 import graft.operators.{Dedup, DedupIndex}
 
 /** Streaming probe of the at-rest [[DedupIndex]]: flag documents in an
@@ -55,14 +56,14 @@ object StreamingDedupIndex {
     val signed = Dedup.withMinhashSignature(enough, textCol, "sig", n, k)
       .select(col(idCol).as("doc"), col("sig"), col(tsCol).as("__ts"))
     val banded = Dedup.bandRows(signed, bands, rows, carry = Seq("sig", "__ts"))
-    val idx = spark.read.parquet(s"$path/bands")
+    val idx = Tables.parquet(spark, s"$path/bands")
       .select(col("doc").as("match_doc"), col("band"), col("bh"))
     val cand = banded
       .join(idx, Seq("band", "bh")) // stream-static inner join, stateless
       .filter(col("doc") =!= col("match_doc"))
       .withWatermark("__ts", horizon)
       .dropDuplicatesWithinWatermark("doc", "match_doc")
-    val sigs = spark.read.parquet(s"$path/sigs")
+    val sigs = Tables.parquet(spark, s"$path/sigs")
       .select(col("doc").as("match_doc"), col("sig").as("__msig"))
     val est = aggregate(
       zip_with(col("sig"), col("__msig"),
