@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.core.GraftSession
 
 /** The measurement plumbing every harness main shares (Bench, Verify,
-  * SqlRunner, QCheck, ScaleSmoke): driver session set-up, the noop-write
+  * SqlRunner, QCheck): driver session set-up, the noop-write
   * action, a timed window with its contention evidence, the between-run
   * settle, and the JSON/number formatting their output lines use.
   */

@@ -22,16 +22,15 @@ import org.apache.spark.sql.DataFrame
   */
 object Parallelism {
 
-  /** Ceiling on the bytes a fan-out repartition may move (override
-    * with conf `spark.graft.fanout.maxBytes`). On `local[32]` the
-    * wrapped inputs are single-digit MB, far under any sane value; the
-    * guard exists for big clusters, where `parts < cores` alone no
-    * longer implies the shuffle is cheap — 2000 cores × 128 MB splits
-    * would admit a ~256 GB under-split table. Past the ceiling the
-    * scan's own split count is the honest parallelism and the
-    * repartition is skipped.
+  /** Ceiling on the bytes a fan-out repartition may move. On
+    * `local[32]` the wrapped inputs are single-digit MB, far under any
+    * sane value; the guard exists for big clusters, where
+    * `parts < cores` alone no longer implies the shuffle is cheap —
+    * 2000 cores × 128 MB splits would admit a ~256 GB under-split
+    * table. Past the ceiling the scan's own split count is the honest
+    * parallelism and the repartition is skipped.
     */
-  private val DefaultFanOutMaxBytes: Long = 8L << 30
+  private val FanOutMaxBytes: Long = 8L << 30
 
   /** `df` repartitioned to `defaultParallelism` when its physical scan
     * compiles to fewer partitions than that AND its estimated input
@@ -41,14 +40,18 @@ object Parallelism {
     * exchange. Row order is not preserved (callers in the catalog all
     * aggregate or sort downstream).
     */
-  def fanOutSmallScan(df: DataFrame): DataFrame = {
+  def fanOutSmallScan(df: DataFrame): DataFrame =
+    fanOutSmallScanWith(df, FanOutMaxBytes)
+
+  /** [[fanOutSmallScan]] with the byte ceiling pinned — the spec entry
+    * that forces the refuse-past-the-ceiling side at test scale.
+    */
+  private[graft] def fanOutSmallScanWith(df: DataFrame,
+                                         maxBytes: Long): DataFrame = {
     val cores = df.sparkSession.sparkContext.defaultParallelism
     // .rdd compiles the plan (no job for an exchange-free scan); the
     // derived lineage is discarded — only the split count is read
     val parts = df.rdd.getNumPartitions
-    val maxBytes = df.sparkSession.conf
-      .getOption("spark.graft.fanout.maxBytes").map(_.toLong)
-      .getOrElse(DefaultFanOutMaxBytes)
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     if (parts >= cores || bytes > BigInt(maxBytes)) df
     else df.repartition(cores)

@@ -20,8 +20,7 @@ object Graph {
     * close-join bloom prefilter over (~9.6 MB serialized at 1% fpp —
     * the literal rides every task binary, so the ceiling is a
     * broadcast-budget call, same regime as Spark's own
-    * autoBroadcastJoinThreshold). Conf override:
-    * `spark.graft.triangles.closeBloomMaxEdges` (0 disables).
+    * autoBroadcastJoinThreshold).
     */
   private[graft] val DefaultCloseBloomMaxEdges = 8000000L
 
@@ -448,9 +447,8 @@ object Graph {
     * CLOSE-JOIN BLOOM PREFILTER: most wedges do not close (the sf0.1
     * co-purchase graph closes ~1.9 M of 41 M wedges), yet every wedge
     * used to ride the close join's exchange. When the canonical edge
-    * count fits [[DefaultCloseBloomMaxEdges]] (override with conf
-    * `spark.graft.triangles.closeBloomMaxEdges`; 0 disables), a bloom
-    * over `xxhash64(a, b)` of the edge set — built distributed, ~1.2 MB
+    * count fits [[DefaultCloseBloomMaxEdges]], a bloom over
+    * `xxhash64(a, b)` of the edge set — built distributed, ~1.2 MB
     * per million edges at 1% fpp — rides the wedge stage as a codegen'd
     * literal probe, killing non-closing wedges BEFORE the exchange;
     * xxhash64 collisions and bloom false positives only pass extra rows
@@ -463,12 +461,15 @@ object Graph {
     */
   def triangleCounts(edges: DataFrame, waves: Int = 1): DataFrame = {
     require(waves >= 1, s"waves must be >= 1, got $waves")
-    triangleCountsOver(canonicalUnd(edges), Some(waves))
+    triangleCountsWith(edges, Some(waves))
   }
 
-  /** Shared body of [[triangleCounts]] and [[triangleCountsAuto]] over
-    * an already-canonical edge relation. `fixedWaves = None` is the
-    * auto path: the wave count derives from the exact wedge volume,
+  /** Shared body of [[triangleCounts]] and [[triangleCountsAuto]], with
+    * both size gates as parameters so specs can force either side at
+    * test scale: `closeBloomMaxEdges` is the bloom ceiling (0 disables
+    * the prefilter) and `scratchBudgetBytes` the per-wave budget the
+    * auto path sizes waves against. `fixedWaves = None` is the auto
+    * path: the wave count derives from the exact wedge volume,
     * counted with one O(nodes) aggregate over the SAME persisted
     * orientation the single-pass join consumes — the earlier
     * compose-from-public-parts auto (wedgeVolume(edges) then
@@ -476,45 +477,18 @@ object Graph {
     * pipeline and re-ran the orientation joins, measured +35% on g2's
     * bench wall (round 16, BENCH_NOTES_r16.md / OPTIMIZATION_r16.md).
     */
-  private def triangleCountsOver(undPlan: DataFrame,
-                                 fixedWaves: Option[Int]): DataFrame = {
-    // orient each edge toward the (degree, id)-larger endpoint
-    def orient(und: DataFrame): DataFrame = {
-      val deg = und.select(col("a").as("n"))
-        .unionAll(und.select(col("b").as("n")))
-        .groupBy(col("n")).agg(count(lit(1)).as("d"))
-      und
-        .join(deg.select(col("n").as("a"), col("d").as("__da")), "a")
-        .join(deg.select(col("n").as("b"), col("d").as("__db")), "b")
-        .select(
-          when(col("__da") < col("__db") ||
-              (col("__da") === col("__db") && col("a") < col("b")),
-            struct(col("a").as("u"), col("b").as("v")))
-            .otherwise(struct(col("b").as("u"), col("a").as("v")))
-            .as("e"))
-        .select(col("e.u").as("u"), col("e.v").as("v"))
-    }
-    // wedges at each triangle's (degree, id)-minimum vertex; the pair
-    // (x, y) is kept in id order so closing it is one equi-join on
-    // the canonical edge set. A wedge's BOTH legs share its apex u, so
-    // restricting the apex to one hash class builds each wedge in
-    // exactly one wave — the per-wave pipeline is the whole-graph
-    // pipeline over 1/waves of the wedge volume, and the union of
-    // waves is exactly the single-pass answer.
+  private[graft] def triangleCountsWith(
+      edges: DataFrame, fixedWaves: Option[Int],
+      closeBloomMaxEdges: Long = DefaultCloseBloomMaxEdges,
+      scratchBudgetBytes: Long = DefaultWaveScratchBytes): DataFrame = {
+    val undPlan = canonicalUnd(edges)
     // serialized bloom over the canonical edge fingerprints, or None
     // when the edge set out-sizes the broadcast-a-bloom regime (see
     // scaladoc) — sized by an exact count of the already-materialized
     // edge relation, built distributed by df.stat
     def closeBloom(und: DataFrame): Option[Array[Byte]] = {
-      val confKey = "spark.graft.triangles.closeBloomMaxEdges"
-      val ceiling = undPlan.sparkSession.conf.getOption(confKey)
-        .map(v => v.toLongOption.getOrElse(throw new IllegalArgumentException(
-          s"$confKey must be a plain long edge count (0 disables the " +
-            s"bloom prefilter); got '$v' — size suffixes ('8M') are " +
-            "not supported")))
-        .getOrElse(DefaultCloseBloomMaxEdges)
-      val m = if (ceiling <= 0) Long.MaxValue else und.count()
-      if (m > ceiling) None
+      val m = if (closeBloomMaxEdges <= 0) Long.MaxValue else und.count()
+      if (m > closeBloomMaxEdges) None
       else {
         val bloom = und.select(xxhash64(col("a"), col("b")).as("k"))
           .stat.bloomFilter("k", math.max(m, 1L), 0.01)
@@ -523,6 +497,13 @@ object Graph {
         Some(out.toByteArray)
       }
     }
+    // wedges at each triangle's (degree, id)-minimum vertex; the pair
+    // (x, y) is kept in id order so closing it is one equi-join on
+    // the canonical edge set. A wedge's BOTH legs share its apex u, so
+    // restricting the apex to one hash class builds each wedge in
+    // exactly one wave — the per-wave pipeline is the whole-graph
+    // pipeline over 1/waves of the wedge volume, and the union of
+    // waves is exactly the single-pass answer.
     def corners(oriented: DataFrame, und: DataFrame,
                 bloom: Option[Array[Byte]],
                 nWaves: Int, wv: Int, hints: Boolean): DataFrame = {
@@ -548,18 +529,10 @@ object Graph {
     // single-pass join; never materialized on the fixed-waves path
     // (which orients straight into the bucketed table write)
     lazy val orientedCached = orient(und).persist(StorageLevel.MEMORY_AND_DISK)
-    val waves = fixedWaves.getOrElse {
-      val budget = undPlan.sparkSession.conf
-        .getOption("spark.graft.waves.scratchBytes")
-        .map(_.toLong).getOrElse(20L * 1000 * 1000 * 1000)
-      // exact oriented wedge volume Σ C(outdeg, 2) — one aggregate
-      // over the cached orientation the join reuses
-      val wedges = orientedCached
-        .groupBy(col("u")).agg(count(lit(1)).as("od"))
-        .agg(coalesce(sum(expr("od * (od - 1) div 2")), lit(0L)).as("w"))
-        .head().getLong(0)
-      wavesFor(wedges, budget)
-    }
+    // auto: the exact wedge volume, one aggregate over the cached
+    // orientation the join reuses
+    val waves = fixedWaves.getOrElse(
+      wavesFor(wedgesOf(orientedCached), scratchBudgetBytes))
     if (waves == 1) {
       // single-pass: persisted in-memory relations feed both join
       // sides within the one job; AQE sizes them at runtime (broadcast
@@ -617,10 +590,8 @@ object Graph {
           // hiccup for every concurrent query, the scratch spreads
           // over executors' local disks, and spark.cleaner.periodicGC
           // (default 30 min) already bounds it — so the nudge is
-          // LOCAL-MODE-ONLY unless spark.graft.waves.gcNudge overrides.
-          val nudge = spark.conf.getOption("spark.graft.waves.gcNudge")
-            .map(_.toBoolean).getOrElse(spark.sparkContext.isLocal)
-          if (nudge) System.gc()
+          // LOCAL-MODE-ONLY.
+          if (spark.sparkContext.isLocal) System.gc()
           p
         }
         partials.reduce(_ unionAll _)
@@ -646,7 +617,7 @@ object Graph {
     * join.
     */
   def wedgeVolume(edges: DataFrame): Long =
-    wedgeVolumeOf(canonicalUnd(edges))
+    wedgesOf(orient(canonicalUnd(edges)))
 
   /** The canonical undirected edge set (a < b, loopless, distinct) —
     * the shared first stage of [[triangleCounts]], [[wedgeVolume]] and
@@ -660,20 +631,34 @@ object Graph {
       .filter(col("a") =!= col("b"))
       .distinct()
 
-  private def wedgeVolumeOf(und: DataFrame): Long = {
+  /** The degree orientation over a canonical edge set: each edge
+    * `(a, b)` becomes `(u, v)` pointing toward its (degree, id)-larger
+    * endpoint, so every triangle has exactly one vertex (its minimum)
+    * with two out-edges.
+    */
+  private def orient(und: DataFrame): DataFrame = {
     val deg = und.select(col("a").as("n"))
       .unionAll(und.select(col("b").as("n")))
       .groupBy(col("n")).agg(count(lit(1)).as("d"))
     und
       .join(deg.select(col("n").as("a"), col("d").as("__da")), "a")
       .join(deg.select(col("n").as("b"), col("d").as("__db")), "b")
-      .select(when(col("__da") < col("__db") ||
-          (col("__da") === col("__db") && col("a") < col("b")),
-        col("a")).otherwise(col("b")).as("u"))
-      .groupBy(col("u")).agg(count(lit(1)).as("od"))
+      .select(
+        when(col("__da") < col("__db") ||
+            (col("__da") === col("__db") && col("a") < col("b")),
+          struct(col("a").as("u"), col("b").as("v")))
+          .otherwise(struct(col("b").as("u"), col("a").as("v")))
+          .as("e"))
+      .select(col("e.u").as("u"), col("e.v").as("v"))
+  }
+
+  /** Exact wedge volume Σ_u C(out-degree(u), 2) of an oriented edge
+    * set — one O(nodes) aggregate.
+    */
+  private def wedgesOf(oriented: DataFrame): Long =
+    oriented.groupBy(col("u")).agg(count(lit(1)).as("od"))
       .agg(coalesce(sum(expr("od * (od - 1) div 2")), lit(0L)).as("w"))
       .head().getLong(0)
-  }
 
   /** Measured close-join scratch per wedge (shuffle write of the wedge
     * stream + its sort-free hash-join structures; SCALING_r09/r10:
@@ -681,25 +666,28 @@ object Graph {
     */
   private val BytesPerWedge = 32L
 
+  /** Per-wave shuffle scratch [[triangleCountsAuto]] sizes waves
+    * against: 20 GB, the in-box per-wave ceiling the SCALING_r09/r10
+    * studies ran at.
+    */
+  private[graft] val DefaultWaveScratchBytes: Long = 20L * 1000 * 1000 * 1000
+
   /** [[triangleCounts]] with the wave count DERIVED from the measured
     * wedge volume instead of guessed by the caller — the default entry
     * point at data scales where the wedge join's shuffle scratch may
     * out-size the node (the 100 TB posture: a graph too big to
     * eyeball is exactly a graph whose wedge volume nobody knows ahead
     * of time). waves = ceil(wedges × 32 B / budget), where the budget
-    * is `spark.graft.waves.scratchBytes` (default 20 GB — the in-box
-    * per-wave ceiling the SCALING_r09/r10 studies ran at; on a
-    * cluster set it to the aggregate executor scratch you are willing
-    * to pin). The pre-pass costs one O(edges) aggregate pipeline
-    * ([[wedgeVolume]]); with bucketed fixed relations a waved run
-    * costs no more per wedge than single-pass (SCALING_r11: 2-wave
-    * 30x at 0.173 s/M wedges vs 0.451 single-pass, same JVM), so
-    * over-waving is cheap insurance while under-waving is an
-    * out-of-disk abort — auto-sizing errs on the waved side via
-    * ceil.
+    * is [[DefaultWaveScratchBytes]]. The pre-pass costs one O(edges)
+    * aggregate pipeline ([[wedgeVolume]]); with bucketed fixed
+    * relations a waved run costs no more per wedge than single-pass
+    * (SCALING_r11: 2-wave 30x at 0.173 s/M wedges vs 0.451
+    * single-pass, same JVM), so over-waving is cheap insurance while
+    * under-waving is an out-of-disk abort — auto-sizing errs on the
+    * waved side via ceil.
     */
   def triangleCountsAuto(edges: DataFrame): DataFrame =
-    triangleCountsOver(canonicalUnd(edges), None)
+    triangleCountsWith(edges, None)
 
   /** ceil(wedges × 32 B / budget), floored at one wave. */
   private[graft] def wavesFor(wedges: Long, budgetBytes: Long): Int = {

@@ -2,6 +2,8 @@ package graft.operators
 
 import java.io.File
 
+import graft.core.Scratch
+
 /** Build-once / reuse-many cache for local index-at-rest artifacts
   * ([[DedupIndex.ensure]], [[IvfIndex.ensure]]), hardened beyond a bare
   * completion-marker check in two ways:
@@ -66,12 +68,12 @@ private[graft] object IndexCache {
           // must be cleared and the rename retried — discarding the
           // fresh build there would return a broken index forever.
           if (new File(s"$path/$marker").exists())
-            deleteRecursively(new File(scratch))
+            Scratch.delete(new File(scratch))
           else {
-            deleteRecursively(new File(path))
+            Scratch.delete(new File(path))
             if (!new File(scratch).renameTo(new File(path))) {
               val rescued = new File(s"$path/$marker").exists()
-              deleteRecursively(new File(scratch))
+              Scratch.delete(new File(scratch))
               if (!rescued)
                 sys.error(s"IndexCache: cannot install index at $path " +
                   "(occupied by an unremovable non-index directory)")
@@ -92,10 +94,5 @@ private[graft] object IndexCache {
     java.security.MessageDigest.getInstance("MD5")
       .digest(listing.getBytes("UTF-8"))
       .take(6).map("%02x".format(_)).mkString
-  }
-
-  private def deleteRecursively(f: File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete()
   }
 }

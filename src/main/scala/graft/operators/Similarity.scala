@@ -416,25 +416,6 @@ object Similarity {
         (lit(1L) - coalesce(col("__dropped"), lit(0L))).as("kept"))
   }
 
-  /** Per-cell population under `nassign`-way assignment against fixed
-    * centroids — the Σ|cell|² accounting behind [[semanticDedup]]'s
-    * 100 TB contract: within-cell pair work is Σ_c |c|² (times the
-    * ≤ nassign² multi-assignment constant), so this SERIES across a
-    * scale decade — not wall time — is the number that predicts 100×
-    * behavior. Emitted by the scaling study per scale multiple.
-    */
-  def cellPopulations(vecs: DataFrame, centroids: Seq[Seq[Double]],
-                      nassign: Int = 2,
-                      vecCol: String = "embedding"): DataFrame = {
-    require(nassign >= 1 && nassign <= centroids.size,
-      s"nassign must be in [1, ${centroids.size}], got $nassign")
-    vecs.select(asDouble(col(vecCol)).as("v"))
-      .withColumn("cell", explode(transform(
-        slice(cellsByDistance(col("v"), centroids), 1, nassign),
-        s => s.getField("cell"))))
-      .groupBy(col("cell")).agg(count(lit(1)).as("n"))
-  }
-
   /** Per-group element-wise mean vector — the centroid step every
     * vector-quantizer training loop (IVF/k-means, product quantization)
     * runs once per iteration, exposed as a standalone verified op.

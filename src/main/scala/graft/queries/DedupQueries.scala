@@ -669,7 +669,7 @@ object DedupQueries extends QueryModule {
     * not ship its own scale-killer as a differential), and the
     * breaker's default candidateBudget stands. The 100-TB-shaped
     * default is the blocked d12b twin below; the growing-corpus
-    * population stays measured by the ScaleSmoke d12 series.
+    * population's candidate series is in SCALING_r08/r09.
     */
   private val fuzzyJoin = CatalogQuery(
     "d12_edit_distance_join",

@@ -5,7 +5,7 @@ import java.io.File
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Scratch, Tables}
 import graft.operators.IndexCache
 
 /** Multi-batch replay fixtures for the streaming gate rows.
@@ -149,16 +149,11 @@ object StreamReplay {
       val dest = new File(dir, s"$k.parquet")
       java.nio.file.Files.move(part.toPath, dest.toPath,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      deleteRecursively(stage)
+      Scratch.delete(stage)
       require(dest.setLastModified(baseMtime + k * 60000L),
         s"cannot stamp replay mtime on $dest")
     }
     require(new File(dir, "_REPLAY_OK").createNewFile(),
       s"cannot write replay marker in $dir")
-  }
-
-  private def deleteRecursively(f: File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete()
   }
 }

@@ -187,6 +187,18 @@ class GraphSpec extends SparkSpecBase {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
+  // per-node triangle counts by enumerating every vertex triple
+  private def bruteTri(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val und = edges.collect { case (a, b) if a != b =>
+      (math.min(a, b), math.max(a, b)) }.toSet
+    (for {
+      Seq(x, y, z) <- und.flatMap(e => Seq(e._1, e._2)).toSeq.distinct.sorted
+        .combinations(3).toSeq
+      if und((x, y)) && und((y, z)) && und((x, z))
+      node <- Seq(x, y, z)
+    } yield node).groupBy(identity).map { case (k, v) => k -> v.size.toLong }
+  }
+
   test("triangles: hand graphs — triangle, square, K4, star, dup/reversed edges") {
     assert(tri(Seq((1L, 2L), (2L, 3L), (3L, 1L))) ==
       Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
@@ -207,14 +219,7 @@ class GraphSpec extends SparkSpecBase {
     val n = 30
     val edges = (1 to 120).map(_ =>
       (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-    val und = edges.collect { case (a, b) if a != b =>
-      (math.min(a, b), math.max(a, b)) }.toSet
-    val expected = (for {
-      Seq(x, y, z) <- und.flatMap(e => Seq(e._1, e._2)).toSeq.distinct.sorted
-        .combinations(3).toSeq
-      if und((x, y)) && und((y, z)) && und((x, z))
-      node <- Seq(x, y, z)
-    } yield node).groupBy(identity).map { case (k, v) => k -> v.size.toLong }
+    val expected = bruteTri(edges)
     assert(tri(edges) == expected)
   }
 
@@ -263,14 +268,34 @@ class GraphSpec extends SparkSpecBase {
     val single = tri(edges)
     assert(single.nonEmpty)
     val df = edges.toDF("src", "dst")
-    spark.conf.set("spark.graft.waves.scratchBytes", "64")
-    try {
-      assert(Graph.wavesFor(Graph.wedgeVolume(df), 64L) > 1,
-        "fixture must actually engage waved execution")
-      val auto = Graph.triangleCountsAuto(df)
+    assert(Graph.wavesFor(Graph.wedgeVolume(df), 64L) > 1,
+      "fixture must actually engage waved execution")
+    val auto = Graph.triangleCountsWith(df, None, scratchBudgetBytes = 64L)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(auto == single)
+  }
+
+  test("triangles: with the close-join bloom forced off (ceiling 0) the " +
+    "answer equals the bloom-on answer and brute force, single-pass " +
+    "and waved") {
+    val s = spark
+    import s.implicits._
+    val rnd = new scala.util.Random(2468)
+    val n = 30
+    val edges = (1 to 150).map(_ =>
+      (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+    val expected = bruteTri(edges)
+    assert(expected.nonEmpty, "fixture must contain triangles")
+    val df = edges.toDF("src", "dst")
+    def counts(waves: Int, ceiling: Long): Map[Long, Long] =
+      Graph.triangleCountsWith(df, Some(waves), closeBloomMaxEdges = ceiling)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(auto == single)
-    } finally spark.conf.unset("spark.graft.waves.scratchBytes")
+    for (waves <- Seq(1, 3)) {
+      val bloomOn = counts(waves, Graph.DefaultCloseBloomMaxEdges)
+      val bloomOff = counts(waves, 0L)
+      assert(bloomOn == expected, s"bloom on, waves=$waves")
+      assert(bloomOff == expected, s"bloom off, waves=$waves")
+    }
   }
 
   private def bfs(edges: Seq[(Long, Long)], source: Long,

@@ -30,19 +30,10 @@ class ParallelismSpec extends SparkSpecBase {
   test("fanOutSmallScan refuses past the byte ceiling (under-split on a " +
     "big cluster is not a license for a huge round-robin shuffle)") {
     val df = parquetOf(200)
-    val key = "spark.graft.fanout.maxBytes"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "1") // 1 byte: every real scan exceeds it
-    try {
-      val same = Parallelism.fanOutSmallScan(df)
-      assert(same.rdd.getNumPartitions == df.rdd.getNumPartitions,
-        "repartition must be skipped when the estimated input size " +
-          "exceeds the fan-out ceiling")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
+    // 1 byte: every real scan exceeds it
+    val same = Parallelism.fanOutSmallScanWith(df, maxBytes = 1L)
+    assert(same.rdd.getNumPartitions == df.rdd.getNumPartitions,
+      "repartition must be skipped when the estimated input size " +
+        "exceeds the fan-out ceiling")
   }
 }

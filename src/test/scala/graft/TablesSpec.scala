@@ -175,5 +175,13 @@ class TablesSpec extends SparkSpecBase {
     }
     assert(hits.isEmpty,
       s"read parquet through graft.core.Tables.parquet: ${hits.mkString("; ")}")
+    // size gates are constants or private[graft] parameters a spec can
+    // force, never a session conf knob
+    val knob = "\"spark\\.graft\\.".r
+    val knobs = (files :+ helper).flatMap { f =>
+      knob.findAllMatchIn(Files.readString(f)).map(_ => f.toString)
+    }
+    assert(knobs.isEmpty,
+      s"src/main reads a spark.graft.* session conf key: ${knobs.mkString("; ")}")
   }
 }
