@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   * symbols). Per iteration: one pair explode + hash aggregate + a
   * 1-row argmax to the driver (bounded by construction, the IVF
   * centroid pattern), then one codegen'd literal replace over the
-  * vocabulary. Lineage is cut per iteration by an eager
-  * localCheckpoint so plans stay constant-size (see [[cutLineage]]).
+  * vocabulary. Lineage is cut per iteration through [[Lineage.Rounds]]
+  * so plans stay constant-size.
   *
   * Determinism contract (what the DuckDB oracle replays exactly):
   * symbols are space-joined inside a space-padded representation, the
@@ -64,11 +64,6 @@ object Bpe {
   def learnMerges(docs: DataFrame, textCol: String, nMerges: Int): DataFrame =
     result(docs.sparkSession, learnMergeList(docs, textCol, nMerges))
 
-  /** [[learnMerges]] as a driver-side list — the form [[encode]] folds
-    * into a replace chain. Same cost contract; the list is bounded by
-    * [[MaxMerges]], so holding it on the driver is O(vocabulary entry),
-    * not O(data).
-    */
   /** Word-frequency table → padded space-joined char representation. */
   private def buildReprs(docs: DataFrame, textCol: String): DataFrame =
     docs
@@ -96,16 +91,16 @@ object Bpe {
       lit(Pattern.quote(s" $pair ")),
       lit(Matcher.quoteReplacement(s" ${pair.replace(" ", "")} ")))
 
-  /** Eager lineage cut for the per-round vocabulary. localCheckpoint,
-    * NOT persist: a persisted round still carries the previous round's
-    * InMemoryRelation inside its plan, so after R rounds every job
-    * submission renders an R-deep nested AQE plan string — measured
-    * EXPONENTIAL in R on the driver (a 3× tagged corpus at R≈12 spun
-    * the driver 12+ minutes in generateTreeString while all executors
-    * idled). The checkpoint's LogicalRDD plan is flat at every round.
+  /** [[learnMerges]] as a driver-side list — the form [[encode]] folds
+    * into a replace chain. Same cost contract; the list is bounded by
+    * [[MaxMerges]], so holding it on the driver is O(vocabulary entry),
+    * not O(data). Each round's vocabulary is cut through
+    * [[Lineage.Rounds]] — never persisted: a persisted round carries the
+    * previous round's InMemoryRelation inside its plan, measured
+    * EXPONENTIAL in rounds at job submission (a 3× tagged corpus at
+    * R≈12 spun the driver 12+ minutes in generateTreeString) — and the
+    * last round is freed on return, since only the list survives.
     */
-  private def cutLineage(df: DataFrame): DataFrame = df.localCheckpoint(true)
-
   def learnMergeList(docs: DataFrame, textCol: String,
                      nMerges: Int): Seq[(Int, String, Long)] = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
@@ -113,24 +108,20 @@ object Bpe {
       s"nMerges = $nMerges exceeds MaxMerges = $MaxMerges: each merge is " +
         "a sequential Spark job + driver round-trip (see the cost " +
         "contract); learn large vocabularies in a dedicated run")
-    var reprs = cutLineage(buildReprs(docs, textCol))
+    val loop = new Lineage.Rounds
+    var reprs = loop.next(buildReprs(docs, textCol))
     val merges = Seq.newBuilder[(Int, String, Long)]
-    def release(): Unit =
-      Lineage.snapshotRdd(reprs).foreach(_.unpersist(blocking = false))
-    for (i <- 1 to nMerges) {
+    try for (i <- 1 to nMerges) {
       // 1-row argmax with a total tie-break — the only driver-side
       // collect, bounded at one row per iteration
       val best = pairCounts(reprs)
         .orderBy(col("f").desc, col("pair")).limit(1).collect()
-      if (best.isEmpty) { release(); return merges.result() }
+      if (best.isEmpty) return merges.result()
       val (pair, f) = (best(0).getString(0), best(0).getLong(1))
       merges += ((i, pair, f))
-      val next = cutLineage(reprs
+      reprs = loop.next(reprs
         .select(applyMerge(col("repr"), pair).as("repr"), col("freq")))
-      release()
-      reprs = next
-    }
-    release()
+    } finally loop.release()
     merges.result()
   }
 
@@ -170,22 +161,19 @@ object Bpe {
                           batchSize: Int = 32): Seq[(Int, String, Long, Int)] = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
     require(batchSize >= 1, s"batchSize must be >= 1, got $batchSize")
-    var reprs = cutLineage(buildReprs(docs, textCol))
+    val loop = new Lineage.Rounds
+    var reprs = loop.next(buildReprs(docs, textCol))
     val merges = Seq.newBuilder[(Int, String, Long, Int)]
-    def release(): Unit =
-      Lineage.snapshotRdd(reprs).foreach(_.unpersist(blocking = false))
     var learned = 0
     var round = 0
-    while (learned < nMerges) {
+    try while (learned < nMerges) {
       round += 1
       val want = math.min(batchSize, nMerges - learned)
       // bounded collect: 4x the batch gives the greedy scan headroom
       // to skip conflicting candidates; still O(batchSize) rows
       val ranked = pairCounts(reprs)
         .orderBy(col("f").desc, col("pair")).limit(want * 4).collect()
-      if (ranked.isEmpty) {
-        release(); return merges.result()
-      }
+      if (ranked.isEmpty) return merges.result()
       val used = scala.collection.mutable.Set.empty[String]
       val picks = Seq.newBuilder[(String, Long)]
       var kept = 0
@@ -204,14 +192,11 @@ object Bpe {
         merges += ((learned + j + 1, p, f, round))
       }
       learned += chosen.size
-      val next = cutLineage(reprs
+      reprs = loop.next(reprs
         .select(chosen.foldLeft(col("repr")) { (c, pf) =>
           applyMerge(c, pf._1)
         }.as("repr"), col("freq")))
-      release()
-      reprs = next
-    }
-    release()
+    } finally loop.release()
     merges.result()
   }
 

@@ -74,15 +74,13 @@ object Dedup {
     * rewriting the edge set each round. Near-dup components are
     * overwhelmingly tiny cliques/chains (diameter ≤ 3), so typical
     * round counts stay 2-3; the jump is what caps the adversarial
-    * tail. Labels are eagerly `localCheckpoint`ed per round —
-    * an iterative DataFrame otherwise stacks every round's lineage
-    * into one plan and re-optimizes it all each iteration. Checkpoint
-    * blocks live OUTSIDE the CacheManager (`clearCache()` cannot free
-    * them), so each superseded round's snapshot is unpersisted
-    * explicitly once the next round lands; the final snapshot backs
+    * tail. Labels are cut per round through [[Lineage.Rounds]] — an
+    * iterative DataFrame otherwise stacks every round's lineage into
+    * one plan and re-optimizes it all each iteration — which frees
+    * each superseded round once the next lands; the final round backs
     * the returned DataFrame and is reclaimed by the ContextCleaner
     * when the caller drops it. The fixpoint test collects one COUNT
-    * per round (bounded driver data).
+    * per round (bounded driver data) off the checkpoint.
     */
   def connectedComponents(pairs: DataFrame): DataFrame =
     componentsWithRounds(pairs)._1
@@ -109,9 +107,10 @@ object Dedup {
       .unionByName(pairs.select(col("j").as("src"), col("i").as("dst")))
       .repartition(col("dst"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val loop = new Lineage.Rounds
     try {
-      var labels = edges.select(col("src").as("node")).distinct()
-        .withColumn("lab", col("node")).localCheckpoint(true)
+      var labels = loop.next(edges.select(col("src").as("node")).distinct()
+        .withColumn("lab", col("node")))
       var changed = 1L
       var rounds = 0
       while (changed > 0) {
@@ -150,10 +149,8 @@ object Dedup {
             .join(labels.select(col("node").as("lab"), col("lab").as("jlab")),
               Seq("lab"))
             .select(col("node"), col("jlab").as("lab"), col("old"))
-        val next = jumped.localCheckpoint(true)
-        changed = next.filter(col("lab") =!= col("old")).count()
-        Lineage.snapshotRdd(labels).foreach(_.unpersist(blocking = false))
-        labels = next
+        labels = loop.next(jumped)
+        changed = labels.filter(col("lab") =!= col("old")).count()
         rounds += 1
       }
       (labels.select(col("node").as("doc"), col("lab").as("cluster")), rounds)

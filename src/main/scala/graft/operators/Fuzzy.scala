@@ -141,9 +141,11 @@ object Fuzzy {
     * pair shares its block, so waves partition the
     * candidate space exactly (SCALING_r11.json: pair counts conserved,
     * max per-wave scratch ~1/waves of the whole footprint). Each wave
-    * eagerly materializes via localCheckpoint, so scratch from wave g
-    * is released before wave g+1 shuffles; the returned frame is the
-    * union of the materialized waves. Per-block gram rarity is
+    * eagerly materializes via localCheckpoint, followed in local mode by
+    * a GC nudge that lets the ContextCleaner delete its shuffle files,
+    * so scratch from wave g is released before wave g+1 shuffles
+    * ([[Lineage.unionWaves]]); the returned frame is the union of the
+    * materialized waves. Per-block gram rarity is
     * unchanged by waving (blocks are atomic within a wave), and the
     * union dedups at the same (id, string) pair grain as the whole
     * join's verify-stage distinct — under MULTI-BLOCK blocking (the
@@ -187,12 +189,7 @@ object Fuzzy {
         val bytesPerCandidate = math.max(avgL + avgR + PairOverheadBytes, 1.0)
         math.max((waveScratchBudgetBytes / bytesPerCandidate).toLong, 1L)
       }
-    val ceil = java.math.BigDecimal.valueOf(ceiling)
-    val waves =
-      if (total.compareTo(ceil) <= 0) 1
-      else if (total.compareTo(ceil.multiply(
-        java.math.BigDecimal.valueOf(maxWaves.toLong))) >= 0) maxWaves
-      else total.divide(ceil, 0, java.math.RoundingMode.CEILING).intValueExact()
+    val waves = Lineage.waves(BigInt(total.toBigIntegerExact), ceiling, maxWaves)
     onWaves(waves)
     if (waves == 1) whole.result
     else {
@@ -204,20 +201,14 @@ object Fuzzy {
       // and gram ranks are per-block, so a block's relations are
       // byte-identical whole or waved.
       def cls = pmod(xxhash64(col("__blk")), lit(waves.toLong))
-      (0 until waves).map { g =>
+      // resultKeyed (not result): the verified survivors WITH their
+      // strings, so the cross-wave distinct below dedups at exactly the
+      // whole join's verify grain (__lid, __ls, __rid, __rs) — __d is a
+      // function of the strings, so carrying it is free
+      Lineage.unionWaves(waves)(g =>
         assemble(whole.pl.filter(cls === g), whole.pr.filter(cls === g),
-            whole.l.filter(cls === g), whole.r.filter(cls === g),
-            maxDist, q)
-          // resultKeyed (not result): the verified survivors WITH their
-          // strings, so the cross-wave distinct below dedups at exactly
-          // the whole join's verify grain (__lid, __ls, __rid, __rs) —
-          // __d is a function of the strings, so carrying it is free
-          .resultKeyed
-          // EAGER per-wave materialization: wave g's shuffle scratch is
-          // gone before wave g+1 starts (the bounded-scratch point);
-          // localCheckpoint, never persist (flat LogicalRDD plan)
-          .localCheckpoint(true)
-      }.reduce(_ unionAll _)
+          whole.l.filter(cls === g), whole.r.filter(cls === g),
+          maxDist, q).resultKeyed)
         // cross-wave dedup: under multi-block blocking the same pair can
         // verify in two blocks hashing to different waves; the whole
         // join's single verify-stage distinct collapses those, so the

@@ -57,7 +57,6 @@ object Graph {
                dampNum: Long = 85L, dampDen: Long = 100L,
                totalMass: Long = 1000000000000L): DataFrame = {
     require(iters >= 1 && dampNum >= 0 && dampNum <= dampDen)
-    val spark = edges.sparkSession
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .distinct()
       .repartition(col("src"))
@@ -73,13 +72,7 @@ object Graph {
     val r0 = totalMass / n
     val base = (dampDen - dampNum) * r0 / dampDen
     var ranks = nodes.withColumn("rank", lit(r0))
-    // RDDs THIS loop checkpointed — released one round behind. Tracked
-    // explicitly rather than walking ranks' plan: on round 1 ranks is
-    // not yet a checkpoint, and a plan walk would surface (and
-    // destroy) a LogicalRDD inside the CALLER's edges argument if the
-    // caller localCheckpoint'ed it (see Lineage.snapshotRdd's safety
-    // note).
-    var owned: Option[org.apache.spark.rdd.RDD[_]] = None
+    val loop = new Lineage.Rounds
     try for (_ <- 1 to iters) {
       // `div`, not `/`: Spark's `/` on longs is DOUBLE division, and a
       // quotient whose fraction is close enough to 1 rounds UP past the
@@ -97,22 +90,14 @@ object Graph {
         .select(col("dst"), expr("rank div outdeg").as("c"))
         .groupBy("dst")
         .agg(sum(col("c")).as("s"))
-      // eager localCheckpoint, NOT persist: a persisted round carries
-      // the previous round's InMemoryRelation inside its plan, and the
-      // per-job plan rendering is exponential in that nesting depth —
-      // fine at iters=3, a driver meltdown past ~10. The checkpoint's
-      // LogicalRDD plan is flat at every round (the bfsHops
-      // discipline); partitioning is preserved, so the next round's
-      // src-join still avoids re-shuffling the edges.
-      val next = nodes
+      // cut per round (Lineage.Rounds): the checkpoint preserves
+      // partitioning, so the next round's src-join still avoids
+      // re-shuffling the edges
+      ranks = loop.next(nodes
         .join(contribs.withColumnRenamed("dst", "id"), Seq("id"), "left")
         .select(col("id"),
           expr(s"${base}L + ($dampNum * coalesce(s, 0L)) div $dampDen")
-            .cast("long").as("rank"))
-        .localCheckpoint(true)
-      owned.foreach(_.unpersist(blocking = false))
-      owned = Lineage.snapshotRdd(next)
-      ranks = next
+            .cast("long").as("rank")))
     } finally {
       // the returned ranks is a self-contained checkpoint — the setup
       // relations need not outlive the call in the cache manager
@@ -180,11 +165,12 @@ object Graph {
       .select(col("id"), col("__hasout").isNull.as("dang"))
     // position order (dangling first, id): see the Scaladoc — makes
     // the dangling share of every apportionment min(m, |D|)
-    val nodesPos = SequencePack.prefixSum(
-        nodes.withColumn("__ord",
-            struct(when(col("dang"), 0).otherwise(1).as("d"),
-              col("id").as("i")))
-          .withColumn("__w", lit(1L)), "__ord", "__w", outCol = "pos")
+    val (positioned, rangeParts) = SequencePack.rangePrefixSum(
+      nodes.withColumn("__ord",
+          struct(when(col("dang"), 0).otherwise(1).as("d"),
+            col("id").as("i")))
+        .withColumn("__w", lit(1L)), Seq("__ord"), "__w", outCol = "pos")
+    val nodesPos = positioned
       .select(col("id"), col("pos"), col("dang"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val (n, nDang) = {
@@ -200,9 +186,7 @@ object Graph {
     var ranks: DataFrame = nodesPos.withColumn("rank",
       lit(r0) + when(col("pos") < lit(totalMass % n), 1L).otherwise(0L))
     var dangling = nDang * r0 + math.min(totalMass % n, nDang)
-    // owned-RDD tracking, the g1 discipline: never walk ranks' plan on
-    // round 1 (it would surface a caller-checkpointed edges RDD)
-    var owned: Option[org.apache.spark.rdd.RDD[_]] = None
+    val loop = new Lineage.Rounds
     try for (_ <- 1 to iters) {
       val q = dangling / n
       // shuffle_hash on the rank side — the g1 rationale verbatim
@@ -212,16 +196,13 @@ object Graph {
         .select(col("dst"), expr("rank div outdeg").as("c"))
         .groupBy("dst")
         .agg(sum(col("c")).as("s"))
-      // eager localCheckpoint per round (the g1/bfsHops discipline):
-      // rPrime is consumed twice (the round scalar + next round's
-      // plan), and an uncut chain of rounds renders exponentially at
-      // job submission
-      val rPrime = nodesPos
+      // cut per round: rPrime is consumed twice (the round scalar +
+      // next round's plan), both reading the checkpoint
+      val rPrime = loop.next(nodesPos
         .join(contribs.withColumnRenamed("dst", "id"), Seq("id"), "left")
         .select(col("id"), col("pos"), col("dang"),
           expr(s"${base}L + ($dampNum * (coalesce(s, 0L) + ${q}L)) " +
-            s"div $dampDen").cast("long").as("rank"))
-        .localCheckpoint(true)
+            s"div $dampDen").cast("long").as("rank")))
       // THE round's one driver action: Σ R' (→ δ, every truncation
       // only LOSES mass vs the real-arithmetic recurrence, so δ ≥ 0)
       // and Σ_D R' (→ next round's dangling mass, closed-form under
@@ -231,15 +212,15 @@ object Graph {
       val delta = totalMass - sums.getLong(0)
       val sumDang = sums.getLong(1)
       dangling = sumDang + nDang * (delta / n) + math.min(delta % n, nDang)
-      owned.foreach(_.unpersist(blocking = false))
-      owned = Lineage.snapshotRdd(rPrime)
       ranks = rPrime.select(col("id"), col("pos"), col("dang"),
         (col("rank") + lit(delta / n) +
           when(col("pos") < lit(delta % n), 1L).otherwise(0L)).as("rank"))
     } finally {
       // the returned projection roots in the final round's checkpoint —
-      // release the setup relations (e's cache also backs deg/edgesDeg)
+      // release the setup relations (e's cache also backs deg/edgesDeg,
+      // the prefix sum's range partitioning backs nodesPos)
       e.unpersist(); edgesDeg.unpersist(); nodesPos.unpersist()
+      rangeParts.unpersist()
     }
     ranks.select(col("id"), col("rank"))
   }
@@ -259,36 +240,28 @@ object Graph {
     * out-degree), and on a 100 TB graph the cost tracks the expanding
     * wavefront, not hops × |V|. The adjacency is repartitioned on
     * `src` once and persisted; frontiers arrive hashed on the same
-    * key, so the per-hop join re-shuffles only the (small) frontier.
-    * Visited-set lineage is cut by persist + materialize each round,
-    * keeping plans constant-size across iterations (the [[Dedup]]
-    * components-loop discipline).
+    * key, so the per-hop join re-shuffles only the (small) frontier,
+    * and is unpersisted when the call returns. The visited set is
+    * checkpointed each round through [[Lineage.Rounds]], which keeps
+    * plans constant-size across iterations and frees the round each
+    * new one replaces.
     */
   def bfsHops(edges: DataFrame, source: Long, iters: Int): DataFrame = {
     require(iters >= 0)
     val spark = edges.sparkSession
-    // undirected adjacency: both directions of every edge, self-loops
-    // dropped, deduplicated
-    val dir = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    val adj = dir
-      .unionAll(dir.select(col("dst").as("src"), col("src").as("dst")))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-      .repartition(col("src"))
+    val adj = undirected(edges).repartition(col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     import spark.implicits._
-    // per-round state is eagerly localCheckpoint'ed, not persisted:
-    // each round references the previous relation TWICE (frontier join
-    // + visited anti-join), so an uncut logical plan doubles per round
-    // and canonicalization/optimization walk it as a tree —
-    // exponential work that overflows the stack within a handful of
-    // hops. Checkpoint truncates lineage to the materialized RDD (the
-    // [[Dedup.connectedComponents]] loop discipline).
-    var visited = Seq((source, 0)).toDF("id", "dist")
-      .select(col("id").cast("long"), col("dist").cast("int"))
-      .localCheckpoint(true)
+    // per-round state is cut per round, not persisted: each round
+    // references the previous relation TWICE (frontier join + visited
+    // anti-join), so an uncut logical plan doubles per round and
+    // canonicalization/optimization walk it as a tree — exponential
+    // work that overflows the stack within a handful of hops
+    val loop = new Lineage.Rounds
+    var visited = loop.next(Seq((source, 0)).toDF("id", "dist")
+      .select(col("id").cast("long"), col("dist").cast("int")))
     var frontier = visited.select(col("id"))
-    for (k <- 1 to iters) {
+    try for (k <- 1 to iters) {
       // neighbors of the frontier not yet assigned a (smaller) dist
       // shuffle_hash on the frontier: it is the SMALL side every round
       // (shrinking toward the BFS fringe), and sort-merge would re-sort
@@ -300,13 +273,12 @@ object Graph {
         .distinct()
         .join(visited.select(col("id")), Seq("id"), "left_anti")
         .withColumn("dist", lit(k).cast("int"))
-      val next = visited.unionAll(reached).localCheckpoint(true)
-      visited = next
+      visited = loop.next(visited.unionAll(reached))
       // read the new frontier back OUT of the checkpointed relation —
       // deriving it from `reached` would re-run the whole round's
       // join/anti-join when the next round evaluates it
-      frontier = next.filter(col("dist") === k).select(col("id"))
-    }
+      frontier = visited.filter(col("dist") === k).select(col("id"))
+    } finally adj.unpersist()
     visited
   }
 
@@ -331,7 +303,8 @@ object Graph {
     * one frontier⋈adjacency equi-join, one map-side-combined min
     * aggregate, one full-outer merge against the estimate relation;
     * shuffle volume tracks the changed set, which collapses as
-    * estimates converge, never hops × |E|.
+    * estimates converge, never hops × |E|. The adjacency is
+    * unpersisted when the call returns.
     *
     * ADJACENCY BUILD IS ONE EXCHANGE. The normalization aggregate
     * (parallel-edge min) runs AFTER the `src` repartition: hash
@@ -371,32 +344,30 @@ object Graph {
     val adj = bellmanAdjacency(edges, canonicalEdges)
       .persist(StorageLevel.MEMORY_AND_DISK)
     import spark.implicits._
-    // eagerly localCheckpoint'ed per round — each round references the
-    // previous relation twice (dist merge + frontier relax), so an
-    // uncut plan doubles per round; see [[bfsHops]]
-    var state = Seq((source, 0L, true)).toDF("id", "d", "improved")
-      .localCheckpoint(true)
-    var dist = state.select(col("id"), col("d"))
+    // cut per round — each round references the previous relation
+    // twice (dist merge + frontier relax), so an uncut plan doubles per
+    // round; see [[bfsHops]]
+    val loop = new Lineage.Rounds
+    val init = loop.next(Seq((source, 0L, true)).toDF("id", "d", "improved"))
+    var dist = init.select(col("id"), col("d"))
     var frontier = dist
-    for (_ <- 1 to iters) {
+    try for (_ <- 1 to iters) {
       val cand = adj
         .join(frontier.withColumnRenamed("id", "src"), "src")
         .select(col("dst").as("id"), (col("d") + col("w")).as("nd"))
         .groupBy("id").agg(min(col("nd")).as("nd"))
-      val merged = dist.withColumnRenamed("d", "od")
+      val merged = loop.next(dist.withColumnRenamed("d", "od")
         .join(cand, Seq("id"), "full_outer")
         .select(col("id"),
           least(coalesce(col("od"), lit(fin)),
             coalesce(col("nd"), lit(fin))).as("d"),
           (col("nd").isNotNull &&
-            (col("od").isNull || col("nd") < col("od"))).as("improved"))
-        .localCheckpoint(true)
-      state = merged
+            (col("od").isNull || col("nd") < col("od"))).as("improved")))
       // both views read back out of the ONE checkpointed relation (the
       // bfsHops lineage rule)
       dist = merged.select(col("id"), col("d"))
       frontier = merged.filter(col("improved")).select(col("id"), col("d"))
-    }
+    } finally adj.unpersist()
     dist
   }
 
@@ -549,7 +520,7 @@ object Graph {
       // and dropping every reference to the wave's joins lets the
       // ContextCleaner retire its shuffle files before the next wave
       // writes, bounding peak scratch at ~1/waves of the whole-join
-      // footprint.
+      // footprint (Lineage.unionWaves).
       val spark = undPlan.sparkSession
       val runId = java.util.UUID.randomUUID().toString.replace("-", "")
       val undTbl = s"graft_g2_und_$runId"
@@ -576,25 +547,12 @@ object Graph {
         if (fixedWaves.isEmpty) orientedCached.unpersist(blocking = false)
         und.unpersist(blocking = false)
         val bloom = closeBloom(undT) // one bloom serves every wave
-        val partials = (0 until waves).map { wv =>
-          // shuffle_hash hints: the build sides are bucketed scans the
-          // wave reads exchange-free; unhinted, Catalyst would plan
-          // sort-merge and SORT the wedge stream (the AQE-hint rule —
-          // stats exist here, but the sort is the known loss)
-          val p = corners(orientedT, undT, bloom, waves, wv, hints = true)
-            .localCheckpoint(true)
-          // Shuffle files die with their dependency objects, which die
-          // at the next collection — on one box (local mode) a nudge
-          // per wave is what makes the 1/waves scratch bound real. On
-          // a shared cluster driver a forced full GC is a latency
-          // hiccup for every concurrent query, the scratch spreads
-          // over executors' local disks, and spark.cleaner.periodicGC
-          // (default 30 min) already bounds it — so the nudge is
-          // LOCAL-MODE-ONLY.
-          if (spark.sparkContext.isLocal) System.gc()
-          p
-        }
-        partials.reduce(_ unionAll _)
+        // shuffle_hash hints: the build sides are bucketed scans the
+        // wave reads exchange-free; unhinted, Catalyst would plan
+        // sort-merge and SORT the wedge stream (the AQE-hint rule —
+        // stats exist here, but the sort is the known loss)
+        Lineage.unionWaves(waves)(wv =>
+          corners(orientedT, undT, bloom, waves, wv, hints = true))
           .groupBy(col("node"))
           .agg(sum(col("n_triangles")).as("n_triangles"))
       } finally {
@@ -690,11 +648,17 @@ object Graph {
     triangleCountsWith(edges, None)
 
   /** ceil(wedges × 32 B / budget), floored at one wave. */
-  private[graft] def wavesFor(wedges: Long, budgetBytes: Long): Int = {
-    require(budgetBytes > 0,
-      s"scratch budget must be positive, got $budgetBytes")
-    math.max(1L, (wedges * BytesPerWedge + budgetBytes - 1) / budgetBytes)
-      .toInt
+  private[graft] def wavesFor(wedges: Long, budgetBytes: Long): Int =
+    Lineage.waves(BigInt(wedges) * BytesPerWedge, budgetBytes)
+
+  /** The undirected simple view of an edge list: both directions of
+    * every edge, self-loops dropped, deduplicated.
+    */
+  private[graft] def undirected(edges: DataFrame): DataFrame = {
+    val dir = edges.select(col("src").cast("long"), col("dst").cast("long"))
+    dir.unionAll(dir.select(col("dst").as("src"), col("src").as("dst")))
+      .filter(col("src") =!= col("dst"))
+      .distinct()
   }
 
   /** Fixed-round k-core peel: `rounds` iterations of "delete every node
@@ -714,19 +678,14 @@ object Graph {
     * combined, O(nodes) through the shuffle) and TWO semi-join passes
     * of the edge relation against the O(nodes) survivor set — never a
     * per-node subgraph walk. The edge relation re-materializes each
-    * round hashed on `src` (eager localCheckpoint, the [[bfsHops]]
-    * lineage discipline: each round reads the previous relation three
-    * times, so an uncut plan grows 3^rounds).
+    * round hashed on `src` (cut per round through [[Lineage.Rounds]]:
+    * each round reads the previous relation three times, so an uncut
+    * plan grows 3^rounds).
     */
   def kCorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 0)
-    val dir = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    var adj = dir
-      .unionAll(dir.select(col("dst").as("src"), col("src").as("dst")))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-      .repartition(col("src"))
-      .localCheckpoint(true)
+    val loop = new Lineage.Rounds
+    var adj = loop.next(undirected(edges).repartition(col("src")))
     for (_ <- 1 to rounds) {
       val keep = adj.groupBy(col("src")).agg(count(lit(1)).as("__deg"))
         .filter(col("__deg") >= k)
@@ -739,12 +698,11 @@ object Graph {
       // Contrast the g1/g6 loops, whose build sides are checkpointed
       // LogicalRDDs with unknown stats that AQE cannot size — there the
       // explicit hint is what avoids a per-round edge sort.
-      adj = adj
+      adj = loop.next(adj
         .join(keep.select(col("__id").as("src")), Seq("src"), "left_semi")
         .join(keep.select(col("__id").as("dst")), Seq("dst"), "left_semi")
         .select(col("src"), col("dst"))
-        .repartition(col("src"))
-        .localCheckpoint(true)
+        .repartition(col("src")))
     }
     adj.groupBy(col("src").as("id"))
       .agg(count(lit(1)).cast("long").as("deg"))
@@ -764,48 +722,47 @@ object Graph {
     * map-side-combined aggregates — (node, label) vote counts, then the
     * per-node argmax folded as `max(struct(cnt, −label))` so the
     * frequency-then-min-label pick is ONE HashAggregate, not a window
-    * sort over the vote relation. Labels re-materialize each round via
-    * the [[bfsHops]] localCheckpoint lineage discipline. Nothing ever
-    * holds a node's neighborhood in memory; state through every shuffle
-    * is O(edges) votes collapsing to O(nodes).
+    * sort over the vote relation. Labels are cut each round through
+    * [[Lineage.Rounds]]; the checkpointed adjacency is released when
+    * the call returns. Nothing ever holds a node's neighborhood in
+    * memory; state through every shuffle is O(edges) votes collapsing
+    * to O(nodes).
     */
-  def labelPropagation(edges: DataFrame, rounds: Int,
-                       checkpoint: Boolean = true): DataFrame = {
+  def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 0)
-    // checkpoint=false is for PlanSpec only: it leaves one round's plan
-    // uncut so the join/aggregate shape is inspectable (checkpointed
-    // rounds execute eagerly and the final plan is a bare RDD scan)
-    def cut(df: DataFrame): DataFrame =
-      if (checkpoint) df.localCheckpoint(true) else df
-    val dir = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    val adj = cut(dir
-      .unionAll(dir.select(col("dst").as("src"), col("src").as("dst")))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-      .repartition(col("dst")))
-    var labels = cut(adj.select(col("src").as("id")).distinct()
+    // adj is checkpointed once and read by every round; it is released
+    // on return, when only the final label round is still referenced
+    val fixed = new Lineage.Rounds
+    val loop = new Lineage.Rounds
+    val adj = fixed.next(undirected(edges).repartition(col("dst")))
+    var labels = loop.next(adj.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("label")))
-    for (_ <- 1 to rounds) {
-      // shuffle_hash on the O(nodes) label side: a sort-merge join here
-      // re-SORTS the O(edges) adjacency relation every round (adj's
-      // checkpoint preserves its dst hash-partitioning, so the exchange
-      // is already free — the per-round sort was the remaining
-      // edge-relation-sized cost; measured at 30x, SCALING_r10.json). Hashing
-      // the per-partition label slice is O(nodes/partitions) and the
-      // edge side streams unsorted. Broadcast would be wrong here: the
-      // label relation grows with the graph and re-collects per round.
-      labels = cut(adj
-        .join(labels.select(col("id").as("dst"), col("label"))
-          .hint("shuffle_hash"), Seq("dst"))
-        .groupBy(col("src"), col("label"))
-        .agg(count(lit(1)).as("__cnt"))
-        .groupBy(col("src").as("id"))
-        .agg(max(struct(col("__cnt"), (-col("label")).as("__neg")))
-          .as("__pick"))
-        .select(col("id"), (-col("__pick.__neg")).as("label")))
-    }
+    try for (_ <- 1 to rounds) labels = loop.next(labelRound(adj, labels))
+    finally fixed.release()
     labels.select(col("id"), col("label"))
   }
+
+  /** One uncut [[labelPropagation]] round over a dst-partitioned
+    * adjacency: every node adopts its neighbors' most frequent label.
+    */
+  private[graft] def labelRound(adj: DataFrame, labels: DataFrame): DataFrame =
+    // shuffle_hash on the O(nodes) label side: a sort-merge join here
+    // re-SORTS the O(edges) adjacency relation every round (adj's
+    // checkpoint preserves its dst hash-partitioning, so the exchange
+    // is already free — the per-round sort was the remaining
+    // edge-relation-sized cost; measured at 30x, SCALING_r10.json). Hashing
+    // the per-partition label slice is O(nodes/partitions) and the
+    // edge side streams unsorted. Broadcast would be wrong here: the
+    // label relation grows with the graph and re-collects per round.
+    adj
+      .join(labels.select(col("id").as("dst"), col("label"))
+        .hint("shuffle_hash"), Seq("dst"))
+      .groupBy(col("src"), col("label"))
+      .agg(count(lit(1)).as("__cnt"))
+      .groupBy(col("src").as("id"))
+      .agg(max(struct(col("__cnt"), (-col("label")).as("__neg")))
+        .as("__pick"))
+      .select(col("id"), (-col("__pick.__neg")).as("label"))
 
   /** Newman modularity of a node partition, per community, in EXACT
     * scaled-integer form. With m undirected edges, e_c internal edges
@@ -828,18 +785,13 @@ object Graph {
     * cartesian, no window.
     */
   def modularity(edges: DataFrame, labels: DataFrame): DataFrame = {
-    val dir = edges.select(col("src").cast("long"), col("dst").cast("long"))
     // Eager localCheckpoint, not persist: adj feeds three consumers
     // (m, e_in, d_sum) so it must materialize once, but a persist here
     // would sit in the cache manager with no natural unpersist site
     // (the result is lazy — the caller owns materialization). The
     // checkpoint's lifetime is the returned plan's reachability; the
     // ContextCleaner reclaims the blocks once the caller drops it.
-    val adj = dir
-      .unionAll(dir.select(col("dst").as("src"), col("src").as("dst")))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-      .localCheckpoint(eager = true)
+    val adj = undirected(edges).localCheckpoint(eager = true)
     val lab = labels.select(col("id"), col("label"))
     val dec = "decimal(38,0)"
     val mRel = adj.agg((count(lit(1)) / 2).cast("long").as("__m"))

@@ -577,8 +577,9 @@ object Multimodal {
     *     exact matched-pair volume Σ C(bucket,2) is pre-counted in
     *     DECIMAL from linear-cost bucket stats; past `pairWorkCeiling`
     *     the bucket keys split into hash classes executed as SEQUENTIAL
-    *     waves (each localCheckpoint'ed so a wave's shuffle scratch is
-    *     released before the next starts), capped at `maxWaves`.
+    *     waves (each localCheckpoint'ed, then a local-mode GC nudge, so
+    *     a wave's shuffle scratch is released before the next starts —
+    *     [[Lineage.unionWaves]]), capped at `maxWaves`.
     *     When ONE bucket's own pair count exceeds the ceiling —
     *     bucket-granular classes cannot bound that (the hot bucket
     *     hashes whole into one wave) — the waves partition the
@@ -673,22 +674,10 @@ object Multimodal {
         lit(0).cast("decimal(38,0)")).as("v"),
         coalesce(max(col("count")), lit(0L)).as("mx"))
       .head
-    val predicted = statsRow.getDecimal(0).toBigInteger
-      .divide(java.math.BigInteger.TWO)
-    val maxBucket = java.math.BigInteger.valueOf(statsRow.getLong(1))
-    val hottestPairs = maxBucket.multiply(
-      maxBucket.subtract(java.math.BigInteger.ONE))
-      .divide(java.math.BigInteger.TWO)
-    val ceilBig = java.math.BigInteger.valueOf(pairWorkCeiling)
-    val waves =
-      if (predicted.compareTo(ceilBig) <= 0) 1
-      else if (predicted.compareTo(
-        ceilBig.multiply(java.math.BigInteger.valueOf(maxWaves.toLong)))
-        >= 0) maxWaves
-      else {
-        val Array(q, r) = predicted.divideAndRemainder(ceilBig)
-        (q.intValueExact + (if (r.signum == 0) 0 else 1))
-      }
+    val predicted = BigInt(statsRow.getDecimal(0).toBigInteger) / 2
+    val maxBucket = BigInt(statsRow.getLong(1))
+    val hottestPairs = maxBucket * (maxBucket - 1) / 2
+    val waves = Lineage.waves(predicted, pairWorkCeiling, maxWaves)
     onWaves(waves)
 
     val xb = buckets.toDF(buckets.columns.map(_ + "a").toIndexedSeq: _*)
@@ -705,7 +694,7 @@ object Multimodal {
         .filter(col("__h") <= maxDist)
         .select(col("__ra"), col("__rb"), col("__h"))
     val repPairs = (if (waves == 1) joinClass(xb, yb)
-    else if (hottestPairs.compareTo(ceilBig) <= 0) {
+    else if (hottestPairs <= pairWorkCeiling) {
       // waves partition the BUCKET KEY space, so each matched pair is
       // probed in exactly the wave its (bpos, bval) hashes to AND both
       // join sides shrink ~1/waves per wave; sound because no single
@@ -716,15 +705,11 @@ object Multimodal {
       // single-wave duplicate-per-agreeing-block
       def cls(p: Column, v: Column) =
         pmod(xxhash64(p, v), lit(waves.toLong))
-      (0 until waves).map { g =>
+      // each wave materializes survivor-sized, never candidate-sized
+      Lineage.unionWaves(waves)(g =>
         joinClass(
           xb.filter(cls(col("__bposa"), col("__bvala")) === g),
-          yb.filter(cls(col("__bposb"), col("__bvalb")) === g))
-          // EAGER per-wave materialization: wave g's shuffle scratch is
-          // released before wave g+1 probes (survivor-sized, never
-          // candidate-sized)
-          .localCheckpoint(true)
-      }.reduce(_ unionAll _)
+          yb.filter(cls(col("__bposb"), col("__bvalb")) === g)))
     } else {
       // HOT-BUCKET regime: one (bpos, bval) bucket alone exceeds the
       // ceiling, so bucket-granular waves cannot bound per-wave work —
@@ -735,11 +720,9 @@ object Multimodal {
       // probe side re-joins whole each wave (the left relation is
       // linear in reps×blocks, never pair-shaped), which is why this
       // is the fallback, not the default.
-      (0 until waves).map { g =>
+      Lineage.unionWaves(waves)(g =>
         joinClass(xb,
-          yb.filter(pmod(xxhash64(col("__rb")), lit(waves.toLong)) === g))
-          .localCheckpoint(true)
-      }.reduce(_ unionAll _)
+          yb.filter(pmod(xxhash64(col("__rb")), lit(waves.toLong)) === g)))
     })
       // survivors only: ≤ #blocks duplicates per pair, output-scale
       .distinct()

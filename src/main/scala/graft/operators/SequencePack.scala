@@ -87,7 +87,17 @@ object SequencePack {
     */
   def prefixSumBy(df: DataFrame, orderCols: Seq[String], weightCol: String,
                   numParts: Int = 0,
-                  outCol: String = "prefix_before"): DataFrame = {
+                  outCol: String = "prefix_before"): DataFrame =
+    rangePrefixSum(df, orderCols, weightCol, numParts, outCol)._1
+
+  /** [[prefixSumBy]] plus the persisted range partitioning its result
+    * reads — for callers that materialize the result themselves and
+    * can then unpersist the partitioning.
+    */
+  private[operators] def rangePrefixSum(
+      df: DataFrame, orderCols: Seq[String], weightCol: String,
+      numParts: Int = 0,
+      outCol: String = "prefix_before"): (DataFrame, DataFrame) = {
     require(orderCols.nonEmpty, "prefixSumBy needs at least one order column")
     val n = if (numParts > 0) numParts
             else df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
@@ -108,9 +118,9 @@ object SequencePack {
       .rowsBetween(Window.unboundedPreceding, -1)
     val start = coalesce(sum(col(weightCol)).over(wLocal), lit(0L)) +
       col("__poffset")
-    parts.join(broadcast(offsets), Seq("__pid"))
+    (parts.join(broadcast(offsets), Seq("__pid"))
       .withColumn(outCol, start.cast("long"))
-      .drop("__pid", "__poffset")
+      .drop("__pid", "__poffset"), parts)
   }
 
   /** Per-GROUP exclusive prefix sum: `outCol` = the sum of

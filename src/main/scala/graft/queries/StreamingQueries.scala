@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.core.{CatalogQuery, QueryModule, Tables}
+import graft.streaming.StreamReplay
 
 /** A REAL streaming execution in the driver gate: st1 replays the
   * `documents` table through the file streaming source with an
@@ -80,8 +81,8 @@ object StreamingQueries extends QueryModule {
 
   /** Runs `body` (which must START the stream) with the session's
     * shuffle-partition conf bounded to `parts` (the caller's
-    * [[replayStatePartitions]] answer, or [[ReplayShufflePartitions]]),
-    * restoring the caller's value after the stream FINISHES.
+    * [[replayStatePartitions]] answer), restoring the caller's value
+    * after the stream FINISHES.
     * StreamExecution clones the session on its own run thread — which
     * may start after `start()` returns — so the conf must stay bounded
     * until `awaitTermination`, and the restore rides the caller's
@@ -103,11 +104,12 @@ object StreamingQueries extends QueryModule {
     * multi-batch execution — a single-batch fall-back (lost
     * maxFilesPerTrigger, coalesced source) would silently stop
     * exercising watermark advancement, which is the point of the
-    * replay fixture.
+    * replay fixture. `replayPath` is the [[StreamReplay]] dir the
+    * stream reads; its size sets the state partition count
+    * ([[replayStatePartitions]]).
     */
   private def runReplay(s: SparkSession, out: org.apache.spark.sql.DataFrame,
-                        prefix: String, minBatches: Int = 3,
-                        replayPath: String = "") = {
+                        prefix: String, replayPath: String) = {
     val name = prefix + java.util.UUID.randomUUID().toString.replace("-", "")
     // explicit RAM-backed checkpoint (see graft.core.Scratch): each
     // micro-batch writes a dozen small offset/commit/state files, and
@@ -117,22 +119,27 @@ object StreamingQueries extends QueryModule {
     // removes. The memory sink holds the results, so the checkpoint is
     // deletable the moment the replay stops.
     val ck = graft.core.Scratch.dir(s"graft_ck_$prefix")
-    val parts =
-      if (replayPath.isEmpty) ReplayShufflePartitions
-      else replayStatePartitions(s, replayPath)
-    boundedReplayConf(s, parts) {
+    boundedReplayConf(s, replayStatePartitions(s, replayPath)) {
       val q = out.writeStream.format("memory").queryName(name)
         .option("checkpointLocation", ck.getAbsolutePath)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      try {
-        q.awaitTermination()
-        val batches = q.recentProgress.map(_.batchId).distinct.length
-        require(batches >= minBatches,
-          s"$prefix: replay must run >= $minBatches batches " +
-            s"(maxFilesPerTrigger=1 over the split fixture), got $batches")
-      } finally { q.stop(); graft.core.Scratch.delete(ck) }
+      try awaitBatches(q, prefix)
+      finally { q.stop(); graft.core.Scratch.delete(ck) }
     }
     s.table(name)
+  }
+
+  /** Wait for an availableNow replay to finish and require a genuinely
+    * multi-batch run: at least 3 distinct batch ids, one per split of
+    * the replay fixture.
+    */
+  private def awaitBatches(q: org.apache.spark.sql.streaming.StreamingQuery,
+                           prefix: String): Unit = {
+    q.awaitTermination()
+    val batches = q.recentProgress.map(_.batchId).distinct.length
+    require(batches >= 3,
+      s"$prefix: replay must run >= 3 batches " +
+        s"(maxFilesPerTrigger=1 over the split fixture), got $batches")
   }
 
   /** The events stream every event-time streaming row reads,
@@ -142,27 +149,27 @@ object StreamingQueries extends QueryModule {
     * event-time semantics identical; a per-row copy that drifted
     * (different source, float division on the nanos encoding) would
     * silently diverge one stream's clock. Reads the 3-file
-    * StreamReplay copy one file per batch — including the planted
-    * late 'view' every consumer must drop.
+    * StreamReplay copy (`replay`, from [[StreamReplay.ensureEvents]])
+    * one file per batch — including the planted late 'view' every
+    * consumer must drop.
     */
-  private def eventsStream(s: SparkSession, dir: String) = {
-    val replay = graft.streaming.StreamReplay.ensureEvents(s, dir)
-    val schema = Tables.parquet(s, replay).schema
-    graft.core.EventTime.normalize(
-      s.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay))
-  }
+  private def eventsStream(s: SparkSession, replay: String) =
+    graft.core.EventTime.normalize(replayStream(s, replay))
+
+  /** A [[StreamReplay]] dir read as a stream, one split file per
+    * batch — the source of every st row.
+    */
+  private def replayStream(s: SparkSession, replay: String) =
+    s.readStream
+      .schema(Tables.parquet(s, replay).schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(replay)
 
   private val streamClean = CatalogQuery(
     "st1_streaming_corpus_clean",
     (s: SparkSession, dir: String) => {
-      val replay = graft.streaming.StreamReplay.ensureDocs(s, dir)
-      val src = s.readStream
-        .schema(Tables.parquet(s, replay).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay)
+      val replay = StreamReplay.ensureDocs(s, dir)
+      val src = replayStream(s, replay)
         // +1: doc_id 0 at exactly epoch 0 equals the INITIAL watermark
         // (0), and dropDuplicatesWithinWatermark discards rows at/below
         // the watermark as late — the row would silently vanish.
@@ -174,7 +181,7 @@ object StreamingQueries extends QueryModule {
       // SURVIVED the batch boundary — the oracle never sees it; the
       // split-2-tail anchoring keeps the fixture valid at any corpus
       // id span (StreamReplay.ensureDocs)
-      runReplay(s, cleaned, "graft_st1_", replayPath = replay)
+      runReplay(s, cleaned, "graft_st1_", replay)
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"))
         .orderBy(col("lang"))
@@ -222,7 +229,8 @@ object StreamingQueries extends QueryModule {
   private val streamHourly = CatalogQuery(
     "st2_streaming_events_hourly",
     (s: SparkSession, dir: String) => {
-      val agg = eventsStream(s, dir)
+      val replay = StreamReplay.ensureEvents(s, dir)
+      val agg = eventsStream(s, replay)
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         // total as an integral sum of floor(value*100): floor(v*100) is
@@ -238,8 +246,7 @@ object StreamingQueries extends QueryModule {
       // watermark already past Jan 20 — a working late filter drops
       // it; if it leaks, its hour emits an extra count and the row
       // flips red against the pristine-table oracle
-      runReplay(s, agg, "graft_st2_",
-          replayPath = graft.streaming.StreamReplay.ensureEvents(s, dir))
+      runReplay(s, agg, "graft_st2_", replay)
         .orderBy(col("hour"), col("event_type"))
     },
     Some("""WITH wm AS (
@@ -277,20 +284,17 @@ object StreamingQueries extends QueryModule {
       val path = graft.operators.DedupIndex.ensure(s, dir, "lt250",
         docs.filter(col("doc_id") < 250), n = 3, bands = 16, rows = 8,
         maxDf = 100)
-      val replay = graft.streaming.StreamReplay.ensureDocs(s, dir)
-      val src = s.readStream
-        .schema(Tables.parquet(s, replay).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay)
+      val replay = StreamReplay.ensureDocs(s, dir)
+      val src = replayStream(s, replay)
         // probe only the pristine id-domain: the replay's sentinel
         // duplicate (id > SentinelMinId) is st1's dedup-state fixture;
         // here it would trivially probe-match its original
         .filter(col("doc_id") >= 250 &&
-          col("doc_id") < graft.streaming.StreamReplay.SentinelMinId)
+          col("doc_id") < StreamReplay.SentinelMinId)
         .withColumn("ts", timestamp_seconds(col("doc_id") + lit(1)))
       val m = graft.streaming.StreamingDedupIndex.matches(s, path, src,
         tsCol = "ts", horizon = "1 hour", minEstJaccard = 0.5)
-      runReplay(s, m, "graft_st3_", replayPath = replay)
+      runReplay(s, m, "graft_st3_", replay)
         .select(least(col("doc"), col("match_doc")).as("i"),
           greatest(col("doc"), col("match_doc")).as("j"))
         .orderBy(col("i"), col("j"))
@@ -329,7 +333,8 @@ object StreamingQueries extends QueryModule {
   private val streamSessions = CatalogQuery(
     "st4_streaming_sessionize",
     (s: SparkSession, dir: String) => {
-      val sessions = eventsStream(s, dir)
+      val replay = StreamReplay.ensureEvents(s, dir)
+      val sessions = eventsStream(s, replay)
         .withWatermark("ts", "1 hour")
         .groupBy(col("user_id"),
           session_window(col("ts"), "30 minutes").as("w"))
@@ -339,8 +344,7 @@ object StreamingQueries extends QueryModule {
           col("n_events"))
       // the planted late 'view' would otherwise open a brand-new
       // session for the sentinel user — an extra output row
-      runReplay(s, sessions, "graft_st4_",
-          replayPath = graft.streaming.StreamReplay.ensureEvents(s, dir))
+      runReplay(s, sessions, "graft_st4_", replay)
         .orderBy(col("user_id"), col("session_start"))
     },
     Some("""WITH wm AS (SELECT max(ts) - INTERVAL 1 HOUR AS w FROM events),
@@ -393,9 +397,9 @@ object StreamingQueries extends QueryModule {
     * untouched, so the emitted pair set (and st12's withheld set) is
     * byte-identical to the user-only-keyed join.
     */
-  private def bucketedAttributionJoin(s: SparkSession, dir: String,
+  private def bucketedAttributionJoin(s: SparkSession, replay: String,
                                       joinType: String) = {
-    def stream(kind: String, alias: String) = eventsStream(s, dir)
+    def stream(kind: String, alias: String) = eventsStream(s, replay)
       .filter(col("event_type") === kind)
       .select(col("user_id").as(s"${alias}_user"),
         col("event_id").as(s"${alias}_id"),
@@ -440,9 +444,9 @@ object StreamingQueries extends QueryModule {
   private val streamAttribution = CatalogQuery(
     "st5_stream_stream_join",
     (s: SparkSession, dir: String) => {
-      val joined = bucketedAttributionJoin(s, dir, "inner")
-      runReplay(s, joined, "graft_st5_",
-          replayPath = graft.streaming.StreamReplay.ensureEvents(s, dir))
+      val replay = StreamReplay.ensureEvents(s, dir)
+      val joined = bucketedAttributionJoin(s, replay, "inner")
+      runReplay(s, joined, "graft_st5_", replay)
         .select(col("v_user").as("user_id"), col("v_id").as("view_id"),
           col("c_id").as("click_id"))
         .orderBy(col("view_id"), col("click_id"))
@@ -478,9 +482,9 @@ object StreamingQueries extends QueryModule {
   private val streamAttributionOuter = CatalogQuery(
     "st12_stream_stream_outer_join",
     (s: SparkSession, dir: String) => {
-      val joined = bucketedAttributionJoin(s, dir, "left_outer")
-      runReplay(s, joined, "graft_st12_",
-          replayPath = graft.streaming.StreamReplay.ensureEvents(s, dir))
+      val replay = StreamReplay.ensureEvents(s, dir)
+      val joined = bucketedAttributionJoin(s, replay, "left_outer")
+      runReplay(s, joined, "graft_st12_", replay)
         .select(col("v_user").as("user_id"), col("v_id").as("view_id"),
           col("c_id").as("click_id"))
         .orderBy(col("view_id"), col("click_id"))
@@ -529,7 +533,8 @@ object StreamingQueries extends QueryModule {
   private val streamDau = CatalogQuery(
     "st6_streaming_dau",
     (s: SparkSession, dir: String) => {
-      val daily = eventsStream(s, dir)
+      val replay = StreamReplay.ensureEvents(s, dir)
+      val daily = eventsStream(s, replay)
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 day"), col("user_id"))
         .agg(count(lit(1)).as("n"))
@@ -541,8 +546,7 @@ object StreamingQueries extends QueryModule {
       // the planted late 'view' would count the sentinel user into
       // Jan 1's dau through BOTH chained stages if stage 1's late
       // filter failed
-      runReplay(s, dau, "graft_st6_",
-          replayPath = graft.streaming.StreamReplay.ensureEvents(s, dir))
+      runReplay(s, dau, "graft_st6_", replay)
         .orderBy(col("day"))
     },
     Some("""WITH e AS (SELECT CAST(ts AS TIMESTAMP) AS ts, user_id FROM events),
@@ -579,7 +583,8 @@ object StreamingQueries extends QueryModule {
     "st7_streaming_trending",
     (s: SparkSession, dir: String) => {
       import org.apache.spark.sql.expressions.Window
-      val daily = eventsStream(s, dir)
+      val replay = StreamReplay.ensureEvents(s, dir)
+      val daily = eventsStream(s, replay)
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 day"), col("event_type"))
         .agg(count(lit(1)).as("n_events"))
@@ -603,21 +608,14 @@ object StreamingQueries extends QueryModule {
       val writeBatch: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
         (batch, id) =>
           batch.write.mode("overwrite").parquet(s"$sink/data/batch_id=$id")
-      boundedReplayConf(s, replayStatePartitions(s,
-          graft.streaming.StreamReplay.ensureEvents(s, dir))) {
+      boundedReplayConf(s, replayStatePartitions(s, replay)) {
         val q = daily.writeStream
           .outputMode("append")
           .trigger(Trigger.AvailableNow())
           .option("checkpointLocation", s"$sink/_chk")
           .foreachBatch(writeBatch)
           .start()
-        try {
-          q.awaitTermination()
-          val batches = q.recentProgress.map(_.batchId).distinct.length
-          require(batches >= 3,
-            s"st7: replay must run >= 3 batches (maxFilesPerTrigger=1 " +
-              s"over the split fixture), got $batches")
-        } finally q.stop()
+        try awaitBatches(q, "st7") finally q.stop()
       }
       val fin = Tables.parquet(s, s"$sink/data")
       val byDay = Window.partitionBy(col("day"))
@@ -667,15 +665,15 @@ object StreamingQueries extends QueryModule {
     "st8_streaming_motif",
     (s: SparkSession, dir: String) => {
       import s.implicits._
-      val stream = eventsStream(s, dir)
+      val replay = StreamReplay.ensureEvents(s, dir)
+      val stream = eventsStream(s, replay)
         .withWatermark("ts", "24 hours")
         .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("us"),
           col("event_id"), col("event_type"))
         .as[graft.streaming.StreamMotif.MotifEvent]
       val deltas = graft.streaming.StreamMotif.deltas(
         stream, Seq("view", "click", "purchase"))
-      runReplay(s, deltas.toDF(), "graft_st8_", minBatches = 3,
-          replayPath = graft.streaming.StreamReplay.ensureEvents(s, dir))
+      runReplay(s, deltas.toDF(), "graft_st8_", replay)
         .groupBy(col("user_id"))
         .agg(sum(col("n")).as("n_motifs"))
         .orderBy(col("user_id"))
@@ -722,9 +720,10 @@ object StreamingQueries extends QueryModule {
   private val streamOhlc = CatalogQuery(
     "st9_streaming_ohlc",
     (s: SparkSession, dir: String) => {
+      val replay = StreamReplay.ensureEvents(s, dir)
       val idSpace = 10000000000L
       val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-      val bars = eventsStream(s, dir)
+      val bars = eventsStream(s, replay)
         .withColumn("__eid", col("event_id") + lit(1000L))
         .withColumn("__pk",
           graft.operators.Changelog.packedOrderKey("ts", "__eid", idSpace))
@@ -739,8 +738,7 @@ object StreamingQueries extends QueryModule {
             .as("open_id"),
           ((col("__cpk") % lit(idSpace).cast(dec)).cast("long") - 1000L)
             .as("close_id"))
-      val sunk = runReplay(s, bars, "graft_st9_",
-        replayPath = graft.streaming.StreamReplay.ensureEvents(s, dir))
+      val sunk = runReplay(s, bars, "graft_st9_", replay)
       val vals = Tables(s, dir).events.select(col("event_id"), col("value"))
       sunk
         .join(vals.select(col("event_id").as("open_id"),
@@ -798,15 +796,15 @@ object StreamingQueries extends QueryModule {
   private val streamConcurrency = CatalogQuery(
     "st10_streaming_concurrency",
     (s: SparkSession, dir: String) => {
-      val sessions = eventsStream(s, dir)
+      val replay = StreamReplay.ensureEvents(s, dir)
+      val sessions = eventsStream(s, replay)
         .withWatermark("ts", "1 hour")
         .groupBy(col("user_id"),
           session_window(col("ts"), "30 minutes").as("w"))
         .agg(count(lit(1)).as("n_events"))
         .select(col("w.start").as("session_start"),
           (col("w.end") - expr("INTERVAL 30 minutes")).as("session_end"))
-      val finalized = runReplay(s, sessions, "graft_st10_",
-        replayPath = graft.streaming.StreamReplay.ensureEvents(s, dir))
+      val finalized = runReplay(s, sessions, "graft_st10_", replay)
       graft.operators.Temporal.peakConcurrency(
           finalized, "session_start", "session_end")
         .orderBy(col("day"))
@@ -878,9 +876,10 @@ object StreamingQueries extends QueryModule {
     "st11_membership_lifecycle",
     (s: SparkSession, dir: String) => {
       import s.implicits._
+      val replay = StreamReplay.ensureEvents(s, dir)
       val F = 259200000L // failAfter: 3 days
       val C = 432000000L // cleanupAfter: 5 more days
-      val hbs = eventsStream(s, dir)
+      val hbs = eventsStream(s, replay)
         .select(col("user_id"), unix_millis(col("ts")).as("tsms"),
           col("event_type"))
         // per-member heartbeat horizon: day 10 + (user_id % 20)
@@ -897,8 +896,7 @@ object StreamingQueries extends QueryModule {
         .as[graft.streaming.Membership.Heartbeat]
       val ev = graft.streaming.Membership.updates(hbs,
         failAfterMs = F, cleanupAfterMs = C, watermarkDelay = "1 hour")
-      runReplay(s, ev.toDF(), "graft_st11_",
-          replayPath = graft.streaming.StreamReplay.ensureEvents(s, dir))
+      runReplay(s, ev.toDF(), "graft_st11_", replay)
         .select(col("memberId").as("member_id"), col("kind"),
           col("heartbeatCount").as("hb_count"), col("health"),
           col("atMs").as("at_ms"))
@@ -1056,13 +1054,14 @@ object StreamingQueries extends QueryModule {
     "st11b_membership_resurrection",
     (s: SparkSession, dir: String) => {
       import s.implicits._
+      val replay = StreamReplay.ensureEvents(s, dir)
       val F = 259200000L // failAfter: 3 days
       val C = 432000000L // cleanupAfter: 5 more days
       val Day5 = 1704499200000L
       val Day10 = 1704931200000L
       val Day20 = 1705795200000L
       val P = 1705881600000L // planted Failed-gossip time: day 21
-      def base() = eventsStream(s, dir)
+      def base() = eventsStream(s, replay)
         .select(col("user_id"), unix_millis(col("ts")).as("tsms"))
       def hb(memberId: org.apache.spark.sql.Column,
              counter: org.apache.spark.sql.Column,
@@ -1094,8 +1093,7 @@ object StreamingQueries extends QueryModule {
         .as[graft.streaming.Membership.Heartbeat]
       val ev = graft.streaming.Membership.updates(hbs,
         failAfterMs = F, cleanupAfterMs = C, watermarkDelay = "1 hour")
-      runReplay(s, ev.toDF(), "graft_st11b_",
-          replayPath = graft.streaming.StreamReplay.ensureEvents(s, dir))
+      runReplay(s, ev.toDF(), "graft_st11b_", replay)
         .select(col("memberId").as("member_id"), col("kind"),
           col("heartbeatCount").as("hb_count"), col("health"),
           col("atMs").as("at_ms"))

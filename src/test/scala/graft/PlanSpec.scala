@@ -327,13 +327,16 @@ class PlanSpec extends SparkSpecBase {
   }
 
   test("g6: the LPA argmax is an aggregate, never a window sort; no cartesian") {
-    // checkpoint=false: a checkpointed round executes eagerly and leaves
-    // only a bare RDD scan to inspect; this exposes one REAL round's plan
+    // one uncut round: a checkpointed round executes eagerly and leaves
+    // only a bare RDD scan to inspect; labelRound exposes a REAL round's
+    // plan over the same dst-partitioned adjacency and self-labels
     val s = spark
     import s.implicits._
     val edges = (1L to 50L).map(i => (i, i % 10 + 1)).toDF("src", "dst")
-    val p = graft.operators.Graph
-      .labelPropagation(edges, rounds = 1, checkpoint = false)
+    val adj = graft.operators.Graph.undirected(edges).repartition(col("dst"))
+    val labels = adj.select(col("src").as("id")).distinct()
+      .select(col("id"), col("id").as("label"))
+    val p = graft.operators.Graph.labelRound(adj, labels)
       .queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"),

@@ -183,5 +183,14 @@ class TablesSpec extends SparkSpecBase {
     }
     assert(knobs.isEmpty,
       s"src/main reads a spark.graft.* session conf key: ${knobs.mkString("; ")}")
+    // round and wave loops materialize and free storage only through
+    // graft.operators.Lineage
+    val lineage = root.resolve("graft/operators/Lineage.scala")
+    val loopCode = """snapshotRdd|\(0 until waves\)""".r
+    val loops = (files :+ helper).filter(_ != lineage).flatMap { f =>
+      loopCode.findAllMatchIn(Files.readString(f)).map(m => s"$f: ${m.matched}")
+    }
+    assert(loops.isEmpty,
+      s"route round/wave loops through Lineage: ${loops.mkString("; ")}")
   }
 }
