@@ -26,8 +26,7 @@ class LineageSpec extends SparkSpecBase {
     rdds.map(r => s"${r.id}:${r.getClass.getSimpleName}" +
       s"${if (r.isCheckpointed) "(checkpoint)" else ""}").mkString(", ")
 
-  // two triangles joined by a bridge, plus a pendant: every operator
-  // below has work in every round on it
+  // two triangles joined by a bridge, plus a pendant node
   private def edges: DataFrame = {
     val s = spark
     import s.implicits._
