@@ -26,6 +26,13 @@ import org.apache.spark.sql.SparkSession
   *    file system for `file:` checkpoints, Spark's default elsewhere.
   * Both are set at session build, before anything resolves `file:`:
   * Hadoop caches file systems by scheme, not by implementation.
+  *
+  * The extensions add one AQE rule: once AQE has measured an ORDER BY's
+  * input and it is at most `spark.sql.adaptive.coalescePartitions.minPartitionSize`
+  * (1 MiB), the sort runs in one partition and its range exchange —
+  * a sampling job plus a map stage — is dropped
+  * ([[graft.plans.SmallSortOnePartition]]). Setting that size decides
+  * the gate; this object sets no value for it.
   */
 object GraftSession {
 
@@ -59,7 +66,9 @@ object GraftSession {
       // those as raw int64 so EventTime.normalize can truncate to
       // micros deterministically (timestamp[us] files are unaffected).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // native graft expressions (token_count, ...) as SQL functions
+      // native graft expressions (token_count, ...) as SQL functions,
+      // and the AQE rule that sorts small measured ORDER BY inputs in
+      // one partition (graft.plans.SmallSortOnePartition)
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       // fork-free local file I/O (see the object doc)
       .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)

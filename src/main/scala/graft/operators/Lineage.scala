@@ -76,19 +76,20 @@ private[graft] object Lineage {
     * them. Each wave is eagerly localCheckpoint'ed so its shuffle
     * dependencies become unreachable before the next wave writes. The
     * shuffle files die with those dependency objects, which die at the
-    * next collection — on one box (local mode) a nudge per wave is
-    * what makes the 1/waves scratch bound real. On a shared cluster
-    * driver a forced full GC is a latency hiccup for every concurrent
-    * query, the scratch spreads over executors' local disks, and
-    * spark.cleaner.periodicGC (default 30 min) already bounds it — so
-    * the nudge is LOCAL-MODE-ONLY. The wave checkpoints back the
-    * returned union and are reclaimed by the ContextCleaner once the
-    * caller drops it.
+    * next collection — on one box (local mode) a nudge after each wave
+    * but the last is what makes the 1/waves scratch bound real. The
+    * last wave has no successor to make room for, so it takes none. On
+    * a shared cluster driver a forced full GC is a latency hiccup for
+    * every concurrent query, the scratch spreads over executors' local
+    * disks, and spark.cleaner.periodicGC (default 30 min) already
+    * bounds it — so the nudge is LOCAL-MODE-ONLY. The wave checkpoints
+    * back the returned union and are reclaimed by the ContextCleaner
+    * once the caller drops it.
     */
   def unionWaves(waves: Int)(wave: Int => DataFrame): DataFrame =
     (0 until waves).map { g =>
       val p = wave(g).localCheckpoint(true)
-      if (p.sparkSession.sparkContext.isLocal) System.gc()
+      if (g < waves - 1 && p.sparkSession.sparkContext.isLocal) System.gc()
       p
     }.reduce(_ unionAll _)
 }

@@ -6,16 +6,23 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.functions.{ArrayDot, BloomMightContain, CmsEstimate, LshSig, MinHashRow, MinHashSig, RollingHash, SimHash64, SimHashFp, TokenCount}
 
-/** SparkSessionExtensions entry point: registers the engine's native
-  * Catalyst expressions as SQL functions, so
-  * `spark.sql("SELECT token_count(text, 'hash') ...")` plans the
-  * codegen'd expression. Activated via
-  * `spark.sql.extensions=graft.plans.GraftExtensions` (GraftSession
-  * sets it; any external session can too).
+/** SparkSessionExtensions entry point. It registers:
+  *  - the engine's native Catalyst expressions as SQL functions, so
+  *    `spark.sql("SELECT token_count(text, 'hash') ...")` plans the
+  *    codegen'd expression;
+  *  - the AQE query-stage preparation rule [[SmallSortOnePartition]],
+  *    which sorts a measured, small ORDER BY input in one partition
+  *    instead of behind a range exchange.
+  * Activated via `spark.sql.extensions=graft.plans.GraftExtensions`
+  * (GraftSession sets it; any external session can too). Sessions
+  * built without it get the functions from
+  * [[GraftExtensions.ensureRegistered]] but not the rule.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.entries.foreach(ext.injectFunction)
+    ext.injectQueryStagePrepRule(_ => SmallSortOnePartition)
+  }
 }
 
 object GraftExtensions {

@@ -1,6 +1,16 @@
 package graft
 
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import graft.mapreduce.{MapleJuiceJob, RangePartition, Workloads}
+import graft.operators.SequencePack
+import graft.sql.GraftSql
 
 /** Executable plan-quality guards: the properties the engine's Scaladoc
   * claims about its physical plans, asserted against the optimizer's
@@ -10,9 +20,42 @@ import org.apache.spark.sql.functions._
   */
 class PlanSpec extends SparkSpecBase {
 
+  /** AQE's INITIAL plan of catalog row `name` at sf0.01: the plan before
+    * any stage has run, so no runtime re-plan shows in it. */
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf("sf0.01"))
       .queryExecution.executedPlan.toString
+
+  /** The final plan inside the first `AdaptiveSparkPlanExec` of `p`. */
+  private def adaptiveFinal(p: SparkPlan): String = {
+    val aqe = p.collectFirst { case a: AdaptiveSparkPlanExec => a }
+    assert(aqe.exists(_.isFinalPlan), s"no finished adaptive plan in:\n$p")
+    aqe.get.executedPlan.toString
+  }
+
+  /** Runs `df` with a noop write, as Bench times a row, and returns AQE's
+    * FINAL plan with the Spark jobs the write launched. */
+  private def finalRun(df: DataFrame): (String, Seq[String]) = {
+    val written = new LinkedBlockingQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        written.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val jobs = jobsDuring(df.write.format("noop").mode("overwrite").save())
+      val p = written.poll(60, TimeUnit.SECONDS)
+      assert(p != null, "the noop write reported no query execution")
+      (adaptiveFinal(p), jobs)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** The small-sort gate: AQE's minimum coalesced partition size. */
+  private val MinPartitionSize = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+
+  private def rangeExchanges(finalPlan: String): Int =
+    "rangepartitioning".r.findAllIn(finalPlan).size
 
   test("q1: shipdate filter and column pruning reach the parquet scan") {
     val p = plan("q1_pricing_summary")
@@ -518,5 +561,125 @@ class PlanSpec extends SparkSpecBase {
     salted.foreach { case (k, (q, n)) =>
       assert(n == direct(k)._2 && math.abs(q - direct(k)._1) < 1e-6)
     }
+  }
+
+  // --- SmallSortOnePartition: small measured ORDER BY inputs sort in
+  // one partition; everything else keeps its range exchange. Job counts
+  // are the noop write's alone (the build runs before it), local[4],
+  // sf0.01.
+
+  private def row(name: String): DataFrame =
+    SparkEntry.queries(name)(spark, sf("sf0.01"))
+
+  test("small ORDER BY inputs sort in one partition: no range exchange " +
+    "in the final plan, two jobs fewer per row") {
+    for ((name, jobs) <- Seq("q12_events_hourly" -> 2,
+        "q23_customer_order_outer" -> 3)) {
+      val (p, ran) = finalRun(row(name))
+      assert(rangeExchanges(p) == 0, s"$name kept its range exchange:\n$p")
+      assert(p.contains("Coalesce 1"), s"$name sorts outside one partition:\n$p")
+      assert(ran.size == jobs, s"$name ran ${ran.size} jobs, want $jobs: " +
+        ran.mkString("; "))
+    }
+    val (sqlPlan, _) = finalRun(GraftSql.run(spark, sf("sf0.01"), "q12_events_hourly"))
+    assert(rangeExchanges(sqlPlan) == 0, s"q12 SQL twin kept its range exchange:\n$sqlPlan")
+  }
+
+  test("at a 1-byte gate the same rows keep their range exchange and " +
+    "return identical rows") {
+    for ((name, jobs) <- Seq("q12_events_hourly" -> 4,
+        "q23_customer_order_outer" -> 5)) {
+      val small = row(name).collect().toSeq
+      val (p, ran, forced) = withConf(MinPartitionSize, "1") {
+        val (p, ran) = finalRun(row(name))
+        (p, ran, row(name).collect().toSeq)
+      }
+      assert(rangeExchanges(p) == 1, s"$name lost its range exchange:\n$p")
+      assert(ran.size == jobs, s"$name ran ${ran.size} jobs, want $jobs: " +
+        ran.mkString("; "))
+      assert(small.nonEmpty && small == forced,
+        s"$name differs across the gate")
+    }
+  }
+
+  test("a multi-key ORDER BY with DESC, NULLs and ties collects in " +
+    "driver-side sorted order on both sides of the gate") {
+    val s = spark
+    import s.implicits._
+    // (a, b) ties across c; both keys carry NULLs
+    val grouped = spark.range(0, 3000).select(
+        when($"id" % 11 === 0, lit(null)).otherwise($"id" % 7).as("a"),
+        when($"id" % 13 === 0, lit(null))
+          .otherwise(($"id" % 5).cast("string")).as("b"),
+        ($"id" % 4).as("c"))
+      .groupBy("a", "b", "c").agg(count(lit(1)).as("n"))
+    def key(r: Row) = (Option(r.get(0)).map(_.asInstanceOf[Long]),
+      Option(r.getString(1)))
+    // a DESC NULLS FIRST, then b ASC NULLS LAST
+    val driverOrder: Ordering[(Option[Long], Option[String])] =
+      Ordering.Tuple2(
+        Ordering.fromLessThan[Option[Long]] {
+          case (None, Some(_)) => true
+          case (Some(x), Some(y)) => x > y
+          case _ => false
+        },
+        Ordering.fromLessThan[Option[String]] {
+          case (Some(x), Some(y)) => x < y
+          case (Some(_), None) => true
+          case _ => false
+        })
+    val all = grouped.collect().toSeq
+    for ((bytes, ranges) <- Seq("1m" -> 0, "1" -> 1)) withConf(MinPartitionSize, bytes) {
+      val sorted = grouped.orderBy($"a".desc_nulls_first, $"b".asc_nulls_last)
+      val got = sorted.collect().toSeq
+      val p = adaptiveFinal(sorted.queryExecution.executedPlan)
+      assert(rangeExchanges(p) == ranges, s"gate $bytes:\n$p")
+      assert(got.map(key) == all.map(key).sorted(driverOrder), s"gate $bytes")
+      assert(got.sortBy(_.toString) == all.sortBy(_.toString))
+    }
+  }
+
+  test("MapleJuice RangePartition keeps its range exchange: 3 partitions, " +
+    "3 contiguous key ranges") {
+    val s = spark
+    import s.implicits._
+    // the input comes from a materialized shuffle and is tiny, so only
+    // the exchange's origin (repartitionByRange) keeps it
+    val lines = (0 until 300).map(i => s"w${i % 40} w${(i * 7) % 40}").toDS()
+      .repartition(2)
+    val out = MapleJuiceJob.run(lines, Workloads.WordCountMaple,
+      Workloads.WordCountJuice, 3, RangePartition)
+    val ranges = out.rdd.mapPartitionsWithIndex { (p, it) =>
+      val ks = it.map(_._1).toSeq
+      if (ks.isEmpty) Iterator.empty else Iterator((p, ks.min, ks.max))
+    }.collect().sortBy(_._1)
+    assert(ranges.map(_._1).toSeq == Seq(0, 1, 2), ranges.mkString("; "))
+    ranges.sliding(2).foreach { case Array((_, _, prevMax), (_, nextMin, _)) =>
+      assert(prevMax < nextMin, s"overlapping ranges: $prevMax >= $nextMin")
+    }
+    assert(rangeExchanges(finalRun(out.toDF())._1) == 1)
+  }
+
+  test("SequencePack.prefixSumBy keeps its N range partitions") {
+    val s = spark
+    import s.implicits._
+    val weights = spark.range(0, 500).select(($"id" % 97).as("k"), $"id".as("w"))
+      .groupBy("k").agg(sum("w").as("w"))
+    val (p, _) = finalRun(SequencePack.prefixSumBy(weights, Seq("k"), "w", numParts = 5))
+    assert("rangepartitioning\\([^)]*, 5\\), REPARTITION_BY_NUM".r.findFirstIn(p).isDefined,
+      s"prefix sum lost its 5 range partitions:\n$p")
+    spark.catalog.clearCache()
+  }
+
+  test("sorts over a scan (t4) or a persisted relation keep their range " +
+    "exchange") {
+    val (t4, _) = finalRun(row("t4_fingerprints"))
+    assert(rangeExchanges(t4) == 1, s"t4:\n$t4")
+    val cached = spark.range(0, 1000).selectExpr("id % 17 AS k", "id").persist()
+    try {
+      cached.count()
+      val (p, _) = finalRun(cached.orderBy("k", "id"))
+      assert(rangeExchanges(p) == 1, s"sort over a persisted relation:\n$p")
+    } finally cached.unpersist()
   }
 }

@@ -10,7 +10,6 @@ import org.apache.hadoop.fs.{Path => HadoopPath}
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
 import graft.core.Tables
@@ -26,13 +25,6 @@ class TablesSpec extends SparkSpecBase {
 
   private val dir = sf("sf0.01")
   private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
-
-  private def withConf[T](key: String, value: String)(body: => T): T = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body
-    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
 
   /** Schema as inferred, or the class of the error inference raised. */
   private def outcome(schema: => StructType) =
@@ -107,40 +99,6 @@ class TablesSpec extends SparkSpecBase {
     assert(outcome(Tables.parquet(spark, p).schema).isLeft)
     spark.range(3).toDF("x").write.parquet(p)
     assert(Tables.parquet(spark, p).count() == 3)
-  }
-
-  /** Jobs this thread submits while `body` runs. Every job posted before
-    * the closing sentinel job has reached the listener once the
-    * sentinel's own start has.
-    */
-  private def jobsDuring(body: => Unit): Seq[String] = {
-    val sc = spark.sparkContext
-    val group = s"graft-tables-spec-${System.nanoTime}"
-    val sentinel = "graft-tables-spec-sentinel"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val done = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val props = Option(j.properties)
-        if (props.exists(_.getProperty("spark.jobGroup.id") == group)) {
-          val desc = props.map(_.getProperty("spark.job.description")).orNull
-          if (desc == sentinel) done.countDown()
-          else seen.add(s"job ${j.jobId} (${j.stageInfos.map(_.name).mkString(", ")})")
-        }
-      }
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "TablesSpec build")
-    try {
-      body
-      sc.setJobDescription(sentinel)
-      sc.parallelize(Seq(1), 1).count()
-      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-    seen.asScala.toSeq
   }
 
   test("catalog_small builds launch no Spark job once each table has " +
