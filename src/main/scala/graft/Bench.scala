@@ -109,11 +109,12 @@ object Bench {
     // can. A failed run records its error and yields wall -1.
     val failed = Measure.Window(-1.0, 0.0, 0.0)
     def timeOnce(name: String): Measure.Window = {
-      // Operators that persist() intermediates (d3, s3) register them in
-      // the CacheManager, which matches by logical plan — a later run of
-      // the same query would silently read the previous run's cache.
-      // Clear so every timed run pays its own materialization and only
-      // WITHIN-run reuse (the actual plan property) is measured.
+      // Relations an operator shares lazily (graft.operators.Lineage's
+      // SHARED form) stay in the CacheManager, which matches by logical
+      // plan — a later run of the same query would silently read the
+      // previous run's cache. Clear so every timed run pays its own
+      // materialization and only WITHIN-run reuse (the actual plan
+      // property) is measured.
       spark.catalog.clearCache()
       try Measure.timed(runOnce(name))
       catch { case e: Throwable =>

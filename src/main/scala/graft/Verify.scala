@@ -31,8 +31,8 @@ object Verify {
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
-        // drop intermediates persisted inside operators (d3, s3) so 40+
-        // query dumps don't accumulate block-manager memory
+        // drop the relations operators share lazily (Lineage's SHARED
+        // form) so 154 query dumps don't accumulate block-manager memory
         spark.catalog.clearCache()
       }
     }

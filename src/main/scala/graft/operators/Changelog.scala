@@ -104,22 +104,6 @@ object Changelog {
       .select((keys ++ Seq(tsCol, idCol) ++ payload).map(col): _*)
   }
 
-  /** The window twin of [[compactLatest]] — `row_number() = 1` over
-    * (keys | tsCol desc, idCol desc). One shuffle, but every key's
-    * full history is sorted inside it and a hot key's history sorts in
-    * one task. Kept as the differential oracle for the packed-max
-    * form (ChangelogSpec asserts bit-equality) and for callers whose
-    * payload is too wide to re-join.
-    */
-  def compactLatestWindow(log: DataFrame, keys: Seq[String], tsCol: String,
-                          idCol: String, payload: Seq[String]): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col(tsCol).desc, col(idCol).desc)
-    log.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .select((keys ++ Seq(tsCol, idCol) ++ payload).map(col): _*)
-  }
-
   /** SCD-2 (slowly-changing-dimension type 2) interval build: collapse
     * the changelog to its STATE TRANSITIONS (drop rows whose state
     * equals the key's previous state), then stamp each surviving row

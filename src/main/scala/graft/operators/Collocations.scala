@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Collocation extraction — the "New York"/"machine learning" detector
   * a tokenizer-training pipeline runs before merging multi-word units:
@@ -56,9 +55,8 @@ object Collocations {
       .select(col("lang"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
     // corpus bigram counts feed heads, tails, totals AND the scored
     // output — persist the shared subtree once
-    val big = occ.groupBy("lang", "w1", "w2")
-      .agg(count(lit(1)).as("c12"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val big = Lineage.shared(occ.groupBy("lang", "w1", "w2")
+      .agg(count(lit(1)).as("c12")))
     val heads = big.groupBy("lang", "w1").agg(sum(col("c12")).as("c1h"))
     val tails = big.groupBy("lang", "w2").agg(sum(col("c12")).as("c2t"))
     val totals = big.groupBy("lang").agg(sum(col("c12")).as("nb"))

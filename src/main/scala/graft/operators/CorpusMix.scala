@@ -110,32 +110,8 @@ object CorpusMix {
       .withColumnRenamed("start_tok", "shuffle_pos")
       .drop("__one", "pack_id", "n_boundary_crossings")
 
-  /** Keep at most `k` rows per stratum, chosen by the keyed hash (id
-    * as tiebreak) — the per-domain/per-source cap a web-corpus
-    * assembly applies so no single source dominates the mix. Adds
-    * `cap_rank`, the 1-based position within the stratum's hash order.
-    * Deterministic under retry, and NESTED in `k`: the hash order per
-    * stratum is fixed, so raising a source's budget only ADDS rows —
-    * it never churns documents already kept (CorpusMixSpec asserts
-    * this, the same property the sampler has in its rate).
-    *
-    * Plan shape: one hash-partitioned window per stratum, so each
-    * stratum's rows rank inside one task. Right when strata are many
-    * and balanced (the per-domain case); for few/hot strata plus small
-    * `k`, [[capPerStratumBounded]] computes the identical selection
-    * with O(strata · k) aggregate state and no per-stratum sort.
-    */
-  def capPerStratum(df: DataFrame, idCol: String, strataCol: String, k: Int,
-                    salt: String = "cap1"): DataFrame = {
-    require(k > 0, s"cap must be positive, got $k")
-    val w = Window.partitionBy(col(strataCol))
-      .orderBy(hashHex(col(idCol), salt), col(idCol))
-    df.withColumn("cap_rank", row_number().over(w).cast("long"))
-      .filter(col("cap_rank") <= k)
-  }
-
-  /** [[capPerStratum]]'s token-budget sibling: keep rows per stratum
-    * while the cumulative `tokensCol` total — accumulated in keyed-hash
+  /** [[capPerStratumBounded]]'s token-budget sibling: keep rows per
+    * stratum while the cumulative `tokensCol` total — accumulated in keyed-hash
     * order — stays within `budget`. This is how a mixing recipe is
     * actually specified ("20 B tokens of code, 5 B of forum text"):
     * budgets are in tokens, not documents, because document length
@@ -251,8 +227,9 @@ object CorpusMix {
     * (Efraimidis–Spirakis exponential race): each row draws the
     * deterministic uniform u from its keyed hash and competes with key
     * `-ln(u)/w` — the k smallest keys per stratum win, with selection
-    * probability proportional to `weightCol`. [[capPerStratum]] is the
-    * uniform special case (all weights equal ⇒ rank by hash alone).
+    * probability proportional to `weightCol`.
+    * [[capPerStratumBounded]] is the uniform special case (all weights
+    * equal ⇒ rank by hash alone).
     *
     * This is how "sample 100k docs per source, preferring high-quality
     * ones" runs reproducibly: no RNG state, stable under retry, and
@@ -307,8 +284,17 @@ object CorpusMix {
     when(wgt > 0.0, -log(u) / wgt).otherwise(lit(Double.PositiveInfinity))
   }
 
-  /** [[capPerStratum]] with BOUNDED state instead of a per-stratum
-    * sort: a [[graft.functions.BottomKSelect]] aggregate races
+  /** Keep at most `k` rows per stratum, chosen by the keyed hash (id
+    * as tiebreak) — the per-domain/per-source cap a web-corpus
+    * assembly applies so no single source dominates the mix. Adds
+    * `cap_rank`, the 1-based position within the stratum's hash order.
+    * Deterministic under retry, and NESTED in `k`: the hash order per
+    * stratum is fixed, so raising a source's budget only ADDS rows —
+    * it never churns documents already kept.
+    *
+    * BOUNDED state instead of a per-stratum window sort (the window
+    * twin is CorpusMixSpec's reference): a
+    * [[graft.functions.BottomKSelect]] aggregate races
     * (hash, id) per stratum holding O(k) rows per group — map-side
     * partials, O(strata·k) through the shuffle — and the winners (with
     * their exact ranks, read off the aggregate's sorted buffer) join
@@ -387,10 +373,10 @@ object CorpusMix {
     * corpus. Output is O(strata) rows.
     */
   def datasetCard(df: DataFrame, idCol: String, textCol: String,
-                  strata: Seq[String]): DataFrame = {
+                  strata: Seq[String]): DataFrame = Lineage.scope {
     val stop = typedLit(TextAnalysis.LangMarkers.toMap.apply("en"))
     val t1 = regexp_replace(col("__t"), TextAnalysis.EmailRegex, "<EMAIL>")
-    val per = df
+    val per = Lineage.shared(df
       .select(strata.map(col) :+ col(idCol).as("doc") :+
         col(textCol).as("__t"): _*)
       .withColumn("__ws", TextAnalysis.words(col("__t")))
@@ -410,36 +396,27 @@ object CorpusMix {
           regexp_count(
             regexp_replace(col("__t1"), TextAnalysis.PhoneRegex, "<PHONE>"),
             lit(TextAnalysis.Ipv4Regex))) > 0)
-      .withColumn("__fp", md5(col("__t")))
-      // per feeds TWO consumers (the fingerprint aggregate and the
-      // join's left side); AQE plans them independently with no
-      // ReusedExchange, so without this persist the whole tokenize +
-      // 3-stage regex cascade runs twice — the repetitionStats
-      // precedent, and the operator's "one corpus scan" claim
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val dupFps = per.groupBy(col("__fp"))
-        .agg(count(lit(1)).as("__copies"))
-        .filter(col("__copies") > 1)
-        .select(col("__fp"), lit(1L).as("__dup"))
-      // the aggregate is O(strata) rows — eagerly localCheckpoint'ed so
-      // the returned card no longer roots in `per` and the corpus-wide
-      // persist can be released here rather than leaking for the life
-      // of the session (the contaminationReportBloom discipline)
-      per.join(dupFps, Seq("__fp"), "left")
-        .groupBy(strata.map(col): _*)
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n")).as("n_tokens"),
-          sum(col("q_micro")).as("__qsum"),
-          sum(when(col("__pii"), 1L).otherwise(0L)).as("n_pii_docs"),
-          sum(when(col("__dup").isNotNull, 1L).otherwise(0L)).as("n_dup_docs"))
-        .select(strata.map(col) ++ Seq(
-          col("n_docs"), col("n_tokens"),
-          expr("n_tokens div n_docs").as("mean_tokens"),
-          expr("__qsum div n_docs").as("mean_q_micro"),
-          col("n_pii_docs"), col("n_dup_docs"),
-          expr("n_dup_docs * 1000000 div n_docs").as("dup_ppm")): _*)
-        .localCheckpoint(true)
-    } finally per.unpersist()
+      .withColumn("__fp", md5(col("__t"))))
+    // per feeds TWO consumers (the fingerprint aggregate and the join's
+    // left side), so it is shared — else the whole tokenize + 3-stage
+    // regex cascade runs twice. The scope checkpoints the O(strata)
+    // card and frees the corpus-wide per.
+    val dupFps = per.groupBy(col("__fp"))
+      .agg(count(lit(1)).as("__copies"))
+      .filter(col("__copies") > 1)
+      .select(col("__fp"), lit(1L).as("__dup"))
+    per.join(dupFps, Seq("__fp"), "left")
+      .groupBy(strata.map(col): _*)
+      .agg(count(lit(1)).as("n_docs"),
+        sum(col("n")).as("n_tokens"),
+        sum(col("q_micro")).as("__qsum"),
+        sum(when(col("__pii"), 1L).otherwise(0L)).as("n_pii_docs"),
+        sum(when(col("__dup").isNotNull, 1L).otherwise(0L)).as("n_dup_docs"))
+      .select(strata.map(col) ++ Seq(
+        col("n_docs"), col("n_tokens"),
+        expr("n_tokens div n_docs").as("mean_tokens"),
+        expr("__qsum div n_docs").as("mean_q_micro"),
+        col("n_pii_docs"), col("n_dup_docs"),
+        expr("n_dup_docs * 1000000 div n_docs").as("dup_ppm")): _*)
   }
 }

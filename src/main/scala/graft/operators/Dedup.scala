@@ -15,13 +15,9 @@ import org.apache.spark.sql.functions._
   * sum-by-key aggregation surface (SURVEY.md §2.4 A1, §2.5 G1 tokenize)
   * to the document-pipeline capabilities the builder brief requires.
   *
-  * CACHING CONTRACT: the pair-finding operators `persist()` small
-  * intermediate relations that feed self-joins (AQE plans the two
-  * sides independently — zero ReusedExchange — so an unpersisted
-  * shared subtree would run twice). Spark frees them on eviction
-  * pressure, but long-lived sessions issuing many calls should
-  * `spark.catalog.clearCache()` between logical jobs, as Verify and
-  * Bench do.
+  * The pair-finding operators share the relations their self-joins
+  * read through [[Lineage.shared]]; [[Lineage]] states when each is
+  * freed.
   */
 object Dedup {
 
@@ -89,7 +85,7 @@ object Dedup {
     * the observable DedupSpec's chain fixture budgets to prove the
     * pointer jump really is O(log diameter).
     */
-  private[graft] def componentsWithRounds(pairs: DataFrame): (DataFrame, Int) = {
+  private[graft] def componentsWithRounds(pairs: DataFrame): (DataFrame, Int) = Lineage.scope {
     // hash-partitioned on dst ONCE, before the persist: each round's
     // neighbor-min aggregate groups by dst, so it rides this
     // partitioning exchange-free every round — the previous
@@ -103,58 +99,55 @@ object Dedup {
     // table outgrows broadcast, flip the persist key to src and pay
     // the dst exchange instead — either way ONE full-width exchange
     // per round maximum, never two.
-    val edges = pairs.select(col("i").as("src"), col("j").as("dst"))
+    val edges = Lineage.shared(pairs.select(col("i").as("src"), col("j").as("dst"))
       .unionByName(pairs.select(col("j").as("src"), col("i").as("dst")))
-      .repartition(col("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("dst")))
     val loop = new Lineage.Rounds
-    try {
-      var labels = loop.next(edges.select(col("src").as("node")).distinct()
-        .withColumn("lab", col("node")))
-      var changed = 1L
-      var rounds = 0
-      while (changed > 0) {
-        // min over in-neighbors, partially aggregated map-side and
-        // finalized on the edges' own dst partitioning (no exchange)
-        val nbrMin = edges
-          .join(labels.select(col("node").as("src"), col("lab").as("nlab")),
-            Seq("src"))
-          .groupBy(col("dst").as("node"))
-          .agg(min(col("nlab")).as("nblab"))
-        // fold in the node's own label (labels start at self and only
-        // decrease, so min(own, neighbor-min) is the round's new label);
-        // `old` rides along so the convergence count is a cheap scan of
-        // the checkpoint, not a join with the previous round
-        val minLab = labels
-          .join(nbrMin, Seq("node"), "left_outer")
-          .select(col("node"),
-            least(col("lab"), coalesce(col("nblab"), col("lab"))).as("lab"),
-            col("lab").as("old"))
-        // pointer jump: lab := the PREVIOUS round's label of the
-        // freshly-minimized lab. Jumping through the checkpointed
-        // `labels` (not through minLab itself) matters: minLab feeding
-        // both join sides would make AQE re-run the whole edge join +
-        // aggregation twice per round (measured ~2× on the dense
-        // decade). Every lab IS a node (labels start at self and min()
-        // only picks node ids), so the inner join is total; the jumped
-        // label is <= lab by label monotonicity, so `least` is
-        // unnecessary, and composing min-step with last round's map
-        // still doubles the covered distance per round. Round 1's jump
-        // is the identity (labels start at self) and is skipped — on
-        // tiny-diameter graphs (the near-dup norm, 2-3 rounds total)
-        // that removes a third of the jump's constant cost.
-        val jumped =
-          if (rounds == 0) minLab.select(col("node"), col("lab"), col("old"))
-          else minLab
-            .join(labels.select(col("node").as("lab"), col("lab").as("jlab")),
-              Seq("lab"))
-            .select(col("node"), col("jlab").as("lab"), col("old"))
-        labels = loop.next(jumped)
-        changed = labels.filter(col("lab") =!= col("old")).count()
-        rounds += 1
-      }
-      (labels.select(col("node").as("doc"), col("lab").as("cluster")), rounds)
-    } finally edges.unpersist()
+    var labels = loop.next(edges.select(col("src").as("node")).distinct()
+      .withColumn("lab", col("node")))
+    var changed = 1L
+    var rounds = 0
+    while (changed > 0) {
+      // min over in-neighbors, partially aggregated map-side and
+      // finalized on the edges' own dst partitioning (no exchange)
+      val nbrMin = edges
+        .join(labels.select(col("node").as("src"), col("lab").as("nlab")),
+          Seq("src"))
+        .groupBy(col("dst").as("node"))
+        .agg(min(col("nlab")).as("nblab"))
+      // fold in the node's own label (labels start at self and only
+      // decrease, so min(own, neighbor-min) is the round's new label);
+      // `old` rides along so the convergence count is a cheap scan of
+      // the checkpoint, not a join with the previous round
+      val minLab = labels
+        .join(nbrMin, Seq("node"), "left_outer")
+        .select(col("node"),
+          least(col("lab"), coalesce(col("nblab"), col("lab"))).as("lab"),
+          col("lab").as("old"))
+      // pointer jump: lab := the PREVIOUS round's label of the
+      // freshly-minimized lab. Jumping through the checkpointed
+      // `labels` (not through minLab itself) matters: minLab feeding
+      // both join sides would make AQE re-run the whole edge join +
+      // aggregation twice per round (measured ~2× on the dense
+      // decade). Every lab IS a node (labels start at self and min()
+      // only picks node ids), so the inner join is total; the jumped
+      // label is <= lab by label monotonicity, so `least` is
+      // unnecessary, and composing min-step with last round's map
+      // still doubles the covered distance per round. Round 1's jump
+      // is the identity (labels start at self) and is skipped — on
+      // tiny-diameter graphs (the near-dup norm, 2-3 rounds total)
+      // that removes a third of the jump's constant cost.
+      val jumped =
+        if (rounds == 0) minLab.select(col("node"), col("lab"), col("old"))
+        else minLab
+          .join(labels.select(col("node").as("lab"), col("lab").as("jlab")),
+            Seq("lab"))
+          .select(col("node"), col("jlab").as("lab"), col("old"))
+      labels = loop.next(jumped)
+      changed = labels.filter(col("lab") =!= col("old")).count()
+      rounds += 1
+    }
+    (labels.select(col("node").as("doc"), col("lab").as("cluster")), rounds)
   }
 
   /** Train/eval DECONTAMINATION report: for every training doc sharing
@@ -234,27 +227,19 @@ object Dedup {
     */
   def contaminationReportBloom(train: DataFrame, eval: DataFrame,
                                idCol: String, textCol: String,
-                               n: Int = 8, fpp: Double = 0.01): DataFrame = {
-    // persisted: the eval-side explode + distinct — the dominant eval
+                               n: Int = 8, fpp: Double = 0.01): DataFrame = Lineage.scope {
+    // shared: the eval-side explode + distinct — the dominant eval
     // cost — feeds THREE consumers (the sizing count, the bloomFilter
-    // job, the confirm join); unpersisted it would execute three times
-    // (the file's caching contract). Sized on (approximate) DISTINCT
+    // job, the confirm join). Sized on (approximate) DISTINCT
     // shingles: the (shingle, eval_doc) row count over-allocates the
     // bit array by the cross-doc sharing factor; the 1.1 headroom
     // covers the sketch's error band, and bloom sizing only needs an
-    // upper bound — the confirm join keeps exactness regardless.
-    val evalSh = shingles(eval, idCol, textCol, n)
-      .select(col("shingle"), col("doc").as("eval_doc"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // The report aggregate is eagerly localCheckpoint'ed (it is
-    // O(contaminated train docs) — report-sized) so the returned frame
-    // no longer roots in evalSh and the wide persist can be RELEASED
-    // here instead of living as long as the result — the DedupIndex
-    // discipline; the call was already eager (the sizing count and
-    // bloom job inside bloomReport run at call time).
-    try bloomReport(train, evalSh, idCol, textCol, n, fpp)
-      .localCheckpoint(true)
-    finally evalSh.unpersist()
+    // upper bound — the confirm join keeps exactness regardless. The
+    // call is eager anyway (sizing count, bloom job), so the scope
+    // checkpoints the report-sized result and frees evalSh.
+    val evalSh = Lineage.shared(shingles(eval, idCol, textCol, n)
+      .select(col("shingle"), col("doc").as("eval_doc")))
+    bloomReport(train, evalSh, idCol, textCol, n, fpp)
   }
 
   /** The d11 report WITHOUT the eager-checkpoint/persist wrapping the
@@ -473,10 +458,9 @@ object Dedup {
                                   candidateBudget: Long = Long.MaxValue): DataFrame = {
     // persisted: feeds the df aggregate, the pair generator's prefilter
     // join and the set-size aggregate — three consumers of one shuffle
-    val sh = rawShingles(df, idCol, textCol, n)
+    val sh = Lineage.shared(rawShingles(df, idCol, textCol, n)
       .repartition(col("shingle"))
-      .dropDuplicates("doc", "shingle")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .dropDuplicates("doc", "shingle"))
     // true set size: ALL of a doc's distinct shingles (pre-prefilter —
     // the df guard only prunes which shingles can produce pairs)
     val sizes = sh.groupBy(col("doc")).agg(count(lit(1)).as("__sz"))
@@ -644,16 +628,14 @@ object Dedup {
     // frames — (docs × 129 longs) and the candidate pairs — exactly
     // what a 100 TB run would checkpoint before re-ranking. Measured
     // 3.8s → 2.6s on the sf0.1 corpus.
-    val sigs = minhashSignatures(df, idCol, textCol, n, bands * rows)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sigs = Lineage.shared(minhashSignatures(df, idCol, textCol, n, bands * rows))
     val buckets = bandRows(sigs, bands, rows)
-    val cand = buckets.as("x")
+    val cand = Lineage.shared(buckets.as("x")
       .join(buckets.as("y"),
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
           col("x.doc") < col("y.doc"))
       .select(col("x.doc").as("i"), col("y.doc").as("j"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     verifyExactJaccard(df, idCol, textCol, cand, n, threshold, maxDf)
   }
 
@@ -744,11 +726,10 @@ object Dedup {
     // explode runs over the (tiny) candidate subset.
     val candDocs = cand
       .select(explode(array(col("i"), col("j"))).as("cand_doc")).distinct()
-    val candSh = hashedShingles(
+    val candSh = Lineage.shared(hashedShingles(
         df.join(candDocs, col(idCol) === col("cand_doc"), "left_semi"),
         idCol, textCol, n)
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     val sizes = candSh.groupBy(col("doc")).agg(count(lit(1)).as("sz"))
     // no broadcast HINT: the hot set is tiny on natural corpora (AQE
     // broadcasts it by itself) but its size is corpus-dependent and a
@@ -827,17 +808,16 @@ object Dedup {
     * all of them — then the exact popcount(xor) check removes
     * block-collision false positives. `hamming` is BIGINT for oracle
     * dtype parity. The block relation feeds BOTH sides of the self-join,
-    * so it is persisted per this file's caching contract (PlanSpec
-    * guards the cache scan in d4's plan).
+    * so it is [[Lineage.shared]] (PlanSpec guards the cache scan in d4's
+    * plan).
     */
   def simhashBlockPairs(fps: DataFrame, maxHamming: Int = 3): DataFrame = {
     require(maxHamming < 4, "4-block banding only guarantees Hamming <= 3")
-    val blocks = fps.select(col("doc"), col("fp"),
+    val blocks = Lineage.shared(fps.select(col("doc"), col("fp"),
       explode(array((0 until 4).map(b =>
         struct(lit(b).as("blk"),
           shiftright(col("fp"), b * 16).bitwiseAND(0xFFFFL).as("v"))): _*)).as("bk"))
-      .select(col("doc"), col("fp"), col("bk.blk").as("blk"), col("bk.v").as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("doc"), col("fp"), col("bk.blk").as("blk"), col("bk.v").as("v")))
     blocks.as("x")
       .join(blocks.as("y"),
         col("x.blk") === col("y.blk") && col("x.v") === col("y.v") &&
@@ -931,21 +911,17 @@ object Dedup {
     */
   def dupNgramCoverage(df: DataFrame, idCol: String = "doc_id",
                        textCol: String = "text", n: Int = 8): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val toks = tokenized(df, idCol, textCol)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val occ = toks
+    val toks = Lineage.shared(tokenized(df, idCol, textCol))
+    val occ = Lineage.shared(toks
       .select(col("doc"), explode(transform(shingleIdx(n), i =>
         struct(i.as("i"),
           xxhash64((0 until n).map(o => element_at(col("ws"), i + o)): _*)
             .as("h")))).as("g"))
-      .select(col("doc"), col("g.i").as("i"), col("g.h").as("h"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .select(col("doc"), col("g.i").as("i"), col("g.h").as("h")))
     val dup = occ.groupBy("h")
       .agg(min(col("doc")).as("d0"), max(col("doc")).as("d1"))
       .filter(col("d0") =!= col("d1")).select("h")
-    val dupOcc = occ.join(dup, Seq("h"), "left_semi")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val dupOcc = Lineage.shared(occ.join(dup, Seq("h"), "left_semi"))
     val perDoc = dupOcc.groupBy("doc").agg(count(lit(1)).as("n_dup_ngrams"))
     val covered = dupOcc
       .select(col("doc"), explode(sequence(col("i"), col("i") + (n - 1))).as("p"))
@@ -989,11 +965,8 @@ object Dedup {
     */
   def ngramNovelty(df: DataFrame, idCol: String = "doc_id",
                    textCol: String = "text", n: Int = 8): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    // persisted: feeds the owner aggregate AND the join-back (AQE plans
-    // the branches independently — the engine caching contract)
-    val sh = shingles(df, idCol, textCol, n)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // shared: feeds the owner aggregate AND the join-back
+    val sh = Lineage.shared(shingles(df, idCol, textCol, n))
     val owner = sh.groupBy(col("shingle")).agg(min(col("doc")).as("owner"))
     val per = sh.join(owner, Seq("shingle"))
       .groupBy(col("doc"))

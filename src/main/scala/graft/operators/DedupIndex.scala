@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.core.Tables
 
@@ -83,23 +82,21 @@ object DedupIndex {
 
   private def writeBands(docs: DataFrame, path: String, idCol: String,
                          textCol: String, n: Int, bands: Int, rows: Int,
-                         overwrite: Boolean): Unit = {
+                         overwrite: Boolean): Unit = Lineage.scope {
     val mode = if (overwrite) "overwrite" else "append"
-    val sigs = Dedup.minhashSignatures(docs, idCol, textCol, n, bands * rows)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // full signatures ride along (docs × bands·rows longs): the
-      // streaming probe estimates Jaccard from signature agreement —
-      // exact shingle verification needs corpus TEXTS, which a stream
-      // must not re-scan per microbatch. Sigs BEFORE bands: a torn
-      // append then leaves bands ⊆ sigs (an unreferenced sig is inert;
-      // a band row with no sig would silently drop its candidate in
-      // the streaming verify join).
-      sigs.write.mode(mode).parquet(s"$path/sigs")
-      Dedup.bandRows(sigs, bands, rows)
-        .sortWithinPartitions(col("band"), col("bh"))
-        .write.mode(mode).parquet(s"$path/bands")
-    } finally sigs.unpersist()
+    val sigs = Lineage.shared(
+      Dedup.minhashSignatures(docs, idCol, textCol, n, bands * rows))
+    // full signatures ride along (docs × bands·rows longs): the
+    // streaming probe estimates Jaccard from signature agreement —
+    // exact shingle verification needs corpus TEXTS, which a stream
+    // must not re-scan per microbatch. Sigs BEFORE bands: a torn
+    // append then leaves bands ⊆ sigs (an unreferenced sig is inert;
+    // a band row with no sig would silently drop its candidate in
+    // the streaming verify join).
+    sigs.write.mode(mode).parquet(s"$path/sigs")
+    Dedup.bandRows(sigs, bands, rows)
+      .sortWithinPartitions(col("band"), col("bh"))
+      .write.mode(mode).parquet(s"$path/bands")
   }
 
   /** The (n, bands, rows, maxDf) scheme the index was built with — one
@@ -136,21 +133,19 @@ object DedupIndex {
   def probePairs(spark: SparkSession, path: String, batch: DataFrame,
                  texts: DataFrame, withinBatch: Boolean = true,
                  threshold: Double = 0.8,
-                 idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+                 idCol: String = "doc_id", textCol: String = "text"): DataFrame = Lineage.scope {
     val (n, bands, rows, _) = meta(spark, path)
-    val batchBands = Dedup.bandRows(
-        Dedup.minhashSignatures(batch, idCol, textCol, n, bands * rows),
-        bands, rows)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try probePairsImpl(spark, path, batchBands, texts, withinBatch,
+    val batchBands = Lineage.shared(Dedup.bandRows(
+      Dedup.minhashSignatures(batch, idCol, textCol, n, bands * rows),
+      bands, rows))
+    probePairsImpl(spark, path, batchBands, texts, withinBatch,
       threshold, idCol, textCol, n)
-    finally batchBands.unpersist(blocking = false)
   }
 
   private def probePairsImpl(spark: SparkSession, path: String,
                              batchBands: DataFrame, texts: DataFrame,
                              withinBatch: Boolean, threshold: Double,
-                             idCol: String, textCol: String, n: Int): DataFrame = {
+                             idCol: String, textCol: String, n: Int): DataFrame = Lineage.scope {
     val indexBands = Tables.parquet(spark, s"$path/bands")
     val cross = indexBands.as("x")
       .join(batchBands.as("y"),
@@ -165,18 +160,13 @@ object DedupIndex {
             col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
               col("x.doc") < col("y.doc"))
           .select(col("x.doc").as("i"), col("y.doc").as("j")))
-    val cand = candRaw.distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    // Eagerly materialize the (tiny) verified pairs, then free the probe
-    // intermediates: this is a recurring per-ingest-batch call, so cached
-    // batchBands/cand blocks would otherwise accumulate across batches in
-    // a long-lived session until eviction pressure. The checkpoint
-    // snapshot backing the returned DataFrame is reclaimed by the
-    // ContextCleaner once the caller drops it (same contract as
-    // [[Dedup.connectedComponents]]'s final snapshot).
-    try Dedup.verifyExactJaccardWith(texts, idCol, textCol, cand, n,
-        threshold, hot = Tables.parquet(spark, s"$path/hot"))
-      .localCheckpoint(true)
-    finally cand.unpersist(blocking = false)
+    // the scope checkpoints the (tiny) verified pairs and frees the
+    // probe intermediates: this is a recurring per-ingest-batch call,
+    // so cached batchBands/cand blocks would otherwise accumulate
+    // across batches in a long-lived session
+    val cand = Lineage.shared(candRaw.distinct())
+    Dedup.verifyExactJaccardWith(texts, idCol, textCol, cand, n,
+      threshold, hot = Tables.parquet(spark, s"$path/hot"))
   }
 
   /** Build once per (dataDir content, corpus variant, scheme) and reuse
@@ -243,26 +233,23 @@ object DedupIndex {
   def probeNovelty(spark: SparkSession, path: String, batch: DataFrame,
                    idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val n = Tables.parquet(spark, s"$path/nmeta").head().getInt(0)
-    val bg = Dedup.hashedShingleSet(batch, idCol, textCol, n)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val bmin = bg.groupBy(col("h")).agg(min(col("doc")).as("bown"))
-    // grams the corpus-at-rest has never seen; their first owner is
-    // the batch's min id
-    val novelGrams = bmin.join(
-      Tables.parquet(spark, s"$path/owners").select(col("h")),
-      Seq("h"), "left_anti")
-    // eagerly materialize the O(batch-docs) aggregate, then free the
-    // batch gram cache — the probePairsImpl discipline: this is a
-    // recurring per-ingest-batch call, and an unreleased bg would
-    // accumulate cached blocks across batches in a long-lived session
-    val per =
-      try bg.join(novelGrams, Seq("h"), "left")
+    // the scope checkpoints the O(batch-docs) aggregate and frees the
+    // batch gram relation, which a recurring per-batch call would
+    // otherwise accumulate
+    val per = Lineage.scope {
+      val bg = Lineage.shared(Dedup.hashedShingleSet(batch, idCol, textCol, n))
+      val bmin = bg.groupBy(col("h")).agg(min(col("doc")).as("bown"))
+      // grams the corpus-at-rest has never seen; their first owner is
+      // the batch's min id
+      val novelGrams = bmin.join(
+        Tables.parquet(spark, s"$path/owners").select(col("h")),
+        Seq("h"), "left_anti")
+      bg.join(novelGrams, Seq("h"), "left")
         .groupBy(col("doc"))
         .agg(count(lit(1)).as("n_grams"),
           sum(when(col("bown") === col("doc"), 1L).otherwise(0L))
             .as("n_novel"))
-        .localCheckpoint(true)
-      finally bg.unpersist(blocking = false)
+    }
     batch.select(col(idCol).as("doc"))
       .join(per, Seq("doc"), "left")
       .select(col("doc"),

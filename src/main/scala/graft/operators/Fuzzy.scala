@@ -167,7 +167,7 @@ object Fuzzy {
                                 waveCandidateCeiling: Long = 0L,
                                 waveScratchBudgetBytes: Long = DefaultWaveScratchBudgetBytes,
                                 maxWaves: Int = 64,
-                                onWaves: Int => Unit = _ => ()): DataFrame = {
+                                onWaves: Int => Unit = _ => ()): DataFrame = Lineage.scope {
     require(waveCandidateCeiling >= 0 && waveScratchBudgetBytes > 0 &&
       maxWaves >= 1)
     val whole = build(left, right, leftId, rightId, leftStr, rightStr,
@@ -285,20 +285,19 @@ object Fuzzy {
         maxDist, q, blk = None, budget = Some(candidateBudget)), maxDist)
   }
 
-  private def profileOf(b: Build, maxDist: Int): EditJoinStats = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val gram = b.candGram.persist(lvl)
-    val short = b.candShort.persist(lvl)
-    try {
+  /** `build` runs inside the profile's scope, so the stages it shares
+    * and the measured path's checkpoints are all freed on return.
+    */
+  private def profileOf(build: => Build, maxDist: Int): EditJoinStats =
+    Lineage.scope {
+      val b = build
       // b.verify / b.result ARE the shipped pipeline's stages — the
       // profile counts the same DataFrames the join executes, so the
       // stats cannot drift from the operator they predict
-      val verify = b.verify.persist(lvl)
-      try EditJoinStats(gram.count(), short.count(), verify.count(),
-        b.result.count())
-      finally verify.unpersist()
-    } finally { gram.unpersist(); short.unpersist() }
-  }
+      EditJoinStats(Lineage.shared(b.candGram).count(),
+        Lineage.shared(b.candShort).count(),
+        Lineage.shared(b.verify).count(), b.result.count())
+    }
 
   /** The pipeline's handles: the candidate/verify/result stages, plus —
     * for the measured path — the exact stage volumes and the
@@ -348,7 +347,7 @@ object Fuzzy {
     // instead of re-shuffling the inputs per wave. Linear-size, like
     // the prefix checkpoints.
     val (l, r) =
-      if (measure) (l0.localCheckpoint(true), r0.localCheckpoint(true))
+      if (measure) (Lineage.materialize(l0), Lineage.materialize(r0))
       else (l0, r0)
 
     // padded q-gram multiset as (gram, occurrence-ordinal) structs;
@@ -409,8 +408,8 @@ object Fuzzy {
       val p0r = prefix(rg, "__rid", "__rs")
       if (budget.isEmpty && !measure) (p0l, p0r, None)
       else {
-        val plC = p0l.localCheckpoint(true)
-        val prC = p0r.localCheckpoint(true)
+        val plC = Lineage.materialize(p0l)
+        val prC = Lineage.materialize(p0r)
         def keyCounts(df: DataFrame, keys: Seq[String]) = df
           .groupBy(keys.map(col): _*)
           .agg(count(lit(1)).cast("decimal(38,0)").as("__n"))

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Iterative graph analytics beyond the connected-components family in
   * [[Dedup]]: fixed-iteration PageRank in exact integer arithmetic.
@@ -55,25 +54,22 @@ object Graph {
     */
   def pageRank(edges: DataFrame, iters: Int,
                dampNum: Long = 85L, dampDen: Long = 100L,
-               totalMass: Long = 1000000000000L): DataFrame = {
+               totalMass: Long = 1000000000000L): DataFrame = Lineage.scope {
     require(iters >= 1 && dampNum >= 0 && dampNum <= dampDen)
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
+    val e = Lineage.shared(edges.select(col("src").cast("long"), col("dst").cast("long"))
       .distinct()
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("src")))
     val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val edgesDeg = e.join(deg, "src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("id"))
+    val edgesDeg = Lineage.shared(e.join(deg, "src"))
+    val nodes = Lineage.shared(e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     val n = nodes.count()
     val r0 = totalMass / n
     val base = (dampDen - dampNum) * r0 / dampDen
     var ranks = nodes.withColumn("rank", lit(r0))
     val loop = new Lineage.Rounds
-    try for (_ <- 1 to iters) {
+    for (_ <- 1 to iters) {
       // `div`, not `/`: Spark's `/` on longs is DOUBLE division, and a
       // quotient whose fraction is close enough to 1 rounds UP past the
       // integer the oracle's integer division produces. `div` is true
@@ -98,10 +94,6 @@ object Graph {
         .select(col("id"),
           expr(s"${base}L + ($dampNum * coalesce(s, 0L)) div $dampDen")
             .cast("long").as("rank")))
-    } finally {
-      // the returned ranks is a self-contained checkpoint — the setup
-      // relations need not outlive the call in the cache manager
-      e.unpersist(); edgesDeg.unpersist(); nodes.unpersist()
     }
     ranks
   }
@@ -145,15 +137,13 @@ object Graph {
     */
   def pageRankConserving(edges: DataFrame, iters: Int,
                          dampNum: Long = 85L, dampDen: Long = 100L,
-                         totalMass: Long = 1000000000000L): DataFrame = {
+                         totalMass: Long = 1000000000000L): DataFrame = Lineage.scope {
     require(iters >= 1 && dampNum >= 0 && dampNum <= dampDen)
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
+    val e = Lineage.shared(edges.select(col("src").cast("long"), col("dst").cast("long"))
       .distinct()
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("src")))
     val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val edgesDeg = e.join(deg, "src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val edgesDeg = Lineage.shared(e.join(deg, "src"))
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id")))
       .distinct()
@@ -165,14 +155,13 @@ object Graph {
       .select(col("id"), col("__hasout").isNull.as("dang"))
     // position order (dangling first, id): see the Scaladoc — makes
     // the dangling share of every apportionment min(m, |D|)
-    val (positioned, rangeParts) = SequencePack.rangePrefixSum(
+    val positioned = SequencePack.prefixSumBy(
       nodes.withColumn("__ord",
           struct(when(col("dang"), 0).otherwise(1).as("d"),
             col("id").as("i")))
         .withColumn("__w", lit(1L)), Seq("__ord"), "__w", outCol = "pos")
-    val nodesPos = positioned
-      .select(col("id"), col("pos"), col("dang"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val nodesPos = Lineage.shared(positioned
+      .select(col("id"), col("pos"), col("dang")))
     val (n, nDang) = {
       val r = nodesPos.agg(count(lit(1)),
         sum(when(col("dang"), 1L).otherwise(0L))).head()
@@ -187,7 +176,7 @@ object Graph {
       lit(r0) + when(col("pos") < lit(totalMass % n), 1L).otherwise(0L))
     var dangling = nDang * r0 + math.min(totalMass % n, nDang)
     val loop = new Lineage.Rounds
-    try for (_ <- 1 to iters) {
+    for (_ <- 1 to iters) {
       val q = dangling / n
       // shuffle_hash on the rank side — the g1 rationale verbatim
       val contribs = edgesDeg
@@ -215,12 +204,6 @@ object Graph {
       ranks = rPrime.select(col("id"), col("pos"), col("dang"),
         (col("rank") + lit(delta / n) +
           when(col("pos") < lit(delta % n), 1L).otherwise(0L)).as("rank"))
-    } finally {
-      // the returned projection roots in the final round's checkpoint —
-      // release the setup relations (e's cache also backs deg/edgesDeg,
-      // the prefix sum's range partitioning backs nodesPos)
-      e.unpersist(); edgesDeg.unpersist(); nodesPos.unpersist()
-      rangeParts.unpersist()
     }
     ranks.select(col("id"), col("rank"))
   }
@@ -246,11 +229,10 @@ object Graph {
     * plans constant-size across iterations and frees the round each
     * new one replaces.
     */
-  def bfsHops(edges: DataFrame, source: Long, iters: Int): DataFrame = {
+  def bfsHops(edges: DataFrame, source: Long, iters: Int): DataFrame = Lineage.scope {
     require(iters >= 0)
     val spark = edges.sparkSession
-    val adj = undirected(edges).repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val adj = Lineage.shared(undirected(edges).repartition(col("src")))
     import spark.implicits._
     // per-round state is cut per round, not persisted: each round
     // references the previous relation TWICE (frontier join + visited
@@ -261,7 +243,7 @@ object Graph {
     var visited = loop.next(Seq((source, 0)).toDF("id", "dist")
       .select(col("id").cast("long"), col("dist").cast("int")))
     var frontier = visited.select(col("id"))
-    try for (k <- 1 to iters) {
+    for (k <- 1 to iters) {
       // neighbors of the frontier not yet assigned a (smaller) dist
       // shuffle_hash on the frontier: it is the SMALL side every round
       // (shrinking toward the BFS fringe), and sort-merge would re-sort
@@ -278,7 +260,7 @@ object Graph {
       // deriving it from `reached` would re-run the whole round's
       // join/anti-join when the next round evaluates it
       frontier = visited.filter(col("dist") === k).select(col("id"))
-    } finally adj.unpersist()
+    }
     visited
   }
 
@@ -337,12 +319,11 @@ object Graph {
   }
 
   def bellmanFord(edges: DataFrame, source: Long, iters: Int,
-                  canonicalEdges: Boolean = false): DataFrame = {
+                  canonicalEdges: Boolean = false): DataFrame = Lineage.scope {
     require(iters >= 0)
     val spark = edges.sparkSession
     val fin = Long.MaxValue
-    val adj = bellmanAdjacency(edges, canonicalEdges)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val adj = Lineage.shared(bellmanAdjacency(edges, canonicalEdges))
     import spark.implicits._
     // cut per round — each round references the previous relation
     // twice (dist merge + frontier relax), so an uncut plan doubles per
@@ -351,7 +332,7 @@ object Graph {
     val init = loop.next(Seq((source, 0L, true)).toDF("id", "d", "improved"))
     var dist = init.select(col("id"), col("d"))
     var frontier = dist
-    try for (_ <- 1 to iters) {
+    for (_ <- 1 to iters) {
       val cand = adj
         .join(frontier.withColumnRenamed("id", "src"), "src")
         .select(col("dst").as("id"), (col("d") + col("w")).as("nd"))
@@ -367,7 +348,7 @@ object Graph {
       // bfsHops lineage rule)
       dist = merged.select(col("id"), col("d"))
       frontier = merged.filter(col("improved")).select(col("id"), col("d"))
-    } finally adj.unpersist()
+    }
     dist
   }
 
@@ -451,7 +432,7 @@ object Graph {
   private[graft] def triangleCountsWith(
       edges: DataFrame, fixedWaves: Option[Int],
       closeBloomMaxEdges: Long = DefaultCloseBloomMaxEdges,
-      scratchBudgetBytes: Long = DefaultWaveScratchBytes): DataFrame = {
+      scratchBudgetBytes: Long = DefaultWaveScratchBytes): DataFrame = Lineage.scope {
     val undPlan = canonicalUnd(edges)
     // serialized bloom over the canonical edge fingerprints, or None
     // when the edge set out-sizes the broadcast-a-bloom regime (see
@@ -495,19 +476,20 @@ object Graph {
         .groupBy(col("node"))
         .agg(count(lit(1)).as("n_triangles"))
     }
-    val und = undPlan.persist(StorageLevel.MEMORY_AND_DISK)
+    val und = Lineage.shared(undPlan)
     // orientation shared by the auto wedge pre-count and the
     // single-pass join; never materialized on the fixed-waves path
     // (which orients straight into the bucketed table write)
-    lazy val orientedCached = orient(und).persist(StorageLevel.MEMORY_AND_DISK)
+    lazy val orientedCached = Lineage.shared(orient(und))
     // auto: the exact wedge volume, one aggregate over the cached
     // orientation the join reuses
     val waves = fixedWaves.getOrElse(
       wavesFor(wedgesOf(orientedCached), scratchBudgetBytes))
     if (waves == 1) {
       // single-pass: persisted in-memory relations feed both join
-      // sides within the one job; AQE sizes them at runtime (broadcast
-      // when small), so no hints
+      // sides; AQE sizes them at runtime (broadcast when small), so no
+      // hints. The O(nodes) corner counts read both caches, so the
+      // scope checkpoints them and frees the caches
       corners(orientedCached, und, closeBloom(und), 1, 0, hints = false)
     } else {
       // WAVED execution — the in-box/bounded-scratch path for wedge
@@ -543,9 +525,9 @@ object Graph {
           .saveAsTable(orTbl)
         val orientedT = spark.table(orTbl)
         // the waved pipeline reads only the bucketed tables from here —
-        // release the cached copies before the wedge waves need scratch
-        if (fixedWaves.isEmpty) orientedCached.unpersist(blocking = false)
-        und.unpersist(blocking = false)
+        // free the cached copies before the wedge waves need scratch
+        if (fixedWaves.isEmpty) Lineage.release(orientedCached)
+        Lineage.release(und)
         val bloom = closeBloom(undT) // one bloom serves every wave
         // shuffle_hash hints: the build sides are bucketed scans the
         // wave reads exchange-free; unhinted, Catalyst would plan
@@ -784,14 +766,11 @@ object Graph {
     * broadcast (the t13/q9b sketch-scalar pattern) — no collect, no
     * cartesian, no window.
     */
-  def modularity(edges: DataFrame, labels: DataFrame): DataFrame = {
-    // Eager localCheckpoint, not persist: adj feeds three consumers
-    // (m, e_in, d_sum) so it must materialize once, but a persist here
-    // would sit in the cache manager with no natural unpersist site
-    // (the result is lazy — the caller owns materialization). The
-    // checkpoint's lifetime is the returned plan's reachability; the
-    // ContextCleaner reclaims the blocks once the caller drops it.
-    val adj = undirected(edges).localCheckpoint(eager = true)
+  def modularity(edges: DataFrame, labels: DataFrame): DataFrame = Lineage.scope {
+    // checkpointed, not shared: adj feeds three consumers (m, e_in,
+    // d_sum) of a result that stays lazy, so it materializes once here
+    // and the returned plan reads it
+    val adj = Lineage.materialize(undirected(edges))
     val lab = labels.select(col("id"), col("label"))
     val dec = "decimal(38,0)"
     val mRel = adj.agg((count(lit(1)) / 2).cast("long").as("__m"))

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Statistical language-model quality scoring — the CCNet/KenLM-style
   * signal a training-data pipeline uses to rank documents by fluency:
@@ -53,10 +52,9 @@ object LanguageModel {
                 textCol: String = "text"): DataFrame = {
     // materialize words once; slicing/zipping a materialized array
     // column avoids the per-element re-eval pitfall
-    val toks = df
+    val toks = Lineage.shared(df
       .select(col(idCol).as("doc"), col(langCol).as("lang"),
-        TextAnalysis.words(col(textCol)).as("ws"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        TextAnalysis.words(col(textCol)).as("ws")))
     val occ = toks
       .filter(size(col("ws")) >= 2)
       .select(col("doc"), col("lang"),
@@ -70,12 +68,10 @@ object LanguageModel {
     // model → head totals. docbg feeds both the model build and the
     // scoring join; model feeds both heads and the join — persist the
     // shared subtrees (AQE plans reuses independently otherwise).
-    val docbg = occ.groupBy("doc", "lang", "w1", "w2")
-      .agg(count(lit(1)).as("m"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val model = docbg.groupBy("lang", "w1", "w2")
-      .agg(sum(col("m")).as("c12"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val docbg = Lineage.shared(occ.groupBy("doc", "lang", "w1", "w2")
+      .agg(count(lit(1)).as("m")))
+    val model = Lineage.shared(docbg.groupBy("lang", "w1", "w2")
+      .agg(sum(col("m")).as("c12")))
     val heads = model.groupBy("lang", "w1").agg(sum(col("c12")).as("c1"))
     val vocab = toks
       .select(col("lang"), explode(col("ws")).as("w"))

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Multimodal-column plumbing for training-data pipelines: media
   * content travels as an opaque `binary` column plus typed metadata,
@@ -623,7 +622,7 @@ object Multimodal {
     // ARITHMETIC_OVERFLOW in any ANSI session (Spark 4's default,
     // pinned off only inside GraftSession); 32 bits per int64 word
     // keeps every intermediate ≤ 2^32 and XOR/popcount is identical.
-    val keyed = aHash(df, idCol, pixelCol)
+    val keyed = Lineage.shared(aHash(df, idCol, pixelCol)
       .withColumn("bits",
         when(assert_true(size(col("bits")) >= lit(8 * (maxDist + 1)),
           lit(s"thumbnail too short for lossless maxDist=$maxDist"))
@@ -637,8 +636,7 @@ object Multimodal {
       // (id = rep) and the member→rep map for expansion
       .withColumn("__rep",
         min(col(idCol)).over(Window.partitionBy(col("words"))))
-      .select(col(idCol), col("blocks"), col("words"), col("__rep"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .select(col(idCol), col("blocks"), col("words"), col("__rep")))
 
     val empty = {
       val base = keyed.limit(0)

@@ -87,23 +87,12 @@ object SequencePack {
     */
   def prefixSumBy(df: DataFrame, orderCols: Seq[String], weightCol: String,
                   numParts: Int = 0,
-                  outCol: String = "prefix_before"): DataFrame =
-    rangePrefixSum(df, orderCols, weightCol, numParts, outCol)._1
-
-  /** [[prefixSumBy]] plus the persisted range partitioning its result
-    * reads — for callers that materialize the result themselves and
-    * can then unpersist the partitioning.
-    */
-  private[operators] def rangePrefixSum(
-      df: DataFrame, orderCols: Seq[String], weightCol: String,
-      numParts: Int = 0,
-      outCol: String = "prefix_before"): (DataFrame, DataFrame) = {
+                  outCol: String = "prefix_before"): DataFrame = {
     require(orderCols.nonEmpty, "prefixSumBy needs at least one order column")
     val n = if (numParts > 0) numParts
             else df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val parts = df.repartitionByRange(n, orderCols.map(col): _*)
-      .withColumn("__pid", spark_partition_id())
-      .persist()
+    val parts = Lineage.shared(df.repartitionByRange(n, orderCols.map(col): _*)
+      .withColumn("__pid", spark_partition_id()))
 
     val wPrefix = Window.orderBy(col("__pid"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -118,9 +107,9 @@ object SequencePack {
       .rowsBetween(Window.unboundedPreceding, -1)
     val start = coalesce(sum(col(weightCol)).over(wLocal), lit(0L)) +
       col("__poffset")
-    (parts.join(broadcast(offsets), Seq("__pid"))
+    parts.join(broadcast(offsets), Seq("__pid"))
       .withColumn(outCol, start.cast("long"))
-      .drop("__pid", "__poffset"), parts)
+      .drop("__pid", "__poffset")
   }
 
   /** Per-GROUP exclusive prefix sum: `outCol` = the sum of
@@ -173,10 +162,9 @@ object SequencePack {
     require(orderCols.nonEmpty, "groupedPrefixSumBy needs an order column")
     val n = if (numParts > 0) numParts
             else df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val parts = df
+    val parts = Lineage.shared(df
       .repartitionByRange(n, (groupCol +: orderCols).map(col): _*)
-      .withColumn("__pid", spark_partition_id())
-      .persist()
+      .withColumn("__pid", spark_partition_id()))
 
     val partTotals = parts.groupBy(col("__pid"), col(groupCol))
       .agg(sum(col(weightCol)).as("__ptotal"))

@@ -20,18 +20,12 @@ object Similarity {
   /** Dot product of two array<double> columns via the native fused
     * `array_dot` expression (graft.functions.ArrayDot; requires
     * GraftExtensions, which GraftSession carries). The composed
-    * `aggregate(zip_with(...))` form allocates a zipped array per
-    * row-pair — measurable on the brute-force path, where this runs
-    * once per (query, corpus) pair.
+    * `aggregate(zip_with(...))` form (ArrayDotSpec's twin) allocates a
+    * zipped array per row-pair — measurable on the brute-force path,
+    * where this runs once per (query, corpus) pair.
     */
   def dot(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("array_dot", a, b)
-
-  /** The composed-HOF dot, kept as the differential-test twin of the
-    * native expression (ArrayDotSpec asserts equality).
-    */
-  def dotComposed(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
 
   /** Cosine similarity; inputs need not be normalized. */
   def cosine(a: Column, b: Column): Column =
@@ -62,24 +56,22 @@ object Similarity {
     */
   def bruteForceTopK(vecs: DataFrame, queries: DataFrame, k: Int,
                      idCol: String = "vec_id", vecCol: String = "embedding",
-                     pairBudget: Long = DefaultBrutePairBudget): DataFrame = {
+                     pairBudget: Long = DefaultBrutePairBudget): DataFrame = Lineage.scope {
     var corpus = vecs.select(col(idCol).as("neighbor_id"), asDouble(col(vecCol)).as("v"))
     val qs = queries.select(col(idCol).as("qid"), asDouble(col(vecCol)).as("qv"))
-    var corpusPersisted = false
     if (pairBudget < Long.MaxValue) {
       // count the QUERY side eagerly (small by contract — it broadcasts
       // below anyway); the corpus side is the expensive scan, so its
-      // count pass PERSISTS the projected relation and the scoring join
+      // count pass shares the projected relation and the scoring join
       // reuses that materialization — the armed breaker costs one
       // corpus read total, not two (a legitimate small-Q call used to
-      // pay a doubled corpus scan for a check that always passed).
+      // pay a doubled corpus scan for a check that always passed). The
+      // scope then checkpoints the O(Q·k) result and frees the corpus.
       val qCount = BigInt(qs.count())
       if (qCount > 0) {
-        corpus = corpus.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        corpusPersisted = true
+        corpus = Lineage.shared(corpus)
         val pairs = qCount * BigInt(corpus.count())
         if (pairs > BigInt(pairBudget)) {
-          corpus.unpersist()
           throw new IllegalStateException(
             s"Similarity.bruteForceTopK: predicted pair volume $pairs " +
               s"exceeds pairBudget $pairBudget — the query set is not " +
@@ -92,29 +84,16 @@ object Similarity {
     val scored = corpus.join(broadcast(qs), col("neighbor_id") =!= col("qid"))
       .select(col("qid"), col("neighbor_id"), cosine(col("qv"), col("v")).as("cos"))
     val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("neighbor_id"))
-    val topk = scored.withColumn("rank", row_number().over(w).cast("long"))
+    scored.withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select(col("qid"), col("rank"), col("neighbor_id"),
         round(col("cos"), 4).as("cosine"))
-    if (!corpusPersisted) topk
-    else {
-      // the breaker persisted the corpus for its count; release it here
-      // rather than leak a MEMORY_AND_DISK entry the caller has no
-      // handle to unpersist. The result must therefore materialize
-      // EAGERLY (O(Q·k) rows — localCheckpoint, the repo's
-      // flat-lineage convention) before the unpersist, or the lazy
-      // plan would recompute the corpus projection it was meant to
-      // reuse.
-      val mat = topk.localCheckpoint(true)
-      corpus.unpersist()
-      mat
-    }
   }
 
   /** Fixed-seed random hyperplanes: `tables` independent signatures of
     * `bits` sign-bits each. Deterministic across runs and executors.
     */
-  private def hyperplanes(dim: Int, tables: Int, bits: Int): Seq[Seq[Double]] = {
+  private[graft] def hyperplanes(dim: Int, tables: Int, bits: Int): Seq[Seq[Double]] = {
     val rnd = new scala.util.Random(7)
     Seq.fill(tables * bits)(Seq.fill(dim)(rnd.nextGaussian()))
   }
@@ -132,30 +111,6 @@ object Similarity {
         posexplode(call_function("lsh_sig", col("v"),
           lit(dim), lit(tables), lit(bits))))
       .select(col("id"), col("v"), col("pos").as("tbl"), col("col").as("bucket"))
-
-  /** The composed-expression twin of [[lshBuckets]], kept as the
-    * differential oracle (LshSigSpec asserts bucket equality). Do NOT
-    * use on a hot path: the per-table OR-chain unrolls tables·bits
-    * expression nodes, and past ~200 sign bits the generated method
-    * trips janino's 64KB limit and the stage falls back to interpreted
-    * eval (measured 12s vs 0.5s on s3's 24×14 config).
-    */
-  private[graft] def lshBucketsComposed(vecs: DataFrame, dim: Int, tables: Int,
-                                        bits: Int, idCol: String = "vec_id",
-                                        vecCol: String = "embedding"): DataFrame = {
-    val planes = typedLit(hyperplanes(dim, tables, bits))
-    val sig = transform(planes, p => dot(col("v"), p) > 0)
-    val buckets = (0 until tables).map { t =>
-      val packed = (0 until bits).map { i =>
-        when(element_at(col("sig"), t * bits + i + 1), lit(1L << i)).otherwise(0L)
-      }.reduce(_.bitwiseOR(_))
-      struct(lit(t).as("tbl"), packed.as("bucket"))
-    }
-    vecs.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-      .withColumn("sig", sig)
-      .select(col("id"), col("v"), explode(array(buckets: _*)).as("bk"))
-      .select(col("id"), col("v"), col("bk.tbl").as("tbl"), col("bk.bucket").as("bucket"))
-  }
 
   /** Approximate top-k via multi-table LSH: candidates are corpus
     * vectors sharing any (table, bucket) with the query — a key-equality
@@ -306,8 +261,7 @@ object Similarity {
     // The bucket relation feeds both sides of the self-join, so persist
     // it (the materialized LSH index, O(N·tables) rows) rather than
     // computing the signatures twice — measured 3.2s → 2.2s at sf0.1.
-    val b = lshBuckets(vecs, dim, tables, bits, idCol, vecCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val b = Lineage.shared(lshBuckets(vecs, dim, tables, bits, idCol, vecCol))
     b.as("x")
       .join(b.as("y"),
         col("x.tbl") === col("y.tbl") && col("x.bucket") === col("y.bucket") &&
@@ -371,13 +325,12 @@ object Similarity {
     require(nassign >= 1 && nassign <= centroids.size,
       s"nassign must be in [1, ${centroids.size}], got $nassign")
     require(saltBuckets >= 1, s"saltBuckets must be >= 1, got $saltBuckets")
-    val assigned = vecs
+    val assigned = Lineage.shared(vecs
       .select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
       .withColumn("cell", explode(transform(
         slice(cellsByDistance(col("v"), centroids), 1, nassign),
-        s => s.getField("cell"))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        s => s.getField("cell")))))
     val salted = assigned
       .withColumn("salt", pmod(xxhash64(col("id")), lit(saltBuckets)))
     val replicated = assigned
@@ -401,15 +354,14 @@ object Similarity {
     // persisted: the orderBy callers end with samples range boundaries
     // off the final plan; without this the whole pair scan runs twice.
     // O(dropped ids) rows — bounded by the dup rate, tiny by contract.
-    val dropped = salted.as("x")
+    val dropped = Lineage.shared(salted.as("x")
       .join(replicated.as("y"),
         col("x.cell") === col("y.cell") && col("x.salt") === col("y.salt") &&
           col("x.id") < col("y.id"))
       .filter(dot(col("x.v"), col("y.v")) / (col("x.nrm") * col("y.nrm"))
         >= cutoff)
       .select(col("y.id").as("id")).distinct()
-      .withColumn("__dropped", lit(1L))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("__dropped", lit(1L)))
     vecs.select(col(idCol).as("id")).distinct()
       .join(dropped, Seq("id"), "left")
       .select(col("id").as(idCol),

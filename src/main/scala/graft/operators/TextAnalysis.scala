@@ -140,17 +140,15 @@ object TextAnalysis {
     * counts/ratios rather than nulls (left join + coalesce).
     */
   def repetitionStats(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    // persisted: base feeds BOTH the gram branch and the final join's
-    // left side — AQE plans the two independently (zero ReusedExchange),
-    // so without the persist the scan + regex tokenization run twice,
-    // the dominant cost at scale (same contract as Dedup's self-joins)
-    val base = df.select(col(idCol).as("doc"), words(col(textCol)).as("ws"))
+    // shared: base feeds BOTH the gram branch and the final join's left
+    // side, so the scan + regex tokenization (the dominant cost at
+    // scale) run once
+    val base = Lineage.shared(df.select(col(idCol).as("doc"), words(col(textCol)).as("ws"))
       .withColumn("n_tokens", size(col("ws")).cast("long"))
       .withColumn("dup_word_ratio", when(col("n_tokens") > 0,
         round(lit(1.0) -
           size(array_distinct(col("ws"))).cast("double") / col("n_tokens"), 6))
-        .otherwise(0.0))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .otherwise(0.0)))
     val grams = base.select(col("doc"), explode(transform(
       Dedup.shingleIdx(2, col("ws")),
       i => concat_ws(" ",
@@ -288,17 +286,15 @@ object TextAnalysis {
     * denominator is a 1-row scalar aggregate joined by broadcast.
     *
     * The vocab-sized `counts` relation feeds BOTH the top-k and the
-    * scalar total; AQE plans the two consumers independently, so it
-    * is persisted per the engine's caching contract — the cache holds
-    * the vocabulary, never the corpus-sized token stream. Coverage is
+    * scalar total, so it is [[Lineage.shared]] — the cache holds the
+    * vocabulary, never the corpus-sized token stream. Coverage is
     * integral ppm (`cum·10⁶ div total`, exact long division): a
     * rounded double quotient here would be the engine-round()
     * tie-break hazard s6 documents.
     */
   def vocabCoverage(df: DataFrame, textCol: String, k: Int): DataFrame = {
-    val counts = df.select(explode(words(col(textCol))).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val counts = Lineage.shared(df.select(explode(words(col(textCol))).as("w"))
+      .groupBy(col("w")).agg(count(lit(1)).as("cnt")))
     val total = counts.agg(sum(col("cnt")).as("total"))
     val ord = Window.orderBy(col("cnt").desc, col("w").asc)
     counts.orderBy(col("cnt").desc, col("w").asc).limit(k)
@@ -342,10 +338,9 @@ object TextAnalysis {
     */
   def sourceDivergence(df: DataFrame, strataCol: String, textCol: String): DataFrame = {
     val dec = "decimal(38,0)"
-    val c = df.select(col(strataCol).as("stratum"),
+    val c = Lineage.shared(df.select(col(strataCol).as("stratum"),
         explode(words(col(textCol))).as("w"))
-      .groupBy(col("stratum"), col("w")).agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy(col("stratum"), col("w")).agg(count(lit(1)).as("c")))
     val wordTot = c.groupBy(col("w")).agg(sum(col("c")).as("cw"))
     val strataTot = c.groupBy(col("stratum")).agg(sum(col("c")).as("ts"))
     val corpusTot = strataTot.agg(sum(col("ts")).as("n"))

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** TF-IDF keyword extraction — the classic corpus-statistics signal a
   * curation pipeline uses for topic tagging, cluster labeling, and
@@ -37,11 +36,10 @@ object TfIdf {
     */
   def topKeywords(df: DataFrame, k: Int = 3, idCol: String = "doc_id",
                   textCol: String = "text"): DataFrame = {
-    val tf = df
+    val tf = Lineage.shared(df
       .select(col(idCol).as("doc"),
         explode(TextAnalysis.words(col(textCol))).as("term"))
-      .groupBy("doc", "term").agg(count(lit(1)).as("tf"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .groupBy("doc", "term").agg(count(lit(1)).as("tf")))
     val docFreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val n = df.agg(count(lit(1)).as("n"))
     val scored = tf

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.core.{CatalogQuery, QueryModule, Tables}
-import graft.operators.{LanguageModel, TextAnalysis, TfIdf}
+import graft.operators.{LanguageModel, Lineage, TextAnalysis, TfIdf}
 
 /** Catalog entries for the text-analysis operators over `documents`.
   * All four are pure projections with exact integer/rational arithmetic,
@@ -457,8 +457,7 @@ object TextQueries extends QueryModule {
       val tok = graft.core.Parallelism.fanOutSmallScan(
           docs(s, dir).select(col("text")))
         .select(explode(TextAnalysis.words(col("text"))).as("w"))
-      val counts = tok.groupBy($"w").agg(count(lit(1)).as("cnt"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val counts = Lineage.shared(tok.groupBy($"w").agg(count(lit(1)).as("cnt")))
       val top = counts.orderBy($"cnt".desc, $"w".asc).limit(10)
       val sk = tok.agg(
         expr("count_min_sketch(w, 0.0001d, 0.999d, 42)").as("sk"))

@@ -39,7 +39,7 @@ object StreamingDedup {
     * expression (graft.functions.SimHash64) — one fused vote loop over
     * the materialized token-hash array, bit-for-bit the same
     * fingerprint as the batch `Dedup.simhashFingerprints` groupBy AND
-    * the composed 64-fold form below (both spec-asserted), since votes
+    * the composed 64-fold form (both spec-asserted), since votes
     * are associative/commutative sums per token occurrence.
     */
   def withSimhash(docs: DataFrame, textCol: String): DataFrame =
@@ -47,25 +47,7 @@ object StreamingDedup {
       .withColumn("fp", call_function("simhash64", col("__hs")))
       .drop("__toks", "__hs")
 
-  /** The composed HOF formulation withSimhash replaces: 64 independent
-    * `aggregate()` folds over the token-hash array — O(64·tokens)
-    * interpreted expression evals per row. Kept as the native
-    * expression's differential-test twin (StreamingDedupSpec asserts
-    * bit-equality), the pattern every native function in this engine
-    * follows.
-    */
-  private[graft] def withSimhashComposed(docs: DataFrame, textCol: String): DataFrame = {
-    val fp = (0 until 64).map { i =>
-      val vote = aggregate(col("__hs"), lit(0),
-        (acc, h) => acc + when(shiftright(h, i).bitwiseAND(1) === 1, 1).otherwise(-1))
-      when(vote > 0, shiftleft(lit(1L), i)).otherwise(0L)
-    }.reduce(_.bitwiseOR(_))
-    withTokenHashes(docs, textCol)
-      .withColumn("fp", fp)
-      .drop("__toks", "__hs")
-  }
-
-  private def withTokenHashes(docs: DataFrame, textCol: String): DataFrame =
+  private[graft] def withTokenHashes(docs: DataFrame, textCol: String): DataFrame =
     docs
       .withColumn("__toks", graft.operators.Dedup.wordsOf(textCol))
       .withColumn("__hs", transform(col("__toks"), t => xxhash64(t)))

@@ -16,7 +16,7 @@ class ArrayDotSpec extends SparkSpecBase {
       .limit(2000)
       .select(
         Similarity.dot(col("a.v"), col("b.v")).as("native"),
-        Similarity.dotComposed(col("a.v"), col("b.v")).as("composed"))
+        ReferenceForms.dotComposed(col("a.v"), col("b.v")).as("composed"))
       .collect()
     assert(rows.length == 2000)
     rows.foreach { r =>
@@ -38,7 +38,7 @@ class ArrayDotSpec extends SparkSpecBase {
       .map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0))).toSeq
     assert(got == Seq(Some(11.0), None, None, None))
     // the composed form agrees on the mismatch row
-    val hof = df.select(Similarity.dotComposed($"a", $"b")).collect()
+    val hof = df.select(ReferenceForms.dotComposed($"a", $"b")).collect()
       .map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0))).toSeq
     assert(hof == got)
   }

@@ -24,12 +24,22 @@ class CatalogSpec extends SparkSpecBase {
         case ll: LocalLimit => rootSort(ll.child)
         case _ => false
       })
+    val sc = spark.sparkContext
     val results = SparkEntry.queries.map { case (name, fn) =>
+      val before = sc.getPersistentRDDs.keySet
       val df = fn(spark, sf("sf0.001"))
       assert(rootSort(df.queryExecution.analyzed),
         s"$name does not end in a global ORDER BY — the driver's hash " +
           "compare needs a total order")
-      name -> df.count()
+      val n = df.count()
+      // storage goes through Lineage: what clearCache() cannot free is
+      // a checkpoint, never a stray persisted RDD
+      spark.catalog.clearCache()
+      val stray = sc.getPersistentRDDs.collect {
+        case (id, r) if !before(id) && !r.isCheckpointed => s"$id:${r.getClass.getSimpleName}"
+      }
+      assert(stray.isEmpty, s"$name left persisted RDDs: ${stray.mkString(", ")}")
+      name -> n
     }
     val empty = results.filter(_._2 == 0).keys.toSeq.sorted
     // d2/d3/d4 near-dup pair sets may legitimately be empty at the

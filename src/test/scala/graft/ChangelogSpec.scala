@@ -13,7 +13,7 @@ class ChangelogSpec extends SparkSpecBase {
     val payload = Seq("event_type", "value")
     val packed = Changelog.compactLatest(events, keys, "ts", "event_id", payload)
       .orderBy(col("user_id")).collect().toSeq
-    val window = Changelog.compactLatestWindow(events, keys, "ts", "event_id", payload)
+    val window = ReferenceForms.compactLatestWindow(events, keys, "ts", "event_id", payload)
       .orderBy(col("user_id")).collect().toSeq
     assert(packed.nonEmpty)
     assert(packed == window)
@@ -61,7 +61,7 @@ class ChangelogSpec extends SparkSpecBase {
     val got = Changelog.compactWithDeletes(e, keys, "ts", "event_id",
         Seq("event_type", "value"), "op", "delete")
       .orderBy(col("user_id")).collect().toSeq
-    val twin = Changelog.compactLatestWindow(e, keys, "ts", "event_id",
+    val twin = ReferenceForms.compactLatestWindow(e, keys, "ts", "event_id",
         Seq("event_type", "value", "op"))
       .filter(col("op") =!= "delete")
       .drop("op")
@@ -69,7 +69,7 @@ class ChangelogSpec extends SparkSpecBase {
     assert(got.nonEmpty && got == twin)
     // the fixture is non-trivial: at least one key must actually die
     val live = got.size
-    val all = Changelog.compactLatestWindow(e, keys, "ts", "event_id", Nil)
+    val all = ReferenceForms.compactLatestWindow(e, keys, "ts", "event_id", Nil)
       .count()
     assert(live < all, s"no key ended deleted (live=$live, keys=$all)")
   }

@@ -158,18 +158,18 @@ class CorpusMixSpec extends SparkSpecBase {
     import s.implicits._
     val df = (0L until 2000L).map(i => (i, s"src${i % 7}"))
       .toDF("id", "source")
-    val k10 = CorpusMix.capPerStratum(df, "id", "source", k = 10)
+    val k10 = ReferenceForms.capPerStratum(df, "id", "source", k = 10)
     val counts = k10.groupBy($"source").count().as[(String, Long)]
       .collect().toMap
     assert(counts.size == 7 && counts.values.forall(_ == 10L))
     assert(k10.agg(max($"cap_rank")).as[Long].head() == 10L)
     // nested: the k=10 kept set contains the k=4 kept set exactly
-    val k4 = CorpusMix.capPerStratum(df, "id", "source", k = 4)
+    val k4 = ReferenceForms.capPerStratum(df, "id", "source", k = 4)
       .select($"id").as[Long].collect().toSet
     val k10ids = k10.select($"id").as[Long].collect().toSet
     assert(k4.subsetOf(k10ids) && k4.size == 28)
     // a cap above the stratum size keeps everything
-    assert(CorpusMix.capPerStratum(df, "id", "source", k = 500).count() == 2000L)
+    assert(ReferenceForms.capPerStratum(df, "id", "source", k = 500).count() == 2000L)
   }
 
   test("bounded selection equals its window twin bit-for-bit, with no window sort") {
@@ -185,7 +185,7 @@ class CorpusMixSpec extends SparkSpecBase {
       d.select($"id", $"source", col(rank)).as[(Long, String, Long)]
         .collect().toSet
     assert(rows(CorpusMix.capPerStratumBounded(df, "id", "source", k = 25), "cap_rank")
-      == rows(CorpusMix.capPerStratum(df, "id", "source", k = 25), "cap_rank"))
+      == rows(ReferenceForms.capPerStratum(df, "id", "source", k = 25), "cap_rank"))
     assert(rows(CorpusMix.weightedSampleBounded(df, "id", "source", "w", k = 25), "sel_rank")
       == rows(CorpusMix.weightedSample(df, "id", "source", "w", k = 25), "sel_rank"))
     // k above stratum size keeps everything, ranked completely
@@ -196,7 +196,7 @@ class CorpusMixSpec extends SparkSpecBase {
       when($"id" < 10, lit(null: String)).otherwise($"source"))
     assert(rows(CorpusMix.capPerStratumBounded(withNull, "id", "source", k = 25),
         "cap_rank")
-      == rows(CorpusMix.capPerStratum(withNull, "id", "source", k = 25),
+      == rows(ReferenceForms.capPerStratum(withNull, "id", "source", k = 25),
         "cap_rank"))
     // the plan property the verdict flagged: no WindowExec sorting
     // whole strata — selection happens in a bounded aggregate

@@ -2,23 +2,30 @@ package graft
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, max}
 
-import graft.operators.{Bpe, Dedup, Graph, Lineage}
+import graft.operators.{Bpe, CorpusMix, Dedup, DedupIndex, Graph, Lineage, Similarity}
 
-/** [[Lineage]]: every round operator frees what it persisted, keeping at
-  * most the one checkpoint its result reads; and the one wave-count
-  * rule every waved operator sizes its waves with.
+/** [[Lineage]]: every round and scope operator frees what it persisted,
+  * keeping at most the one checkpoint its result reads; and the one
+  * wave-count rule every waved operator sizes its waves with.
   */
 class LineageSpec extends SparkSpecBase {
 
+  private def cacheManager =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+
   /** `call`'s result plus the RDDs it left persisted that were not
-    * persisted before it.
+    * persisted before it. The CacheManager is cleared first, and the
+    * call must leave no entry in it.
     */
   private def leftBehind[T](call: => T): (T, Seq[RDD[_]]) = {
+    spark.catalog.clearCache()
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
     val out = call
+    assert(cacheManager.isEmpty, "left a CacheManager entry behind")
     (out, sc.getPersistentRDDs.collect { case (id, r) if !before(id) => r }.toSeq)
   }
 
@@ -34,8 +41,14 @@ class LineageSpec extends SparkSpecBase {
       (6L, 4L), (6L, 7L)).toDF("src", "dst")
   }
 
-  private def roundOperator(name: String)(op: => DataFrame): Unit =
+  private def docs = graft.core.Tables(spark, sf("sf0.001")).documents
+
+  private def tempIndex(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).resolve("idx").toString
+
+  private def storageOperator(name: String, setup: => Unit = ())(op: => DataFrame): Unit =
     test(s"$name leaves at most the one checkpoint its result reads") {
+      setup
       val (result, left) = leftBehind(op)
       assert(left.size <= 1, s"$name left ${left.size} persisted RDDs: ${describe(left)}")
       assert(left.forall(_.isCheckpointed),
@@ -44,15 +57,49 @@ class LineageSpec extends SparkSpecBase {
       assert(result.count() > 0)
     }
 
-  roundOperator("g1 pageRank")(Graph.pageRank(edges, iters = 3))
-  roundOperator("g1b pageRankConserving")(Graph.pageRankConserving(edges, iters = 3))
-  roundOperator("g3 bfsHops")(Graph.bfsHops(edges, source = 1L, iters = 3))
-  roundOperator("g4 bellmanFord")(Graph.bellmanFord(
+  storageOperator("g1 pageRank")(Graph.pageRank(edges, iters = 3))
+  storageOperator("g1b pageRankConserving")(Graph.pageRankConserving(edges, iters = 3))
+  storageOperator("g3 bfsHops")(Graph.bfsHops(edges, source = 1L, iters = 3))
+  storageOperator("g4 bellmanFord")(Graph.bellmanFord(
     edges.withColumn("w", (col("src") % 3) + 1), source = 1L, iters = 4))
-  roundOperator("g5 kCorePeel")(Graph.kCorePeel(edges, k = 2, rounds = 3))
-  roundOperator("g6 labelPropagation")(Graph.labelPropagation(edges, rounds = 3))
-  roundOperator("componentsWithRounds")(Dedup.componentsWithRounds(
+  storageOperator("g5 kCorePeel")(Graph.kCorePeel(edges, k = 2, rounds = 3))
+  storageOperator("g6 labelPropagation")(Graph.labelPropagation(edges, rounds = 3))
+  storageOperator("componentsWithRounds")(Dedup.componentsWithRounds(
     edges.select(col("src").as("i"), col("dst").as("j")))._1)
+
+  // scope operators: eager calls whose shared inputs the scope frees
+  storageOperator("g2 single-pass triangleCountsAuto")(Graph.triangleCountsAuto(edges))
+  storageOperator("g7 modularity")(Graph.modularity(edges,
+    edges.select(col("src").as("id"), (col("src") % 2).as("label")).distinct()))
+  storageOperator("d11 contaminationReportBloom") {
+    val half = docs.agg(max(col("doc_id"))).head.getLong(0) / 2
+    Dedup.contaminationReportBloom(docs.filter(col("doc_id") < half),
+      docs.filter(col("doc_id") >= half), "doc_id", "text", n = 8)
+  }
+  storageOperator("x13 datasetCard")(CorpusMix.datasetCard(
+    docs, "doc_id", "text", Seq("source")))
+  storageOperator("s1 bruteForceTopK breaker path") {
+    val emb = graft.core.Tables(spark, sf("sf0.001")).embeddings
+    Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 2), k = 1,
+      pairBudget = 100000L)
+  }
+  private lazy val pairIndex = tempIndex("lineage-dedupidx")
+  storageOperator("DedupIndex probePairs",
+      DedupIndex.build(docs.filter(col("doc_id") < 250), pairIndex)) {
+    DedupIndex.probePairs(spark, pairIndex,
+      batch = docs.filter(col("doc_id") >= 250), texts = docs)
+  }
+  private lazy val noveltyIndex = tempIndex("lineage-novidx")
+  storageOperator("DedupIndex probeNovelty",
+      DedupIndex.buildNovelty(docs.filter(col("doc_id") < 250), noveltyIndex, n = 8)) {
+    DedupIndex.probeNovelty(spark, noveltyIndex, docs.filter(col("doc_id") >= 250))
+  }
+
+  test("DedupIndex build frees the signatures it shares") {
+    val (_, left) = leftBehind(
+      DedupIndex.build(docs.filter(col("doc_id") < 250), tempIndex("lineage-build")))
+    assert(left.isEmpty, s"DedupIndex.build left ${describe(left)}")
+  }
 
   test("learnMergeList and learnMergeBatchList free every round") {
     val s = spark

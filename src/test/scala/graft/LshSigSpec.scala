@@ -18,7 +18,7 @@ class LshSigSpec extends SparkSpecBase {
       val native = Similarity.lshBuckets(emb, dim = 64, tables, bits)
         .select("id", "tbl", "bucket").collect()
         .map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
-      val composed = Similarity.lshBucketsComposed(emb, dim = 64, tables, bits)
+      val composed = ReferenceForms.lshBucketsComposed(emb, dim = 64, tables, bits)
         .select("id", "tbl", "bucket").collect()
         .map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
       assert(native.nonEmpty && native.size == composed.size)

@@ -511,10 +511,23 @@ class PlanSpec extends SparkSpecBase {
     "join (non-closing wedges die pre-exchange)") {
     // the gate-scale edge set sits far under DefaultCloseBloomMaxEdges,
     // so the bloom must be present; losing it silently re-shuffles the
-    // full wedge volume (41M rows at sf0.1, measured +2s median)
-    val p = plan("g2_triangles")
-    assert(p.contains("bloom_might_contain"),
-      s"g2's close-join bloom prefilter is gone:\n${p.take(800)}")
+    // full wedge volume (41M rows at sf0.1, measured +2s median). The
+    // single pass checkpoints its corner counts, so the wedge join runs
+    // in that checkpoint action while the row is built: read the plans
+    // the build executes, not the returned plan
+    val executed = new LinkedBlockingQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        executed.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val seen = try {
+      SparkEntry.queries("g2_triangles")(spark, sf("sf0.01"))
+      Iterator.continually(executed.poll(60, TimeUnit.SECONDS))
+        .takeWhile(_ != null).find(_.contains("bloom_might_contain"))
+    } finally spark.listenerManager.unregister(listener)
+    assert(seen.isDefined, "g2's close-join bloom prefilter is gone")
   }
 
   test("g4: bellmanFord's adjacency build is ONE exchange in both " +

@@ -81,7 +81,7 @@ class StreamingDedupSpec extends SparkSpecBase {
     val native = StreamingDedup.withSimhash(docs, "text")
       .select(col("doc_id"), col("fp"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val composed = StreamingDedup.withSimhashComposed(docs, "text")
+    val composed = ReferenceForms.withSimhashComposed(docs, "text")
       .select(col("doc_id"), col("fp"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(native.nonEmpty && native == composed)

@@ -141,14 +141,20 @@ class TablesSpec extends SparkSpecBase {
     }
     assert(knobs.isEmpty,
       s"src/main reads a spark.graft.* session conf key: ${knobs.mkString("; ")}")
-    // round and wave loops materialize and free storage only through
-    // graft.operators.Lineage
+    // every persist, checkpoint and release — round and wave loops
+    // included — goes through graft.operators.Lineage
     val lineage = root.resolve("graft/operators/Lineage.scala")
-    val loopCode = """snapshotRdd|\(0 until waves\)""".r
-    val loops = (files :+ helper).filter(_ != lineage).flatMap { f =>
-      loopCode.findAllMatchIn(Files.readString(f)).map(m => s"$f: ${m.matched}")
+    val storageCode =
+      """snapshotRdd|\(0 until waves\)|\.(persist|unpersist|localCheckpoint|checkpoint)\(|\.cache\(\)""".r
+    val comment = """^\s*(//|\*|/\*)""".r
+    val storage = (files :+ helper).filter(_ != lineage).flatMap { f =>
+      Files.readAllLines(f).asScala.zipWithIndex
+        .filter { case (line, _) => comment.findFirstIn(line).isEmpty }
+        .flatMap { case (line, i) =>
+          storageCode.findAllMatchIn(line).map(m => s"$f:${i + 1}: ${m.matched}")
+        }
     }
-    assert(loops.isEmpty,
-      s"route round/wave loops through Lineage: ${loops.mkString("; ")}")
+    assert(storage.isEmpty,
+      s"persist, checkpoint and release through Lineage: ${storage.mkString("; ")}")
   }
 }
