@@ -26,7 +26,7 @@ object SparkEntry {
     graft.queries.PipelineQueries
   )
 
-  private lazy val catalog: Seq[CatalogQuery] = {
+  private val catalog: Seq[CatalogQuery] = {
     val qs = modules.flatMap(_.queries)
     val dupes = qs.groupBy(_.name).filter(_._2.size > 1).keys
     require(dupes.isEmpty, s"duplicate query names: ${dupes.mkString(",")}")
@@ -38,11 +38,11 @@ object SparkEntry {
     catalog.head.build(spark, "/root/testdata/sf0.001")
 
   /** One per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
     catalog.map(q => q.name -> q.build).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted entries get a rows-only check. */
-  def oracleSql: Map[String, String] =
+  val oracleSql: Map[String, String] =
     catalog.flatMap(q => q.oracle.map(sql => q.name -> sql)).toMap
 }

@@ -74,15 +74,4 @@ object GraftSession {
       .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
       .config(LocalCheckpointFileManager.ClassKey,
         classOf[LocalCheckpointFileManager].getName)
-
-  /** Local session for tests and ad-hoc runs. */
-  def local(cores: Int = Runtime.getRuntime.availableProcessors(),
-            appName: String = "graft"): SparkSession = {
-    val spark = tuned(
-      SparkSession.builder().master(s"local[$cores]").appName(appName),
-      shufflePartitions = math.max(cores, 4)
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
 }

@@ -53,6 +53,9 @@ object StreamingQueries extends QueryModule {
     */
   private val ReplayShufflePartitions = 4
 
+  /** Replay bytes per state partition above the floor (see below). */
+  private val ReplayBytesPerStatePartition = 8L << 20
+
   /** Scale-adaptive replay state-partition count: the constant 4 is
     * right for the few-thousand-row micro-batches of the driver's
     * small SFs, but it is a LOCAL-MODE TUNING, and at a 10×/100×
@@ -67,17 +70,17 @@ object StreamingQueries extends QueryModule {
     * per-batch volume, which is per-stream capacity planning, not a
     * constant.
     */
-  private def replayStatePartitions(s: SparkSession, replayPath: String): Int = {
-    val bytes =
-      try {
-        val d = new java.io.File(replayPath)
-        Option(d.listFiles()).map(_.filter(_.isFile).map(_.length()).sum)
-          .getOrElse(0L)
-      } catch { case scala.util.control.NonFatal(_) => 0L }
-    val byBytes = (bytes / (8L << 20)).toInt
-    math.min(math.max(byBytes, ReplayShufflePartitions),
-      s.sparkContext.defaultParallelism)
-  }
+  private[graft] def replayStatePartitions(replayBytes: Long, defaultParallelism: Int): Int =
+    math.min(math.max((replayBytes / ReplayBytesPerStatePartition).toInt,
+      ReplayShufflePartitions), defaultParallelism)
+
+  /** On-disk bytes of the replay source's files; 0 if unreadable. */
+  private def replayBytes(replayPath: String): Long =
+    try {
+      val d = new java.io.File(replayPath)
+      Option(d.listFiles()).map(_.filter(_.isFile).map(_.length()).sum)
+        .getOrElse(0L)
+    } catch { case scala.util.control.NonFatal(_) => 0L }
 
   /** Runs `body` (which must START the stream) with the session's
     * shuffle-partition conf bounded to `parts` (the caller's
@@ -119,7 +122,8 @@ object StreamingQueries extends QueryModule {
     // removes. The memory sink holds the results, so the checkpoint is
     // deletable the moment the replay stops.
     val ck = graft.core.Scratch.dir(s"graft_ck_$prefix")
-    boundedReplayConf(s, replayStatePartitions(s, replayPath)) {
+    boundedReplayConf(s, replayStatePartitions(replayBytes(replayPath),
+      s.sparkContext.defaultParallelism)) {
       val q = out.writeStream.format("memory").queryName(name)
         .option("checkpointLocation", ck.getAbsolutePath)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
@@ -608,7 +612,8 @@ object StreamingQueries extends QueryModule {
       val writeBatch: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
         (batch, id) =>
           batch.write.mode("overwrite").parquet(s"$sink/data/batch_id=$id")
-      boundedReplayConf(s, replayStatePartitions(s, replay)) {
+      boundedReplayConf(s, replayStatePartitions(replayBytes(replay),
+        s.sparkContext.defaultParallelism)) {
         val q = daily.writeStream
           .outputMode("append")
           .trigger(Trigger.AvailableNow())

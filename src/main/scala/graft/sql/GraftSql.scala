@@ -22,26 +22,22 @@ import graft.core.Tables
   */
 object GraftSql {
 
-  /** Table-name → lazy accessor thunks: evaluation is deferred until a
-    * query actually references the table, because an accessor call
-    * lists the table's files, reads its parquet footers on a
-    * schema-cache miss ([[Tables.parquet]]), and `events` normalizes
-    * its schema — eager evaluation would make ONE unreadable table
-    * fail every SQL query on the session, including ones that never
-    * mention it.
+  /** Table name → accessor, in registration order. An accessor runs
+    * only for a table a query references, because a call lists the
+    * table's files, reads its parquet footers on a schema-cache miss
+    * ([[Tables.parquet]]), and `events` normalizes its schema — eager
+    * evaluation would make ONE unreadable table fail every SQL query on
+    * the session, including ones that never mention it.
     */
-  private def accessors(tt: Tables): ListMap[String, () => DataFrame] =
-    ListMap(
-      "region" -> (() => tt.region), "nation" -> (() => tt.nation),
-      "customer" -> (() => tt.customer), "supplier" -> (() => tt.supplier),
-      "part" -> (() => tt.part), "orders" -> (() => tt.orders),
-      "lineitem" -> (() => tt.lineitem), "events" -> (() => tt.events),
-      "documents" -> (() => tt.documents), "embeddings" -> (() => tt.embeddings))
+  private val accessors: ListMap[String, Tables => DataFrame] = ListMap(
+    "region" -> (_.region), "nation" -> (_.nation),
+    "customer" -> (_.customer), "supplier" -> (_.supplier),
+    "part" -> (_.part), "orders" -> (_.orders),
+    "lineitem" -> (_.lineitem), "events" -> (_.events),
+    "documents" -> (_.documents), "embeddings" -> (_.embeddings))
 
   /** Every registrable TESTDATA view name, in registration order. */
-  val tableNames: Seq[String] =
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "events", "documents", "embeddings")
+  val tableNames: Seq[String] = accessors.keys.toSeq
 
   /** The TESTDATA tables a SQL text references, by word-boundary match
     * (`_` is a word character, so `l_partkey` does not hit `part` but
@@ -67,8 +63,8 @@ object GraftSql {
     */
   def registerViews(spark: SparkSession, dir: String,
                     tables: Seq[String]): Unit = {
-    val byName = accessors(Tables(spark, dir))
-    tables.foreach(name => byName(name)().createOrReplaceTempView(name))
+    val tt = Tables(spark, dir)
+    tables.foreach(name => accessors(name)(tt).createOrReplaceTempView(name))
   }
 
   /** Run one named catalog query as SQL text, registering ONLY the

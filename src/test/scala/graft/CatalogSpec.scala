@@ -9,8 +9,10 @@ import org.apache.spark.sql.functions._
   */
 class CatalogSpec extends SparkSpecBase {
 
-  test("every catalog query runs, returns rows, and roots in a global Sort " +
-    "(the total-ORDER-BY determinism contract) at sf0.001") {
+  import CatalogSpec.Built
+
+  /** One build of every catalog row at sf0.001, in key order. */
+  private lazy val built: Seq[(String, Built)] = {
     import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LocalLimit, LogicalPlan, Project, Sort, SubqueryAlias}
     def rootSort(p: LogicalPlan): Boolean =
       // at most one row (global aggregates and their scalar joins —
@@ -25,23 +27,32 @@ class CatalogSpec extends SparkSpecBase {
         case _ => false
       })
     val sc = spark.sparkContext
-    val results = SparkEntry.queries.map { case (name, fn) =>
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      // a relation another suite left cached would plan as an
+      // in-memory scan instead of the row's own scan
+      spark.catalog.clearCache()
       val before = sc.getPersistentRDDs.keySet
       val df = fn(spark, sf("sf0.001"))
-      assert(rootSort(df.queryExecution.analyzed),
-        s"$name does not end in a global ORDER BY — the driver's hash " +
-          "compare needs a total order")
+      val fingerprint = PlanFingerprint(df.queryExecution.executedPlan)
       val n = df.count()
       // storage goes through Lineage: what clearCache() cannot free is
       // a checkpoint, never a stray persisted RDD
       spark.catalog.clearCache()
       val stray = sc.getPersistentRDDs.collect {
         case (id, r) if !before(id) && !r.isCheckpointed => s"$id:${r.getClass.getSimpleName}"
-      }
-      assert(stray.isEmpty, s"$name left persisted RDDs: ${stray.mkString(", ")}")
-      name -> n
+      }.toSeq
+      name -> Built(n, rootSort(df.queryExecution.analyzed), stray, fingerprint)
     }
-    val empty = results.filter(_._2 == 0).keys.toSeq.sorted
+  }
+
+  test("every catalog query runs, returns rows, and roots in a global Sort " +
+    "(the total-ORDER-BY determinism contract) at sf0.001") {
+    for ((name, b) <- built) {
+      assert(b.rootSorted, s"$name does not end in a global ORDER BY — the " +
+        "driver's hash compare needs a total order")
+      assert(b.stray.isEmpty, s"$name left persisted RDDs: ${b.stray.mkString(", ")}")
+    }
+    val empty = built.collect { case (name, b) if b.rows == 0 => name }
     // d2/d3/d4 near-dup pair sets may legitimately be empty at the
     // smallest scale factor; g5's 95-core peel empties the sf0.001
     // co-purchase graph by contract (GraphQueries documents the
@@ -49,6 +60,36 @@ class CatalogSpec extends SparkSpecBase {
     val allowedEmpty = Set("d2_ngram_jaccard_dedup", "d3_minhash_lsh_dedup",
       "d4_simhash_dedup", "s3_cosine_neardup", "p4_grep", "g5_kcore")
     assert(empty.forall(allowedEmpty), s"unexpected empty queries: $empty")
+  }
+
+  test("every catalog row's physical plan matches its committed fingerprint " +
+    "(src/test/resources/plan_fingerprints.json)") {
+    // the full map is written on every run; after reviewing a plan
+    // change, refresh the golden by copying this file over it
+    val actualFile = java.nio.file.Paths.get("target/plan_fingerprints.actual.json")
+    java.nio.file.Files.createDirectories(actualFile.getParent)
+    java.nio.file.Files.writeString(actualFile, built.map { case (name, b) =>
+      s"  ${Measure.jsonString(name)}: ${Measure.jsonString(b.fingerprint)}"
+    }.mkString("{\n", ",\n", "\n}\n"))
+    val golden: Map[String, String] =
+      Option(getClass.getResourceAsStream("/plan_fingerprints.json")).fold(Map.empty[String, String]) { in =>
+        try {
+          import scala.jdk.CollectionConverters._
+          new com.fasterxml.jackson.databind.ObjectMapper().readTree(in)
+            .properties.asScala.map(e => e.getKey -> e.getValue.asText).toMap
+        } finally in.close()
+      }
+    val actual = built.map { case (name, b) => name -> b.fingerprint }.toMap
+    val diffs = (golden.keySet ++ actual.keySet).toSeq.sorted.flatMap { name =>
+      (golden.get(name), actual.get(name)) match {
+        case (Some(g), Some(a)) if g == a => None
+        case (g, a) => Some(s"$name:\n    golden: ${g.getOrElse("(missing)")}\n    actual: ${a.getOrElse("(missing)")}")
+      }
+    }
+    if (diffs.nonEmpty)
+      fail(s"${diffs.size} catalog row(s) changed plan shape; review $actualFile " +
+        "and copy it over src/test/resources/plan_fingerprints.json if the " +
+        s"change is intended:\n${diffs.mkString("\n")}")
   }
 
   test("entry (flagship) query returns rows, per the driver smoke check") {
@@ -135,4 +176,14 @@ class CatalogSpec extends SparkSpecBase {
     val wins = rows.map(_.getLong(1)).sum
     assert(wins == 10, s"total pairwise wins must be C(5,2)=10, got $wins")
   }
+}
+
+object CatalogSpec {
+  /** A catalog row's build: row count, whether the analyzed plan roots
+    * in a global sort, the persisted RDDs it left that are not
+    * checkpoints, and the fingerprint of the physical plan it returns
+    * ([[PlanFingerprint]]).
+    */
+  private final case class Built(rows: Long, rootSorted: Boolean,
+                                 stray: Seq[String], fingerprint: String)
 }

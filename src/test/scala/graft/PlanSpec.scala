@@ -45,7 +45,11 @@ class PlanSpec extends SparkSpecBase {
     spark.listenerManager.register(listener)
     try {
       val jobs = jobsDuring(df.write.format("noop").mode("overwrite").save())
-      val p = written.poll(60, TimeUnit.SECONDS)
+      // an earlier action's end event can still be queued when the
+      // listener registers; the write's is the last one, delivered
+      // before jobsDuring's sentinel job on the same listener queue
+      val p = Iterator.continually(written.poll()).takeWhile(_ != null).toSeq
+        .lastOption.getOrElse(written.poll(60, TimeUnit.SECONDS))
       assert(p != null, "the noop write reported no query execution")
       (adaptiveFinal(p), jobs)
     } finally spark.listenerManager.unregister(listener)

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.SparkSession
+
 import graft.Measure.{f3, jsonString => q}
 
 // quick dev check: dump an arbitrary subset of catalog queries + their
@@ -13,7 +15,13 @@ object QCheck {
     val outDir = if (args.length > 1) args(1) else "/tmp/qcheck"
     val names = if (args.length > 2) args(2).split(",").toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
-    val spark = core.GraftSession.local()
+    // every processor, not Measure.driverSession's SPARK_GRAFT_CPUS:
+    // walls-mode sweeps have always run at this width
+    val cores = Runtime.getRuntime.availableProcessors()
+    val spark = core.GraftSession.tuned(
+      SparkSession.builder().master(s"local[$cores]").appName("graft"),
+      shufflePartitions = math.max(cores, 4)
+    ).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Per-query walls, split BUILD vs SERVE: the dump pass lands any

@@ -149,4 +149,18 @@ class StreamReplaySpec extends SparkSpecBase {
     assert(streamed.nonEmpty && streamed == batchTwin,
       s"stream emitted ${streamed.size} rows, batch twin ${batchTwin.size}")
   }
+
+  test("replay state partitions: 4 at 0 B, one per 8 MB above that, " +
+    "capped at defaultParallelism") {
+    import graft.queries.StreamingQueries.replayStatePartitions
+    val mb8 = 8L << 20
+    assert(replayStatePartitions(0L, 32) == 4)
+    assert(replayStatePartitions(5 * mb8 - 1, 32) == 4)
+    assert(replayStatePartitions(5 * mb8, 32) == 5)
+    assert(replayStatePartitions(6 * mb8 - 1, 32) == 5)
+    assert(replayStatePartitions(6 * mb8, 32) == 6)
+    assert(replayStatePartitions(1000 * mb8, 32) == 32)
+    // the cap wins over the floor on a box narrower than 4
+    assert(replayStatePartitions(0L, 2) == 2)
+  }
 }
