@@ -5,6 +5,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 
+import graft.operators.Lineage
+
 /** The reference's pluggable map/reduce surface (SURVEY.md §2.9),
   * re-expressed on Datasets.
   *
@@ -50,6 +52,15 @@ object MapleJuiceJob {
     * contiguous, totally-ordered key ranges as its range partitioner
     * does.
     *
+    * The range path reads the combined Maple output twice: the
+    * RangePartitioner's sampling job cuts key ranges from it, as the
+    * reference sorts the emitted keys before cutting them
+    * (`mp3/src/partition.go:12-19`), and the map stage then shuffles
+    * it. That output is shared through [[Lineage.shared]] so the Maple
+    * runs once per input line; its CacheManager entry lives until the
+    * session's `clearCache()`. The hash path reads it once and shares
+    * nothing.
+    *
     * Unlike the reference, which ships every emitted pair, each map
     * task collapses identical `(key, value)` pairs into one counted
     * record before the shuffle ([[combine]]), and the reduce-side walk
@@ -77,10 +88,13 @@ object MapleJuiceJob {
     // partitioning, so it re-exchanged AND re-sorted the whole KV
     // stream — a second full shuffle carrying zero information (round
     // 16, measured on the 306M-pair 136 MB Condorcet workload:
-    // 80.6 s → 43.4 s median end-to-end from removing it).
+    // 80.6 s → 43.4 s median end-to-end from removing it). The range
+    // exchange's sampling job and its map stage both read kvn, so the
+    // range path shares it: the Maple runs once, and its CacheManager
+    // entry lives until clearCache().
     val partitioned = strategy match {
       case HashPartition  => kvn.repartition(numPartitions, col("_1"))
-      case RangePartition => kvn.repartitionByRange(numPartitions, col("_1"))
+      case RangePartition => Lineage.shared(kvn).repartitionByRange(numPartitions, col("_1"))
     }
     partitioned
       .sortWithinPartitions(col("_1"))

@@ -14,10 +14,12 @@ import org.apache.spark.storage.StorageLevel
   * the policy, and it has three forms.
   *
   * SHARED ([[shared]]): a relation that two consumers of ONE returned
-  * plan read — a self-join's sides, an aggregate and its join-back.
-  * AQE plans the branches independently (no ReusedExchange across
-  * them), so without the persist the relation's pipeline runs once
-  * per consumer. The returned plan stays lazy, so the caller's action
+  * plan read — a self-join's sides, an aggregate and its join-back, a
+  * range exchange's sampling job and its map stage (MapleJuice's range
+  * path). AQE plans the branches independently (no ReusedExchange
+  * across them), and the RangePartitioner samples its input in a job
+  * of its own, so without the persist the relation's pipeline runs
+  * once per consumer. The returned plan stays lazy, so the caller's action
   * runs everything once and plan guards still see the
   * InMemoryTableScan. Outside a [[scope]] the entry lives until the
   * session's `clearCache()` (the harnesses clear between queries);

@@ -78,7 +78,10 @@ object LogSearch {
 
   /** Line-number-free grep for files too large to read whole: a plain
     * splittable text scan + rlike filter — one stage, no shuffle, any
-    * scale. `source` is the originating file.
+    * scale. `source` is the originating file. The newline-aligned block
+    * splitting the reference hand-rolls (`mp3/src/sdfs.go:94-106`) is
+    * what Hadoop text input splits do natively: records never span
+    * splits, and splits parallelize one file.
     */
   def grepLines(spark: SparkSession, glob: String, pattern: String): DataFrame =
     spark.read.textFile(glob)

@@ -1,18 +1,10 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** Text and CSV sources with the reference's exact read semantics. */
+/** CSV and JSON-lines sources with the reference's exact read semantics. */
 object Sources {
-
-  /** Line-oriented text scan (SURVEY §2.1 S1/S6): the newline-aligned
-    * block splitting the reference hand-rolls (`mp3/src/sdfs.go:94-106`)
-    * is what Hadoop text input splits do natively — records never span
-    * splits, splits parallelize one file.
-    */
-  def textLines(spark: SparkSession, path: String): Dataset[String] =
-    spark.read.textFile(path)
 
   /** Per-line CSV parse (SURVEY §2.1 S4): the reference parses each
     * LINE as a CSV record (`mp3/src/mj_wine/wine_maple.go:9-13`), so a

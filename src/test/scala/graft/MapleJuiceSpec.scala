@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.LongAccumulator
 
 import graft.mapreduce._
 
@@ -190,6 +192,42 @@ class MapleJuiceSpec extends SparkSpecBase {
       assert(got.map(_._1).distinct.length == got.length, "one Juice call per key")
       assert(got.map { case (k, vs) => k -> vs.split('|').toSeq }.toMap == rawGroups)
     }
+
+    test(s"$strategy x $n maples each input line exactly once") {
+      val calls = spark.sparkContext.longAccumulator
+      MapleJuiceJob
+        .run(mixedLines, new MapleJuiceSpec.CountingMaple(calls),
+          MapleJuiceSpec.RecordingJuice, n, strategy)
+        .collect()
+      assert(calls.sum == 3000, s"${calls.sum} Maple calls over 3000 lines")
+    }
+  }
+
+  test("the range path's shared Maple output is one CacheManager entry " +
+    "until clearCache()") {
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    val sc = spark.sparkContext
+    def cachedRdds = sc.getPersistentRDDs.values.filterNot(_.isCheckpointed).toSeq
+    spark.catalog.clearCache()
+    MapleJuiceJob
+      .run(mixedLines, MapleJuiceSpec.PairMaple, MapleJuiceSpec.RecordingJuice, 3, HashPartition)
+      .collect()
+    assert(cacheManager.isEmpty, "the hash path shares nothing")
+    val before = cachedRdds.map(_.id).toSet
+    def added = cachedRdds.filterNot(r => before(r.id))
+    val range = MapleJuiceJob
+      .run(mixedLines, MapleJuiceSpec.PairMaple, MapleJuiceSpec.RecordingJuice, 3, RangePartition)
+    range.collect()
+    val shared = range.queryExecution.withCachedData.collect {
+      case r: InMemoryRelation => r.cacheBuilder
+    }.distinct
+    assert(shared.size == 1, s"${shared.size} cached relations in the range plan")
+    assert(!cacheManager.isEmpty)
+    assert(added.size == 1, added.mkString(", "))
+    spark.catalog.clearCache()
+    assert(cacheManager.isEmpty)
+    assert(added.isEmpty, added.mkString(", "))
   }
 
   test("a Juice that reads one value per run still emits one row per key") {
@@ -221,6 +259,14 @@ object MapleJuiceSpec {
         val i = t.indexOf('=')
         (t.substring(0, i), t.substring(i + 1))
       }
+  }
+
+  /** [[PairMaple]] that adds one to `calls` per input line. */
+  final class CountingMaple(calls: LongAccumulator) extends Maple {
+    def maple(line: String): IterableOnce[(String, String)] = {
+      calls.add(1)
+      PairMaple.maple(line)
+    }
   }
 
   /** Every value the key received, sorted and `|`-joined. */
