@@ -16,24 +16,6 @@ object Generators {
     */
   def repeatedSentence(sentence: String, n: Int): String = sentence * n
 
-  /** Closed-form wordcount of `repeatedSentence(sentence, n)`:
-    * the first word stands alone only in copy 1, the last word only in
-    * copy n, interior words appear n times, and the merged
-    * `last+first` token appears n−1 times.
-    */
-  def repeatedSentenceCounts(sentence: String, n: Long): Map[String, Long] = {
-    val ws = sentence.trim.split("\\s+").toSeq
-    require(ws.size >= 2 && n >= 1)
-    val (first, last) = (ws.head, ws.last)
-    val merged = last + first
-    val base = scala.collection.mutable.Map.empty[String, Long]
-    def add(w: String, c: Long): Unit = base(w) = base.getOrElse(w, 0L) + c
-    ws.tail.init.foreach(add(_, n)) // interior words: every copy
-    add(first, 1); add(last, 1)
-    if (n > 1) add(merged, n - 1)
-    base.toMap
-  }
-
   /** Ranked Condorcet ballots, one CSV line per ballot, deterministic
     * per row id (seed ⊕ id) so the output is identical under any
     * partitioning — distributed, O(rows/partitions) per task.

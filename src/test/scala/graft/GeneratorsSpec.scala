@@ -14,6 +14,24 @@ class GeneratorsSpec extends SparkSpecBase {
   private val sentence =
     "This is a test file to test word count and see how many words it can count"
 
+  /** Closed-form wordcount of `Generators.repeatedSentence(sentence, n)`:
+    * the first word stands alone only in copy 1, the last word only in
+    * copy n, interior words appear n times, and the merged
+    * `last+first` token appears n−1 times.
+    */
+  private def repeatedSentenceCounts(sentence: String, n: Long): Map[String, Long] = {
+    val ws = sentence.trim.split("\\s+").toSeq
+    require(ws.size >= 2 && n >= 1)
+    val (first, last) = (ws.head, ws.last)
+    val merged = last + first
+    val base = scala.collection.mutable.Map.empty[String, Long]
+    def add(w: String, c: Long): Unit = base(w) = base.getOrElse(w, 0L) + c
+    ws.tail.init.foreach(add(_, n)) // interior words: every copy
+    add(first, 1); add(last, 1)
+    if (n > 1) add(merged, n - 1)
+    base.toMap
+  }
+
   test("engine wordcount over the blowup input matches the closed form") {
     val s = spark
     import s.implicits._
@@ -22,7 +40,7 @@ class GeneratorsSpec extends SparkSpecBase {
     val got = MapleJuiceJob
       .run(lines, Workloads.WordCountMaple, Workloads.WordCountJuice, 4)
       .collect().map { case (k, v) => k -> v.toLong }.toMap
-    assert(got == Generators.repeatedSentenceCounts(sentence, n))
+    assert(got == repeatedSentenceCounts(sentence, n))
   }
 
   test("closed form reproduces the reference golden output at n = 2*2^20") {
@@ -39,7 +57,7 @@ class GeneratorsSpec extends SparkSpecBase {
         w -> c.toLong
       }.toMap
     val n = 2L * (1L << 20)
-    assert(Generators.repeatedSentenceCounts(sentence, n) == expected)
+    assert(repeatedSentenceCounts(sentence, n) == expected)
   }
 
   test("ballot generator is deterministic and partitioning-independent") {

@@ -13,6 +13,21 @@ import graft.streaming.StreamingDedup
   */
 object ReferenceForms {
 
+  /** The per-call form of [[graft.mapreduce.Workloads.CondorcetMaple1]]:
+    * a fresh key string and tuple for every candidate pair of the
+    * ballot (CondorcetMaple1Spec asserts the same sequence).
+    */
+  def condorcetMaple1Pairs(line: String): Iterator[(String, String)] = {
+    val ranked = line.split(",").iterator.map(_.trim).filter(_.nonEmpty).toVector
+    for {
+      i <- ranked.indices.iterator
+      j <- (i + 1) until ranked.size
+    } yield {
+      val (a, b) = (ranked(i), ranked(j))
+      if (a < b) (s"($a $b)", "1") else (s"($b $a)", "0")
+    }
+  }
+
   /** The composed-HOF dot, the twin of the native `array_dot`
     * (ArrayDotSpec asserts equality).
     */

@@ -8,10 +8,11 @@ import org.apache.spark.sql.functions._
   * events schema q12 aggregates in batch (its "streaming twin").
   *
   * The reference has no windowed streaming (SURVEY §2.8: only the
-  * membership timeouts); this is the engine's extension surface for
-  * continuous ingestion. State is bounded by the watermark: windows
-  * older than (max event time − delay) are finalized and evicted, so
-  * the operator runs indefinitely at any rate.
+  * membership timeouts); only EventPipelineSpec runs this one, and the
+  * catalog's st rows live in `StreamingQueries`. State is bounded by
+  * the watermark: windows older than (max event time − delay) are
+  * finalized and evicted, so the operator runs indefinitely at any
+  * rate.
   */
 object EventPipeline {
 
