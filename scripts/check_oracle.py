@@ -10,7 +10,6 @@ Dev tool only — the engine itself never depends on DuckDB.
 Usage: python3 scripts/check_oracle.py <sfDir> <outDir>
 """
 import json
-import math
 import sys
 
 import duckdb
@@ -33,67 +32,78 @@ def canon(cols, rows):
     return [cols[i] for i in order], sorted(out)
 
 
-def main(sf_dir, out_dir):
+def connect(sf_dir):
+    """A DuckDB connection with one view per sf table."""
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def compare(con, out_dir, name, sql):
+    """Replays oracle `sql` against the engine output `out_dir/name` on
+    `con`. Returns (True, "(N rows)") on a match, else (False, reason).
+    """
+    try:
+        spark_sql = f"SELECT * FROM '{out_dir}/{name}/*.parquet'"
+        # Type-strict like the grading harness's dtype-sensitive hash: DuckDB
+        # sum() over ints returns HUGEINT while Spark emits BIGINT —
+        # repr() erases the width. DB-API `description` type codes
+        # collapse every integer width to 'NUMBER' (and execute()
+        # returns the shared connection cursor), so real column
+        # types must come from DESCRIBE.
+        def types_of(query_sql):
+            return {r[0]: r[1] for r in
+                    con.execute(f"DESCRIBE {query_sql}").fetchall()}
+        gtypes = types_of(spark_sql)
+        etypes = types_of(sql)
+        got = con.execute(spark_sql)
+        gcols = [d[0] for d in got.description]
+        grows = got.fetchall()
+        exp = con.execute(sql)
+        ecols = [d[0] for d in exp.description]
+        erows = exp.fetchall()
+    except Exception as e:  # noqa: BLE001
+        return False, str(e)
+    gc, gr = canon(gcols, grows)
+    ec, er = canon(ecols, erows)
+    type_mismatch = gc == ec and any(
+        gtypes[c] != etypes[c] for c in gc)
+    list_cols = [c for c in ecols
+                 if "[]" in str(etypes.get(c, "")).lower()
+                 or "list" in str(etypes.get(c, "")).lower()]
+    if gc != ec:
+        return False, f"columns {gc} != {ec}"
+    if list_cols:
+        # The harness's pandas sort/hash cannot factorize arrays.
+        return False, (f"list-typed columns {list_cols} break "
+                       "the driver harness — emit scalars")
+    if type_mismatch:
+        bad = {c: (gtypes[c], etypes[c]) for c in gc
+               if gtypes[c] != etypes[c]}
+        return False, (f"dtype mismatch spark-vs-oracle {bad} "
+                       "(CAST the oracle, e.g. HUGEINT sums -> BIGINT)")
+    if gr != er:
+        diffs = [(a, b) for a, b in zip(gr, er) if a != b]
+        return False, (
+            f"{len(gr)} vs {len(er)} rows; first diffs: {diffs[:3]}"
+            + (f" extra_got={gr[len(er):][:2]}" if len(gr) > len(er)
+               else f" extra_exp={er[len(gr):][:2]}" if len(er) > len(gr) else ""))
+    return True, f"({len(gr)} rows)"
+
+
+def main(sf_dir, out_dir):
+    con = connect(sf_dir)
     oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_ok = n_bad = 0
     for name, sql in sorted(oracles.items()):
-        try:
-            spark_sql = f"SELECT * FROM '{out_dir}/{name}/*.parquet'"
-            # Type-strict like the driver's dtype-sensitive hash: DuckDB
-            # sum() over ints returns HUGEINT while Spark emits BIGINT —
-            # repr() erases the width. DB-API `description` type codes
-            # collapse every integer width to 'NUMBER' (and execute()
-            # returns the shared connection cursor), so real column
-            # types must come from DESCRIBE.
-            def types_of(query_sql):
-                return {r[0]: r[1] for r in
-                        con.execute(f"DESCRIBE {query_sql}").fetchall()}
-            gtypes = types_of(spark_sql)
-            etypes = types_of(sql)
-            got = con.execute(spark_sql)
-            gcols = [d[0] for d in got.description]
-            grows = got.fetchall()
-            exp = con.execute(sql)
-            ecols = [d[0] for d in exp.description]
-            erows = exp.fetchall()
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL {name}: {e}")
-            n_bad += 1
-            continue
-        gc, gr = canon(gcols, grows)
-        ec, er = canon(ecols, erows)
-        type_mismatch = gc == ec and any(
-            gtypes[c] != etypes[c] for c in gc)
-        list_cols = [c for c in ecols
-                     if "[]" in str(etypes.get(c, "")).lower()
-                     or "list" in str(etypes.get(c, "")).lower()]
-        if gc != ec:
-            print(f"FAIL {name}: columns {gc} != {ec}")
-            n_bad += 1
-        elif list_cols:
-            # The driver's pandas sort/hash cannot factorize arrays.
-            print(f"FAIL {name}: list-typed columns {list_cols} break "
-                  "the driver harness — emit scalars")
-            n_bad += 1
-        elif type_mismatch:
-            bad = {c: (gtypes[c], etypes[c]) for c in gc
-                   if gtypes[c] != etypes[c]}
-            print(f"FAIL {name}: dtype mismatch spark-vs-oracle {bad} "
-                  "(CAST the oracle, e.g. HUGEINT sums -> BIGINT)")
-            n_bad += 1
-        elif gr != er:
-            diffs = [(a, b) for a, b in zip(gr, er) if a != b]
-            print(f"FAIL {name}: {len(gr)} vs {len(er)} rows; "
-                  f"first diffs: {diffs[:3]}"
-                  + (f" extra_got={gr[len(er):][:2]}" if len(gr) > len(er)
-                     else f" extra_exp={er[len(gr):][:2]}" if len(er) > len(gr) else ""))
-            n_bad += 1
-        else:
-            print(f"OK   {name} ({len(gr)} rows)")
+        ok, detail = compare(con, out_dir, name, sql)
+        if ok:
+            print(f"OK   {name} {detail}")
             n_ok += 1
+        else:
+            print(f"FAIL {name}: {detail}")
+            n_bad += 1
     print(f"== {n_ok} ok, {n_bad} failed ==")
     return 1 if n_bad else 0
 

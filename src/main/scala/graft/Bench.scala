@@ -238,7 +238,7 @@ object Bench {
     val contended = sentinelMedian > SentinelBaselineSec * ContentionFactor
     // SECOND-SCALE SMOKE: one timed pass of the 10 most expensive
     // medians against the sf1 (10x) dataset when it exists on disk
-    // (scripts/gen_sf1.py materializes it under target/), making
+    // (scripts/scale.py derives it under target/testdata/), making
     // decade wall ratios a per-round artifact instead of a hand-run
     // event — the round-13 scale audit (m9 at 34x, a10 at 15x) came
     // from a one-off script a judge could not re-read. Single pass,
@@ -378,21 +378,12 @@ object Bench {
     // run is stamped with its series (SPARK_GRAFT_BENCH_SERIES;
     // default "driver" — the round driver sets nothing, sessions set
     // "session") and reads its previous total from the per-series
-    // sidecar BENCH_LAST_<series>.json, falling back to a generic
-    // BENCH_LAST.json only when that file's own stamp matches (or
-    // predates stamping, for the one migration round).
+    // sidecar BENCH_LAST_<series>.json.
     val prevQueries: Map[String, Double] = try {
-      val om = new com.fasterxml.jackson.databind.ObjectMapper()
-      def load(path: String): Option[com.fasterxml.jackson.databind.JsonNode] = {
-        val f = new java.io.File(path)
-        if (f.exists()) Some(om.readTree(f)) else None
-      }
-      val node = load(s"BENCH_LAST_$benchSeries.json").orElse {
-        load("BENCH_LAST.json").filter { n =>
-          val s = n.path("series")
-          s.isMissingNode || s.asText() == benchSeries
-        }
-      }
+      val f = new java.io.File(s"BENCH_LAST_$benchSeries.json")
+      val node =
+        if (f.exists()) Some(new com.fasterxml.jackson.databind.ObjectMapper().readTree(f))
+        else None
       node match {
         case None => Map.empty[String, Double]
         case Some(n) =>

@@ -239,37 +239,11 @@ object Dedup {
     // checkpoints the report-sized result and frees evalSh.
     val evalSh = Lineage.shared(shingles(eval, idCol, textCol, n)
       .select(col("shingle"), col("doc").as("eval_doc")))
-    bloomReport(train, evalSh, idCol, textCol, n, fpp)
-  }
-
-  /** The d11 report WITHOUT the eager-checkpoint/persist wrapping the
-    * public method ships — package-private so PlanSpec can assert the
-    * physical shape of the join the checkpoint otherwise hides behind
-    * a `Scan ExistingRDD` (shuffled hash verify join, native bloom
-    * probe on the train scan). Not for production callers: the eval
-    * shingle relation here re-executes once per downstream job.
-    */
-  private[graft] def contaminationReportBloomPlan(
-      train: DataFrame, eval: DataFrame, idCol: String, textCol: String,
-      n: Int = 8, fpp: Double = 0.01): DataFrame = {
-    val evalSh = shingles(eval, idCol, textCol, n)
-      .select(col("shingle"), col("doc").as("eval_doc"))
-    bloomReport(train, evalSh, idCol, textCol, n, fpp)
-  }
-
-  /** Shared d11 core over an already-built (shingle, eval_doc)
-    * relation: size + build the bloom (two eager jobs against evalSh —
-    * the public caller persists it for exactly that reason), probe it
-    * natively on the train shingle scan, exact-verify with a shuffled
-    * hash join, aggregate to the per-doc report. The bloom probe is
-    * the codegen'd BloomMightContain: the serialized filter rides the
-    * plan as a binary literal — task binaries are broadcast, so
-    * executors get it once — and is deserialized once driver-side into
-    * the codegen references. No Scala UDF in the train-side scan.
-    */
-  private def bloomReport(train: DataFrame, evalSh: DataFrame,
-                          idCol: String, textCol: String,
-                          n: Int, fpp: Double): DataFrame = {
+    // The bloom probe is the codegen'd BloomMightContain: the
+    // serialized filter rides the plan as a binary literal — task
+    // binaries are broadcast, so executors get it once — and is
+    // deserialized once driver-side into the codegen references. No
+    // Scala UDF in the train-side scan.
     val expected = math.max(
       (evalSh.agg(approx_count_distinct(col("shingle")))
         .head.getLong(0) * 1.1).toLong, 1L)
@@ -285,21 +259,6 @@ object Dedup {
       .groupBy(col("doc"))
       .agg(count(lit(1)).as("n_shared_shingles"),
         count_distinct(col("eval_doc")).as("n_eval_docs"))
-  }
-
-  /** The consuming form: training rows with every contaminated doc
-    * dropped. NOT the report minus its counts: dropping needs only the
-    * distinct contaminated ids, so this is a broadcast SEMI join (each
-    * train shingle row emitted at most once — no per-eval-doc row
-    * multiplication, no count_distinct Expand) plus the anti-join.
-    */
-  def decontaminate(train: DataFrame, eval: DataFrame,
-                    idCol: String, textCol: String, n: Int = 8): DataFrame = {
-    val contaminated = shingles(train, idCol, textCol, n)
-      .join(broadcast(shingles(eval, idCol, textCol, n).select(col("shingle"))),
-        Seq("shingle"), "left_semi")
-      .select(col("doc")).distinct()
-    train.join(contaminated, col(idCol) === col("doc"), "left_anti")
   }
 
   /** Word n-gram shingle set per document: (id, shingle) rows, distinct.
@@ -827,11 +786,6 @@ object Dedup {
       .distinct()
       .filter(col("hamming") <= maxHamming)
   }
-
-  /** SimHash near-dup pairs from raw text, xxhash64 token hash. */
-  def simhashPairs(df: DataFrame, idCol: String, textCol: String,
-                   maxHamming: Int = 3): DataFrame =
-    simhashBlockPairs(simhashFingerprints(df, idCol, textCol), maxHamming)
 
   /** SimHash near-dup pairs from raw text with the portable md5-derived
     * token hash — the d4 correctness row's form: DuckDB recomputes the

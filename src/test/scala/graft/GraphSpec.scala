@@ -131,37 +131,11 @@ class GraphSpec extends SparkSpecBase {
     val s = spark
     import s.implicits._
     val edges = Seq((1L, 2L), (3L, 4L), (1L, 4L), (2L, 5L))
-    val actions = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit = { actions.incrementAndGet(); () }
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    }
     // per-round action count measured as a DIFFERENCE of two runs, so
-    // the (constant) setup actions cancel and listener-delivery lag
-    // settles per run before reading the counter
-    def actionsFor(iters: Int): Int = {
-      s.listenerManager.register(listener)
-      try {
-        actions.set(0)
-        Graph.pageRankConserving(edges.toDF("src", "dst"), iters).count()
-        // the listener bus is async: poll until the counter has been
-        // stable for several consecutive reads (a fixed sleep let late
-        // deliveries bleed between the a2/a5 runs under CI load)
-        var last = -1
-        var stable = 0
-        var waited = 0
-        while (stable < 5 && waited < 10000) {
-          Thread.sleep(100); waited += 100
-          val now = actions.get()
-          if (now == last) stable += 1 else { stable = 0; last = now }
-        }
-        actions.get()
-      } finally s.listenerManager.unregister(listener)
-    }
+    // the (constant) setup actions cancel
+    def actionsFor(iters: Int): Int =
+      executionsDuring(Graph.pageRankConserving(edges.toDF("src", "dst"), iters).count())
+        .plans.size
     val a2 = actionsFor(2)
     val a5 = actionsFor(5)
     assert(a5 - a2 == 3 * 2,

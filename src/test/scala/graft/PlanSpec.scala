@@ -1,12 +1,9 @@
 package graft
 
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
-
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.mapreduce.{MapleJuiceJob, RangePartition, Workloads}
 import graft.operators.SequencePack
@@ -36,23 +33,9 @@ class PlanSpec extends SparkSpecBase {
   /** Runs `df` with a noop write, as Bench times a row, and returns AQE's
     * FINAL plan with the Spark jobs the write launched. */
   private def finalRun(df: DataFrame): (String, Seq[String]) = {
-    val written = new LinkedBlockingQueue[SparkPlan]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        written.add(qe.executedPlan)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      val jobs = jobsDuring(df.write.format("noop").mode("overwrite").save())
-      // an earlier action's end event can still be queued when the
-      // listener registers; the write's is the last one, delivered
-      // before jobsDuring's sentinel job on the same listener queue
-      val p = Iterator.continually(written.poll()).takeWhile(_ != null).toSeq
-        .lastOption.getOrElse(written.poll(60, TimeUnit.SECONDS))
-      assert(p != null, "the noop write reported no query execution")
-      (adaptiveFinal(p), jobs)
-    } finally spark.listenerManager.unregister(listener)
+    val ran = executionsDuring(df.write.format("noop").mode("overwrite").save())
+    assert(ran.plans.nonEmpty, "the noop write reported no query execution")
+    (adaptiveFinal(ran.plans.last), ran.jobs)
   }
 
   /** The small-sort gate: AQE's minimum coalesced partition size. */
@@ -203,16 +186,17 @@ class PlanSpec extends SparkSpecBase {
     // the point of the bloom path is that the eval side does NOT have
     // to fit a broadcast hash relation — the exact-verify join must
     // shuffle (ShuffledHashJoin via the hint), and the bloom probe
-    // must sit on the train scan side as a plain Filter. The shipped
-    // query eagerly localCheckpoints the report (so its executedPlan
-    // is just the checkpoint scan); assert on the package-private
-    // pre-checkpoint shape that the public method executes.
+    // must sit on the train scan side as a plain Filter. The method
+    // eagerly checkpoints the report (so its returned plan is just the
+    // checkpoint scan); read the plan its checkpoint action executes.
     val d = spark.read.parquet(s"${sf("sf0.01")}/documents.parquet")
     val split = d.agg(max(col("doc_id"))).head.getLong(0) - 49L
-    val p = graft.operators.Dedup.contaminationReportBloomPlan(
+    val probed = executionsDuring(graft.operators.Dedup.contaminationReportBloom(
         d.filter(col("doc_id") < split), d.filter(col("doc_id") >= split),
-        "doc_id", "text", n = 8)
-      .queryExecution.executedPlan.toString
+        "doc_id", "text", n = 8))
+      .plans.map(_.toString).find(_.contains("bloom_might_contain"))
+    assert(probed.isDefined, "d11's train scan must carry the native bloom probe filter")
+    val p = probed.get
     assert(p.contains("ShuffledHashJoin"),
       s"d11 verify join must be the shuffled hash join:\n$p")
     assert(!p.contains("BroadcastHashJoin"),
@@ -221,8 +205,6 @@ class PlanSpec extends SparkSpecBase {
     // Scala UDF forcing String materialization in the train-side scan
     assert(!p.toLowerCase.contains("scalaudf") && !p.contains("UDF("),
       s"d11's bloom probe must be the native bloom_might_contain:\n$p")
-    assert(p.contains("bloom_might_contain"),
-      s"d11's train scan must carry the native bloom probe filter:\n$p")
   }
 
   test("a1c: nearest asof runs both direction passes on ONE user shuffle, no join") {
@@ -519,18 +501,8 @@ class PlanSpec extends SparkSpecBase {
     // single pass checkpoints its corner counts, so the wedge join runs
     // in that checkpoint action while the row is built: read the plans
     // the build executes, not the returned plan
-    val executed = new LinkedBlockingQueue[String]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        executed.add(qe.executedPlan.toString)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    val seen = try {
-      SparkEntry.queries("g2_triangles")(spark, sf("sf0.01"))
-      Iterator.continually(executed.poll(60, TimeUnit.SECONDS))
-        .takeWhile(_ != null).find(_.contains("bloom_might_contain"))
-    } finally spark.listenerManager.unregister(listener)
+    val seen = executionsDuring(SparkEntry.queries("g2_triangles")(spark, sf("sf0.01")))
+      .plans.find(_.toString.contains("bloom_might_contain"))
     assert(seen.isDefined, "g2's close-join bloom prefilter is gone")
   }
 

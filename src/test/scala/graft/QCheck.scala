@@ -6,8 +6,9 @@ import org.apache.spark.sql.SparkSession
 
 import graft.Measure.{f3, jsonString => q}
 
-// quick dev check: dump an arbitrary subset of catalog queries + their
-// oracles for scripts/check_oracle.py, at an arbitrary sfDir.
+// dump and time an arbitrary subset of catalog queries + their oracles
+// for scripts/check_oracle.py, at an arbitrary sfDir; scripts/scale.py
+// runs it on every scale of a sweep.
 // usage: Test/runMain graft.QCheck <sfDir> <outDir> <name1,name2,...>
 object QCheck {
   def main(args: Array[String]): Unit = {
@@ -27,7 +28,7 @@ object QCheck {
     // Per-query walls, split BUILD vs SERVE: the dump pass lands any
     // one-time index/materialization build (IndexCache at a fresh data
     // fingerprint) plus cold footers; the second, noop-write pass is
-    // the serving path. sf1_validate.py merges walls.json into the
+    // the serving path. scripts/scale.py merges walls.json into the
     // artifact so decade ratios can use the serve wall — the round-14
     // sweep reported s9's cold PQ build as a 19.2x "serving" ratio.
     // GRAFT_QCHECK_MODE=walls: the build pass is a cache-cleared noop
@@ -95,7 +96,7 @@ object QCheck {
     writeWalls()
     Verify.writeOracleSql(outDir, names.toSet)
     // provenance binding: carry the dataset fingerprint the outputs
-    // were computed against, so sf1_validate.py can refuse a
+    // were computed against, so scripts/scale.py can refuse a
     // mixed-generation compare (the round-13 staleness trap)
     val manifest = Paths.get(s"$sfDir/MANIFEST.json")
     if (Files.exists(manifest))

@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.{CorpusMix, Similarity}
 import graft.streaming.StreamingDedup
@@ -101,4 +102,19 @@ object ReferenceForms {
     df.withColumn("cap_rank", row_number().over(w).cast("long"))
       .filter(col("cap_rank") <= k)
   }
+
+  /** The reference's per-line CSV parse (SURVEY §2.1 S4): it parses
+    * each LINE as a CSV record (`mp3/src/mj_wine/wine_maple.go:9-13`),
+    * so a quoted field containing a newline breaks the parse and the
+    * row is silently dropped. Spark's multiLine=false + DROPMALFORMED
+    * reproduces exactly that (WineParitySpec, SourcesSpec).
+    */
+  def csvPerLine(spark: SparkSession, path: String, schema: StructType,
+                 header: Boolean = true): DataFrame =
+    spark.read
+      .option("header", header.toString)
+      .option("multiLine", "false")
+      .option("mode", "DROPMALFORMED")
+      .schema(schema)
+      .csv(path)
 }

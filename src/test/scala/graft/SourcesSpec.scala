@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.types._
 
-import graft.sources.{LogSearch, Sources}
+import graft.sources.LogSearch
 
 class SourcesSpec extends SparkSpecBase {
 
@@ -62,57 +62,17 @@ class SourcesSpec extends SparkSpecBase {
     assert(got.map(_.line).toSeq == Seq("line 8", "line 9", "line 10"))
   }
 
-  test("jsonLines parses good rows and quarantines malformed ones") {
-    val s = spark
-    import s.implicits._
-    val path = writeTemp("docs.jsonl",
-      """{"id": 1, "text": "hello world"}
-        |{"id": 2, "text": "second doc"}
-        |{not valid json at all
-        |{"id": 3, "text": null}
-        |""".stripMargin)
-    val schema = StructType(Seq(
-      StructField("id", LongType), StructField("text", StringType)))
-    val df = Sources.jsonLines(s, path, schema)
-    val good = df.filter($"_corrupt_json".isNull)
-      .select($"id", $"text").as[(Long, Option[String])].collect().toSet
-    assert(good == Set((1L, Some("hello world")), (2L, Some("second doc")),
-      (3L, None)))
-    // Spark disallows queries whose referenced columns are ONLY the
-    // corrupt-record column — keep a data column in the projection
-    val bad = df.filter($"_corrupt_json".isNotNull)
-      .select($"id", $"_corrupt_json").collect()
-    assert(bad.length == 1 && bad.head.isNullAt(0))
-  }
-
   test("csvPerLine drops rows whose quoted fields span lines (reference parity)") {
     val schema = StructType(Seq(
       StructField("id", StringType), StructField("note", StringType),
       StructField("tag", StringType)))
     val csv = writeTemp("wine.csv",
       "id,note,tag\n1,plain row,x\n2,\"spans\nlines\",y\n3,fine,z")
-    val rows = Sources.csvPerLine(spark, csv, schema).collect()
+    val rows = ReferenceForms.csvPerLine(spark, csv, schema).collect()
     // the reference's per-line parser loses the multi-line row (and the
     // orphaned continuation line fails the schema): rows 1 and 3 survive
     val ids = rows.map(_.getString(0)).filter(_ != null).toSet
     assert(ids.contains("1") && ids.contains("3"))
     assert(!ids.contains("2"))
-  }
-
-  test("csvMultiLine recovers the embedded-newline row csvPerLine drops") {
-    val schema = StructType(Seq(
-      StructField("id", StringType), StructField("note", StringType),
-      StructField("tag", StringType)))
-    val csv = writeTemp("multi.csv",
-      "id,note,tag\n1,plain row,x\n2,\"spans\nlines\",y\n3,fine,z")
-    val fixed = Sources.csvMultiLine(spark, csv, schema).collect()
-    // real-CSV mode parses all 3 logical rows, newline preserved in the field
-    assert(fixed.length == 3)
-    val row2 = fixed.find(_.getString(0) == "2").get
-    assert(row2.getString(1) == "spans\nlines")
-    // the parity per-line mode never reassembles the logical record:
-    // no row carries the quoted field the multiLine parse recovered
-    val perLine = Sources.csvPerLine(spark, csv, schema).collect()
-    assert(!perLine.exists(r => r.getString(1) == "spans\nlines"))
   }
 }

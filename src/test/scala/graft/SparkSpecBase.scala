@@ -1,9 +1,13 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -25,42 +29,64 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
-  /** Jobs this thread submits while `body` runs. Every job posted before
-    * the closing sentinel job has reached the listener once the
-    * sentinel's own start has.
+  /** What `body` ran: the Spark jobs this thread submitted and the
+    * executed plan of every query execution that succeeded, in order.
+    * Both listeners sit on the listener bus's shared queue, which
+    * delivers events in posting order: once the closing sentinel job's
+    * start has reached the job listener, every event `body` posted has
+    * been delivered. The opening sentinel fences off end events an
+    * earlier action left queued.
     */
-  def jobsDuring(body: => Unit): Seq[String] = {
+  def executionsDuring[T](body: => T): SparkSpecBase.Executions = {
     val sc = spark.sparkContext
     val group = s"graft-spec-${System.nanoTime}"
-    val sentinel = "graft-spec-sentinel"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val done = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
+    val (opening, closing) = ("graft-spec-opening", "graft-spec-sentinel")
+    val jobs = new ConcurrentLinkedQueue[String]()
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    @volatile var open = false
+    val done = new CountDownLatch(1)
+    val jobListener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
         val props = Option(j.properties)
-        if (props.exists(_.getProperty("spark.jobGroup.id") == group)) {
-          val desc = props.map(_.getProperty("spark.job.description")).orNull
-          if (desc == sentinel) done.countDown()
-          else seen.add(s"job ${j.jobId} (${j.stageInfos.map(_.name).mkString(", ")})")
-        }
+        if (props.exists(_.getProperty("spark.jobGroup.id") == group))
+          props.map(_.getProperty("spark.job.description")).orNull match {
+            case `opening` => open = true
+            case `closing` => done.countDown()
+            case _ => jobs.add(s"job ${j.jobId} (${j.stageInfos.map(_.name).mkString(", ")})")
+          }
       }
     }
-    sc.addSparkListener(listener)
+    val planListener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (open) plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def sentinel(description: String): Unit = {
+      sc.setJobDescription(description)
+      sc.parallelize(Seq(1), 1).count()
+      sc.setJobDescription(null)
+    }
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(planListener)
     sc.setJobGroup(group, "graft spec")
     try {
+      sentinel(opening)
       body
-      sc.setJobDescription(sentinel)
-      sc.parallelize(Seq(1), 1).count()
-      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      sentinel(closing)
+      assert(done.await(60, TimeUnit.SECONDS))
     } finally {
       sc.clearJobGroup()
-      sc.removeSparkListener(listener)
+      spark.listenerManager.unregister(planListener)
+      sc.removeSparkListener(jobListener)
     }
-    seen.asScala.toSeq
+    SparkSpecBase.Executions(jobs.asScala.toSeq, plans.asScala.toSeq)
   }
 }
 
 object SparkSpecBase {
+  /** [[SparkSpecBase.executionsDuring]]'s record of a body. */
+  final case class Executions(jobs: Seq[String], plans: Seq[SparkPlan])
+
   // one session per JVM: specs share it, sbt forks a single test JVM.
   // Warehouse in tmp so bucketed-table tests never litter the repo.
   lazy val shared: SparkSession = {

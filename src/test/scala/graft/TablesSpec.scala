@@ -115,7 +115,7 @@ class TablesSpec extends SparkSpecBase {
       sqlRows.foreach(r => GraftSql.run(spark, dir, r))
     }
     buildAll() // first reads infer; fixtures materialize once
-    val jobs = jobsDuring(buildAll())
+    val jobs = executionsDuring(buildAll()).jobs
     assert(jobs.isEmpty, s"warm builds launched jobs: ${jobs.mkString("; ")}")
   }
 

@@ -5,8 +5,6 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.sources.Sources
-
 /** The wine-reviews query pinned on a winemag-schema fixture
   * (FIXTURES.md §1; synthetic rows, same 11-column header as the
   * reference's `small.csv`). Guards the reference's two easy-to-"fix"
@@ -45,7 +43,7 @@ class WineParitySpec extends SparkSpecBase {
     val dir = Files.createTempDirectory("graft-wine")
     Files.writeString(dir.resolve("wine.csv"),
       (header +: rows).mkString("\n"))
-    val wine = Sources.csvPerLine(s, dir.resolve("wine.csv").toString, schema)
+    val wine = ReferenceForms.csvPerLine(s, dir.resolve("wine.csv").toString, schema)
 
     val got = wine
       .filter($"variety" === "Chardonnay")
